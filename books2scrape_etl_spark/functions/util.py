@@ -3,8 +3,9 @@
 from __future__ import annotations
 
 import threading
+from collections import OrderedDict
 
-from pyspark.sql import Column, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 # spark.sql.shuffle.partitions is SESSION-global: two guards
@@ -58,6 +59,49 @@ class sized_shuffle_partitions:
                 self.spark.conf.set("spark.sql.shuffle.partitions", self.prev)
         finally:
             _SHUFFLE_GUARD_LOCK.release()
+
+
+# Staging caches, keyed by the analyzed plan's semantic hash and kept
+# in staging order. The cap is the number of distinct frames one pass
+# of the 16 bench.py headline qnames stages, measured at sf0.01: the
+# star dims (join_fact), the MinHash shingle and band tables
+# (dedup_minhash) and the ranked frame (surrogate_key_scale). A warm
+# pass re-stages the same four keys, so it never evicts its own working
+# set, and a full-registry sweep holds at most four staging caches.
+_STAGE_CAP = 4
+_STAGED: OrderedDict[int, DataFrame] = OrderedDict()
+_STAGE_LOCK = threading.Lock()
+
+
+def _release(df: DataFrame) -> None:
+    try:
+        df.unpersist(False)
+    except Exception:
+        # the frame belongs to a stopped session (module state outlives
+        # SparkSessions); its cache died with the session
+        pass
+
+
+def stage(df: DataFrame) -> DataFrame:
+    """Persist ``df`` as a staging cache and return it.
+
+    The one way the package caches an intermediate. An earlier entry
+    with the same plan is released BEFORE the new frame persists: a
+    rebuilt plan would otherwise ride the previous execution's cache
+    (and releasing it afterwards would evict the shared entry, leaving
+    the new frame uncached). Frames of different plans never evict each
+    other until more than ``_STAGE_CAP`` are live; then the
+    least-recently staged one is released. Eviction is value-safe: a
+    released frame recomputes to the same rows."""
+    key = df.semanticHash()
+    with _STAGE_LOCK:
+        prev = _STAGED.pop(key, None)
+        if prev is not None:
+            _release(prev)
+        _STAGED[key] = df.persist()
+        while len(_STAGED) > _STAGE_CAP:
+            _release(_STAGED.popitem(last=False)[1])
+    return df
 
 
 def to_col(col: Column | str) -> Column:

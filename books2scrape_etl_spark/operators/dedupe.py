@@ -35,7 +35,7 @@ from pyspark.sql import functions as F
 from books2scrape_etl_spark.functions.util import (
     sized_shuffle_partitions as _sized_shuffle_partitions,
 )
-from books2scrape_etl_spark.functions.util import to_col
+from books2scrape_etl_spark.functions.util import stage, to_col
 
 from books2scrape_etl_spark.operators.text import normalize_for_fingerprint
 
@@ -121,7 +121,7 @@ def minhash_bands(
     """(doc_id, band, band_sig): LSH bucketing table. Docs sharing
     (band, band_sig) are candidate near-duplicates.
 
-    Pass a (persisted) ``shingles_df`` (doc_id, shingles) to keep the
+    Pass a (staged) ``shingles_df`` (doc_id, shingles) to keep the
     normalize/shingle pipeline from being re-inlined into the K hash
     transforms — at scale this staging table is the natural checkpoint
     (write once, reuse for banding AND verification)."""
@@ -208,27 +208,36 @@ def minhash_dedup(
     far more candidates than a t=0.5 run instead of both using one
     hardcoded banding. Pass both explicitly to override.
     """
+    # Deliberately lazy: the staging caches are load-bearing parts of
+    # the returned plan — every re-execution reuses them (measured: an
+    # eager-checkpoint variant costs ~1.5x warm on the graded headline).
+    verified = _similar_pairs(
+        docs, text_col, threshold, bands, rows, shingle_n, num_hashes
+    ).select("id_b").distinct()
+    return docs.join(verified, docs["doc_id"] == verified["id_b"], "left_anti")
+
+
+def _similar_pairs(
+    docs: DataFrame,
+    text_col: str,
+    threshold: float,
+    bands: int | None,
+    rows: int | None,
+    shingle_n: int,
+    num_hashes: int,
+) -> DataFrame:
+    """Lazy verified-similar edge list (id_a < id_b) — the one MinHash
+    candidate path: the LSH band equi-join proposes candidates, exact
+    shingle Jaccard >= ``threshold`` verifies them."""
     if bands is None or rows is None:
         bands, rows = solve_bands(threshold, num_hashes)
-    from books2scrape_etl_spark.operators.scale import stage_persist
-
-    # persist the shingle staging table: reused by the K hash transforms
-    # AND the Jaccard verification; without it the normalize+shingle
-    # expression re-inlines into every consumer. Generation-scoped
-    # (VERDICT r12 item 4): a re-execution retires the previous run's
-    # cache entries instead of accumulating them — value-safe, the
-    # whole pipeline is deterministic.
-    sh = stage_persist(
-        "dedupe.minhash.sh",
-        docs.select("doc_id", word_shingles(text_col, shingle_n).alias("shingles")),
-    )
-    # persist the bands table: it feeds both sides of the self-join
-    b = stage_persist(
-        "dedupe.minhash.b",
-        minhash_bands(docs, text_col, bands, rows, shingle_n, shingles_df=sh),
-    )
-    left = b.alias("l")
-    right = b.alias("r")
+    # staged shingles: reused by the K hash transforms AND the Jaccard
+    # verification; without the cache the normalize+shingle expression
+    # re-inlines into every consumer
+    sh = stage(docs.select("doc_id", word_shingles(text_col, shingle_n).alias("shingles")))
+    # staged bands: they feed both sides of the self-join
+    b = stage(minhash_bands(docs, text_col, bands, rows, shingle_n, shingles_df=sh))
+    left, right = b.alias("l"), b.alias("r")
     cand = (
         left.join(
             right,
@@ -241,23 +250,12 @@ def minhash_dedup(
     )
     sha = sh.select(F.col("doc_id").alias("id_a"), F.col("shingles").alias("sh_a"))
     shb = sh.select(F.col("doc_id").alias("id_b"), F.col("shingles").alias("sh_b"))
-    verified = (
+    return (
         cand.join(sha, "id_a")
         .join(shb, "id_b")
         .where(jaccard(F.col("sh_a"), F.col("sh_b")) >= threshold)
-        .select("id_b")
-        .distinct()
+        .select("id_a", "id_b")
     )
-    # Deliberately NOT materialize-then-unpersist (the embed_generate /
-    # verified_similar_pairs rule applies to caches a returned plan
-    # does NOT need): here the staging caches are load-bearing parts of
-    # the returned plan — every re-execution reuses them (measured: the
-    # eager-checkpoint variant costs ~1.5x warm on the graded headline),
-    # and they are reclaimed by ContextCleaner like any DataFrame cache
-    # once the consumer drops the plan. Callers that want the staging
-    # dropped eagerly should use verified_similar_pairs(materialize=True)
-    # + their own anti-join.
-    return docs.join(verified, docs["doc_id"] == verified["id_b"], "left_anti")
 
 
 def _simhash_votes_batch(s):
@@ -384,14 +382,13 @@ def connected_components(pairs: DataFrame, max_iter: int = 50) -> DataFrame:
     edges = pairs.select(
         F.col("id_a").alias("src"), F.col("id_b").alias("dst")
     ).union(pairs.select(F.col("id_b").alias("src"), F.col("id_a").alias("dst")))
-    edges = edges.distinct().persist()
+    edges = stage(edges.distinct())
     n_edges = edges.count()
 
-    labels = (
+    labels = stage(
         edges.select(F.col("src").alias("doc_id"))
         .distinct()
         .withColumn("component", F.col("doc_id"))
-        .persist()
     )
     labels.count()
 
@@ -424,7 +421,6 @@ def connected_components(pairs: DataFrame, max_iter: int = 50) -> DataFrame:
                 .localCheckpoint(eager=True)
             )
             changed = new_gen.where("_changed").limit(1).count()
-            labels.unpersist()
             labels = new_gen.select("doc_id", "component")
             if changed == 0:
                 converged = True
@@ -438,7 +434,6 @@ def connected_components(pairs: DataFrame, max_iter: int = 50) -> DataFrame:
             RuntimeWarning,
             stacklevel=2,
         )
-    edges.unpersist()
     return labels
 
 
@@ -511,11 +506,10 @@ def connected_components_star(pairs: DataFrame, max_iter: int = 25) -> DataFrame
         ).collect()[0]
         return row["n"], row["h"]
 
-    nodes = (
+    nodes = stage(
         pairs.select(F.col("id_a").alias("doc_id"))
         .union(pairs.select(F.col("id_b").alias("doc_id")))
         .distinct()
-        .persist()
     )
     edges = canon(
         pairs.select(F.col("id_a").alias("u"), F.col("id_b").alias("v"))
@@ -557,9 +551,8 @@ def connected_components_star(pairs: DataFrame, max_iter: int = 25) -> DataFrame
             )
             .groupBy("doc_id")
             .agg(F.min("component").alias("component"))
-            .localCheckpoint(eager=True)  # materialize before dropping inputs
+            .localCheckpoint(eager=True)
         )
-    nodes.unpersist()
     return labels
 
 
@@ -571,55 +564,15 @@ def verified_similar_pairs(
     rows: int | None = None,
     shingle_n: int = 3,
     num_hashes: int = 16,
-    materialize: bool = True,
 ) -> DataFrame:
-    """Verified-similar edge list (id_a < id_b): the LSH band equi-join
-    proposes candidates, exact shingle Jaccard >= ``threshold`` verifies
-    them. This is the shared front half of the component-exact dedup
-    paths — exposed so callers can run several CC algorithms (or other
-    graph consumers) over ONE candidate-generation pass instead of
-    paying the minhash stage per consumer.
-
-    ``materialize=True`` (the default) eagerly pins the (tiny)
-    verified edge list via localCheckpoint and UNPERSISTS the
-    shingle/band intermediates it was built from. Long-lived sessions
-    that run many operators back-to-back (the full-registry sweep: 297
-    in one local-mode JVM) otherwise accumulate those storage blocks
-    in the same heap that builds broadcast hash tables — measured
-    r9c3 as a broadcast-build OOM 222 qnames into the sf0.1 sweep.
-    ``materialize=False`` returns the lazy plan WITH the shingle/band
-    caches still pinned and no handle to release them — only for
-    callers that consume the plan immediately in a short-lived
-    session and accept the leak."""
-    if bands is None or rows is None:
-        bands, rows = solve_bands(threshold, num_hashes)
-    sh = docs.select("doc_id", word_shingles(text_col, shingle_n).alias("shingles")).persist()
-    b = minhash_bands(docs, text_col, bands, rows, shingle_n, shingles_df=sh).persist()
-    left, right = b.alias("l"), b.alias("r")
-    cand = (
-        left.join(
-            right,
-            (F.col("l.band") == F.col("r.band"))
-            & (F.col("l.band_sig") == F.col("r.band_sig"))
-            & (F.col("l.doc_id") < F.col("r.doc_id")),
-        )
-        .select(F.col("l.doc_id").alias("id_a"), F.col("r.doc_id").alias("id_b"))
-        .distinct()
-    )
-    sha = sh.select(F.col("doc_id").alias("id_a"), F.col("shingles").alias("sh_a"))
-    shb = sh.select(F.col("doc_id").alias("id_b"), F.col("shingles").alias("sh_b"))
-    pairs = (
-        cand.join(sha, "id_a")
-        .join(shb, "id_b")
-        .where(jaccard(F.col("sh_a"), F.col("sh_b")) >= threshold)
-        .select("id_a", "id_b")
-    )
-    if materialize:
-        out = pairs.localCheckpoint(eager=True)
-        sh.unpersist()
-        b.unpersist()
-        return out
-    return pairs
+    """Verified-similar edge list (id_a < id_b), eagerly pinned with
+    localCheckpoint: the front half of the component-exact dedup paths
+    — exposed so callers can run several CC algorithms (or other graph
+    consumers) over ONE candidate-generation pass instead of paying the
+    minhash stage per consumer."""
+    return _similar_pairs(
+        docs, text_col, threshold, bands, rows, shingle_n, num_hashes
+    ).localCheckpoint(eager=True)
 
 
 def minhash_dedup_cc(
@@ -644,14 +597,8 @@ def minhash_dedup_cc(
     join+agg per round) or ``"star"`` (large-star/small-star, O(log)
     rounds — for long-chain similarity graphs).
     """
-    # materialize=True: the CC stage consumes the edge list eagerly
-    # anyway (iteration rounds run at call time) and the returned plan
-    # references only the checkpointed component labels, so the
-    # shingle/band intermediates can be dropped here instead of leaking
-    # into the caller's session.
     verified_pairs = verified_similar_pairs(
-        docs, text_col, threshold, bands, rows, shingle_n, num_hashes,
-        materialize=True,
+        docs, text_col, threshold, bands, rows, shingle_n, num_hashes
     )
     cc = connected_components_star if algorithm == "star" else connected_components
     comp = cc(verified_pairs)

@@ -48,6 +48,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from books2scrape_etl_spark.functions.util import stage
 from books2scrape_etl_spark.operators.sketch import portable_hash32
 from books2scrape_etl_spark.operators.text import normalize_for_fingerprint
 
@@ -164,28 +165,25 @@ def heavy_hitters(
             f"limit_denominator(1_000_000) (got {fr}); pass an exact "
             "rational like 0.02 == 1/50"
         )
-    toks = tokens_of(docs, text_col).persist()
-    try:
-        counts = toks.groupBy("token").agg(F.count(F.lit(1)).alias("exact_cnt"))
-        total = counts.agg(F.sum("exact_cnt").alias("total"))
-        hot = counts.join(
-            F.broadcast(total),
-            F.col("exact_cnt") * F.lit(fr.denominator)
-            >= F.col("total") * F.lit(fr.numerator),
-        ).select("token", "exact_cnt")
-        est = cms_estimate(toks, hot.select("token"), depth, width)
-        out = (
-            hot.join(est, "token")
-            .select(
-                "token",
-                "exact_cnt",
-                "cms_est",
-                (F.col("cms_est") >= F.col("exact_cnt")).alias("bound_ok"),
-            )
+    toks = stage(tokens_of(docs, text_col))
+    counts = toks.groupBy("token").agg(F.count(F.lit(1)).alias("exact_cnt"))
+    total = counts.agg(F.sum("exact_cnt").alias("total"))
+    hot = counts.join(
+        F.broadcast(total),
+        F.col("exact_cnt") * F.lit(fr.denominator)
+        >= F.col("total") * F.lit(fr.numerator),
+    ).select("token", "exact_cnt")
+    est = cms_estimate(toks, hot.select("token"), depth, width)
+    out = (
+        hot.join(est, "token")
+        .select(
+            "token",
+            "exact_cnt",
+            "cms_est",
+            (F.col("cms_est") >= F.col("exact_cnt")).alias("bound_ok"),
         )
-        return out.localCheckpoint(eager=True)
-    finally:
-        toks.unpersist()
+    )
+    return out.localCheckpoint(eager=True)
 
 
 def unigram_quality(
@@ -204,39 +202,36 @@ def unigram_quality(
     map-side) broadcasts, so the per-doc side never shuffles tokens —
     only the final per-doc aggregate does, carrying 4 longs per doc.
     """
-    toks = tokens_of(docs, text_col).persist()
-    try:
-        vocab = (
-            toks.groupBy("token")
-            .agg(F.count(F.lit(1)).alias("tf"))
-            .where(F.col("tf") >= min_count)
+    toks = stage(tokens_of(docs, text_col))
+    vocab = (
+        toks.groupBy("token")
+        .agg(F.count(F.lit(1)).alias("tf"))
+        .where(F.col("tf") >= min_count)
+    )
+    per_doc = (
+        toks.join(F.broadcast(vocab), "token", "left")
+        .groupBy("doc_id")
+        .agg(
+            F.count(F.lit(1)).alias("n_tokens"),
+            F.count(F.when(F.col("tf").isNull(), 1)).alias("n_oov"),
+            F.coalesce(F.sum("tf"), F.lit(0)).alias("sum_tf"),
         )
-        per_doc = (
-            toks.join(F.broadcast(vocab), "token", "left")
-            .groupBy("doc_id")
-            .agg(
-                F.count(F.lit(1)).alias("n_tokens"),
-                F.count(F.when(F.col("tf").isNull(), 1)).alias("n_oov"),
-                F.coalesce(F.sum("tf"), F.lit(0)).alias("sum_tf"),
-            )
+    )
+    out = (
+        docs.select("doc_id")
+        .join(per_doc, "doc_id", "left")
+        .select(
+            "doc_id",
+            F.coalesce("n_tokens", F.lit(0)).alias("n_tokens"),
+            F.coalesce("n_oov", F.lit(0)).alias("n_oov"),
+            F.coalesce("sum_tf", F.lit(0)).alias("sum_tf"),
+            (
+                F.col("sum_tf").cast("double")
+                / F.col("n_tokens").cast("double")
+            ).alias("avg_tf"),
         )
-        out = (
-            docs.select("doc_id")
-            .join(per_doc, "doc_id", "left")
-            .select(
-                "doc_id",
-                F.coalesce("n_tokens", F.lit(0)).alias("n_tokens"),
-                F.coalesce("n_oov", F.lit(0)).alias("n_oov"),
-                F.coalesce("sum_tf", F.lit(0)).alias("sum_tf"),
-                (
-                    F.col("sum_tf").cast("double")
-                    / F.col("n_tokens").cast("double")
-                ).alias("avg_tf"),
-            )
-        )
-        return out.localCheckpoint(eager=True)
-    finally:
-        toks.unpersist()
+    )
+    return out.localCheckpoint(eager=True)
 
 
 def token_budget_select(

@@ -15,7 +15,7 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from books2scrape_etl_spark.functions.util import to_col
+from books2scrape_etl_spark.functions.util import stage, to_col
 
 # Cap on order-bucket count (VERDICT r12 item 3 / ADVICE r12). The
 # bucket id is a count-of-boundaries-below expression evaluated per
@@ -28,48 +28,6 @@ from books2scrape_etl_spark.functions.util import to_col
 # gracefully (each bucket simply holds 1/256th of the sampled mass,
 # and the per-bucket offsets stay a 256-row driver collect).
 _MAX_ORDER_BUCKETS = 256
-
-# Staging-cache generations (VERDICT r12 item 4): the scale operators
-# persist one intermediate per execution (the ranked/cumulative frame
-# the driver-side offsets collect and the returned plan both consume).
-# Persisted frames used to accumulate in the CacheManager for the
-# session lifetime — and a re-execution of the same query silently
-# rode the previous execution's cache ("Asked to cache already cached
-# data" warnings, warm timings partially measuring cache reuse). Each
-# operator now registers its staging frame under a slot; the next
-# execution of the same operator unpersists the previous generation
-# first. Value-safe by construction: every staged plan embeds its
-# boundaries as literals, so an unpersisted frame recomputes to the
-# identical result — the only cost is losing the (stale) cache.
-_STAGE_GENERATIONS: dict[str, DataFrame] = {}
-_STAGE_LOCK = __import__("threading").Lock()
-
-
-def stage_persist(slot: str, df: DataFrame) -> DataFrame:
-    """Persist a staging frame, retiring the previous generation held
-    under the same slot (bounded CacheManager footprint: at most one
-    live staging cache per operator instead of one per execution).
-    Thread-safe: concurrent driver threads (guide §2.6 job overlap)
-    may race on a slot; the loser's frame is retired early, which only
-    costs a value-safe recompute."""
-    with _STAGE_LOCK:
-        prev = _STAGE_GENERATIONS.pop(slot, None)
-        if prev is not None:
-            # retire BEFORE persisting: a re-execution's frame has the
-            # identical plan, so persisting first would hit the old
-            # CacheManager entry ("already cached") and the retirement
-            # would then evict the shared entry — leaving the new frame
-            # silently uncached (double compute downstream)
-            try:
-                prev.unpersist(False)
-            except Exception:
-                # previous generation belonged to a stopped session
-                # (module state outlives SparkSessions); nothing to
-                # retire — its cache died with the session
-                pass
-        _STAGE_GENERATIONS[slot] = df.persist()
-    return df
-
 
 def _sample_order_boundaries(
     d: DataFrame, key_cols: Sequence[str], n_buckets: int, per_bucket: int = 64
@@ -195,13 +153,10 @@ def dense_ids_scale(
     w = Window.partitionBy("__bkt").orderBy(
         *[to_col(c).asc_nulls_first() for c in key_cols]
     )
-    # staged persist (generation-scoped): the ranked table is consumed
-    # twice (counts, final join); boundaries are plan literals, so a
-    # recompute is value-safe — the cache only saves the second window
-    # pass.
-    ranked = stage_persist(
-        "dense_ids_scale", staged.withColumn("__rn", F.row_number().over(w))
-    )
+    # staged: the ranked table is consumed twice (counts, final join);
+    # boundaries are plan literals, so a recompute is value-safe — the
+    # cache only saves the second window pass.
+    ranked = stage(staged.withColumn("__rn", F.row_number().over(w)))
     # tiny action: one row per bucket
     counts = sorted(
         (r["__bkt"], r["cnt"])
@@ -262,12 +217,10 @@ def percent_rank_scale(
     boundaries = _sample_order_boundaries(df, key_cols, n)
     staged = df.withColumn("__bkt", _order_bucket_expr(key_cols, boundaries))
     w = Window.partitionBy("__bkt", group_col).orderBy(*order)
-    # staged persist (generation-scoped): the ranked table is consumed
-    # twice (counts, final join); boundaries are plan literals, so a
-    # recompute is value-safe — the cache only saves the second pass.
-    ranked = stage_persist(
-        "percent_rank_scale", staged.withColumn("__rn", F.row_number().over(w))
-    )
+    # staged: the ranked table is consumed twice (counts, final join);
+    # boundaries are plan literals, so a recompute is value-safe — the
+    # cache only saves the second pass.
+    ranked = stage(staged.withColumn("__rn", F.row_number().over(w)))
     counts = sorted(
         (r["__bkt"], r[group_col], r["cnt"])
         for r in ranked.groupBy("__bkt", group_col)
@@ -332,11 +285,9 @@ def ntile_scale(
     boundaries = _sample_order_boundaries(df, list(order_cols), n)
     staged = df.withColumn("__bkt", _order_bucket_expr(list(order_cols), boundaries))
     w = Window.partitionBy("__bkt").orderBy(*order)
-    # staged persist (generation-scoped): consumed twice (counts, final
-    # join); boundaries are plan literals, so a recompute is value-safe
-    ranked = stage_persist(
-        "ntile_scale", staged.withColumn("__rn", F.row_number().over(w))
-    )
+    # staged: consumed twice (counts, final join); boundaries are plan
+    # literals, so a recompute is value-safe
+    ranked = stage(staged.withColumn("__rn", F.row_number().over(w)))
     counts = sorted(
         (r["__bkt"], r["cnt"])
         for r in ranked.groupBy("__bkt").agg(F.count(F.lit(1)).alias("cnt")).collect()
@@ -412,9 +363,9 @@ def prefix_sums_scale(
     cum = staged
     for c in sum_cols:
         cum = cum.withColumn(f"__cum_{c}", F.sum(to_col(c)).over(w))
-    # staged persist (generation-scoped): consumed twice (totals, final
-    # join); boundaries are plan literals, so a recompute is value-safe
-    cum = stage_persist("prefix_sums_scale", cum)
+    # staged: consumed twice (totals, final join); boundaries are plan
+    # literals, so a recompute is value-safe
+    cum = stage(cum)
     totals = sorted(
         (r["__bkt"], tuple(r[f"t_{c}"] for c in sum_cols))
         for r in cum.groupBy("__bkt")

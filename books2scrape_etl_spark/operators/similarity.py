@@ -36,6 +36,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from books2scrape_etl_spark.functions.util import stage
+
 
 def dot(a: Column, b: Column) -> Column:
     """Dot product of two float arrays, double accumulation, index order."""
@@ -362,28 +364,25 @@ def embedding_near_dup(
     """Embedding-cosine near-dup removal: LSH-bucket self-join ->
     cosine >= threshold -> drop the larger vec_id (same survivor rule
     as operators.dedupe). Returns surviving rows."""
-    # persist: the bucketed table feeds both sides of the self-join (the
+    # staged: the bucketed table feeds both sides of the self-join (the
     # bucket expression is `bits` dot products per row — compute once)
-    e = emb.select("vec_id", vec_col).withColumn(
-        "bucket", lsh_bucket(F.col(vec_col), dim, bits)
-    ).persist()
+    e = stage(
+        emb.select("vec_id", vec_col).withColumn(
+            "bucket", lsh_bucket(F.col(vec_col), dim, bits)
+        )
+    )
     a = e.select(
         F.col("vec_id").alias("id_a"), F.col(vec_col).alias("v_a"), F.col("bucket")
     )
     b = e.select(
         F.col("vec_id").alias("id_b"), F.col(vec_col).alias("v_b"), F.col("bucket")
     )
-    try:
-        dupes = (
-            a.join(b, on="bucket")
-            .where(F.col("id_a") < F.col("id_b"))
-            .where(cosine(F.col("v_a"), F.col("v_b")) >= threshold)
-            .select("id_b")
-            .distinct()
-            # materialize while the bucketed table is cached — the anti-join
-            # below must not recompute the self-join after the unpersist
-            .localCheckpoint(eager=True)
-        )
-    finally:
-        e.unpersist()
+    dupes = (
+        a.join(b, on="bucket")
+        .where(F.col("id_a") < F.col("id_b"))
+        .where(cosine(F.col("v_a"), F.col("v_b")) >= threshold)
+        .select("id_b")
+        .distinct()
+        .localCheckpoint(eager=True)
+    )
     return emb.join(dupes, emb["vec_id"] == dupes["id_b"], "left_anti")

@@ -37,7 +37,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from books2scrape_etl_spark.functions.util import to_col
+from books2scrape_etl_spark.functions.util import stage, to_col
 
 # 2^32 — the hash space of the md5-prefix rule (8 hex digits).
 _HASH_SPACE = 4294967296.0
@@ -67,39 +67,34 @@ def kmv_distinct(
     distinct pass, so it is one extra aggregate, not an extra scan).
     """
     groups = group_cols or []
-    hashes = (
-        df.select(*groups, portable_hash32(key).alias("hv")).distinct().persist()
+    hashes = stage(df.select(*groups, portable_hash32(key).alias("hv")).distinct())
+    exact = hashes.groupBy(*groups).agg(F.count(F.lit(1)).alias("exact_dv"))
+    if groups:
+        # per-group k-smallest via a window; parallelism = group count
+        # (fine for low-cardinality groups, which is what grouped
+        # sketching is for — per-key cardinality wants the KMV merge
+        # form instead).
+        w = Window.partitionBy(*groups).orderBy("hv")
+        topk = hashes.withColumn("rn", F.row_number().over(w)).where(
+            F.col("rn") <= k
+        )
+    else:
+        # orderBy+limit plans as TakeOrderedAndProject: each partition
+        # keeps its own k smallest before the single merge — never a
+        # one-task global sort (which Window.partitionBy(lit) would be).
+        topk = hashes.orderBy("hv").limit(k)
+    sk = topk.groupBy(*groups).agg(
+        F.count(F.lit(1)).alias("k_used"), F.max("hv").alias("kth_hash")
     )
-    try:
-        exact = hashes.groupBy(*groups).agg(F.count(F.lit(1)).alias("exact_dv"))
-        if groups:
-            # per-group k-smallest via a window; parallelism = group count
-            # (fine for low-cardinality groups, which is what grouped
-            # sketching is for — per-key cardinality wants the KMV merge
-            # form instead).
-            w = Window.partitionBy(*groups).orderBy("hv")
-            topk = hashes.withColumn("rn", F.row_number().over(w)).where(
-                F.col("rn") <= k
-            )
-        else:
-            # orderBy+limit plans as TakeOrderedAndProject: each partition
-            # keeps its own k smallest before the single merge — never a
-            # one-task global sort (which Window.partitionBy(lit) would be).
-            topk = hashes.orderBy("hv").limit(k)
-        sk = topk.groupBy(*groups).agg(
-            F.count(F.lit(1)).alias("k_used"), F.max("hv").alias("kth_hash")
-        )
-        est = F.when(
-            F.col("k_used") < k, F.col("k_used").cast("double")
-        ).otherwise(F.lit((k - 1) * _HASH_SPACE) / F.col("kth_hash").cast("double"))
-        joined = sk.join(exact, groups) if groups else sk.crossJoin(exact)
-        out = joined.select(
-            *groups, "k_used", "kth_hash", est.alias("est_dv"), "exact_dv"
-        )
-        # Materialize while the shared distinct table is still cached.
-        return out.localCheckpoint(eager=True)
-    finally:
-        hashes.unpersist()
+    est = F.when(
+        F.col("k_used") < k, F.col("k_used").cast("double")
+    ).otherwise(F.lit((k - 1) * _HASH_SPACE) / F.col("kth_hash").cast("double"))
+    joined = sk.join(exact, groups) if groups else sk.crossJoin(exact)
+    out = joined.select(
+        *groups, "k_used", "kth_hash", est.alias("est_dv"), "exact_dv"
+    )
+    # Materialize while the shared distinct table is still cached.
+    return out.localCheckpoint(eager=True)
 
 
 def kmv_set_ops(
@@ -129,48 +124,43 @@ def kmv_set_ops(
     estimates, exacts — replays in oracle SQL.
     """
     lab = to_col(label_col)
-    hashes = (
+    hashes = stage(
         df.where(lab.isin(label_a, label_b))
         .select(lab.alias("lab"), portable_hash32(key).alias("hv"))
         .distinct()
-        .persist()
     )
-    ska = hashes.where(F.col("lab") == label_a).select("hv").orderBy("hv").limit(k).persist()
-    skb = hashes.where(F.col("lab") == label_b).select("hv").orderBy("hv").limit(k).persist()
-    u = ska.union(skb).distinct().orderBy("hv").limit(k).persist()
-    try:
-        one = F.count(F.lit(1))
-        agg_a = ska.agg(one.alias("k_a"), F.max("hv").alias("kth_a"))
-        agg_b = skb.agg(one.alias("k_b"), F.max("hv").alias("kth_b"))
-        agg_u = u.agg(one.alias("k_u"), F.max("hv").alias("kth_u"))
-        shared = (
-            u.join(ska, "hv", "left_semi")
-            .join(skb, "hv", "left_semi")
-            .agg(one.alias("n_shared"))
-        )
-        exact_u = hashes.select("hv").distinct().agg(one.alias("exact_union"))
-        exact_i = (
-            hashes.groupBy("hv")
-            .agg(F.count_distinct("lab").alias("nl"))
-            .where(F.col("nl") == 2)
-            .agg(one.alias("exact_inter"))
-        )
-        row = (
-            agg_a.crossJoin(agg_b).crossJoin(agg_u).crossJoin(shared)
-            .crossJoin(exact_u).crossJoin(exact_i)
-        )
-        est_union = F.when(F.col("k_u") < k, F.col("k_u").cast("double")).otherwise(
-            F.lit(float((k - 1) * 4294967296)) / F.col("kth_u").cast("double")
-        )
-        est_j = F.col("n_shared").cast("double") / F.col("k_u").cast("double")
-        out = row.select(
-            "k_a", "kth_a", "k_b", "kth_b", "k_u", "kth_u", "n_shared",
-            est_union.alias("est_union"),
-            est_j.alias("est_jaccard"),
-            (est_j * est_union).alias("est_intersection"),
-            "exact_union", "exact_inter",
-        )
-        return out.localCheckpoint(eager=True)
-    finally:
-        for c in (u, skb, ska, hashes):
-            c.unpersist()
+    ska = stage(hashes.where(F.col("lab") == label_a).select("hv").orderBy("hv").limit(k))
+    skb = stage(hashes.where(F.col("lab") == label_b).select("hv").orderBy("hv").limit(k))
+    u = stage(ska.union(skb).distinct().orderBy("hv").limit(k))
+    one = F.count(F.lit(1))
+    agg_a = ska.agg(one.alias("k_a"), F.max("hv").alias("kth_a"))
+    agg_b = skb.agg(one.alias("k_b"), F.max("hv").alias("kth_b"))
+    agg_u = u.agg(one.alias("k_u"), F.max("hv").alias("kth_u"))
+    shared = (
+        u.join(ska, "hv", "left_semi")
+        .join(skb, "hv", "left_semi")
+        .agg(one.alias("n_shared"))
+    )
+    exact_u = hashes.select("hv").distinct().agg(one.alias("exact_union"))
+    exact_i = (
+        hashes.groupBy("hv")
+        .agg(F.count_distinct("lab").alias("nl"))
+        .where(F.col("nl") == 2)
+        .agg(one.alias("exact_inter"))
+    )
+    row = (
+        agg_a.crossJoin(agg_b).crossJoin(agg_u).crossJoin(shared)
+        .crossJoin(exact_u).crossJoin(exact_i)
+    )
+    est_union = F.when(F.col("k_u") < k, F.col("k_u").cast("double")).otherwise(
+        F.lit(float((k - 1) * 4294967296)) / F.col("kth_u").cast("double")
+    )
+    est_j = F.col("n_shared").cast("double") / F.col("k_u").cast("double")
+    out = row.select(
+        "k_a", "kth_a", "k_b", "kth_b", "k_u", "kth_u", "n_shared",
+        est_union.alias("est_union"),
+        est_j.alias("est_jaccard"),
+        (est_j * est_union).alias("est_intersection"),
+        "exact_union", "exact_inter",
+    )
+    return out.localCheckpoint(eager=True)

@@ -55,6 +55,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, LongType
 
+from books2scrape_etl_spark.functions.util import stage
 from books2scrape_etl_spark.operators.text import normalize_for_fingerprint
 
 
@@ -153,26 +154,20 @@ def decontaminate(
     any shared normalized substring of length ≥ k + w - 1 surfaces as a
     shared fingerprint.
 
-    Pass precomputed (persisted) ``fps`` to share one fingerprint pass
-    across several winnow consumers (the suite pattern) — the caller
-    then owns the persist lifecycle.
+    Pass precomputed ``fps`` to share one fingerprint pass across
+    several winnow consumers (the suite pattern).
     """
-    own_fps = fps is None
-    if own_fps:
-        fps = winnow_fingerprints(docs, text_col, id_col, k, w).persist()
-    try:
-        bench_fps = fps.where(bench_pred).select("fp").distinct()
-        train_fps = fps.where(~bench_pred)
-        out = (
-            train_fps.join(bench_fps, "fp")
-            .groupBy(id_col)
-            .agg(F.count(F.lit(1)).alias("n_shared"))
-            .where(F.col("n_shared") >= min_shared)
-        )
-        return out.localCheckpoint(eager=True)
-    finally:
-        if own_fps:
-            fps.unpersist()
+    if fps is None:
+        fps = stage(winnow_fingerprints(docs, text_col, id_col, k, w))
+    bench_fps = fps.where(bench_pred).select("fp").distinct()
+    train_fps = fps.where(~bench_pred)
+    out = (
+        train_fps.join(bench_fps, "fp")
+        .groupBy(id_col)
+        .agg(F.count(F.lit(1)).alias("n_shared"))
+        .where(F.col("n_shared") >= min_shared)
+    )
+    return out.localCheckpoint(eager=True)
 
 
 def winnow_candidates(
@@ -195,33 +190,28 @@ def winnow_candidates(
     skew bomb defused by construction. Returns (id_a, id_b, shared),
     id_a < id_b.
 
-    Pass precomputed (persisted) ``fps`` to share one fingerprint pass
-    across several winnow consumers (the suite pattern).
+    Pass precomputed ``fps`` to share one fingerprint pass across
+    several winnow consumers (the suite pattern).
     """
-    own_fps = fps is None
-    if own_fps:
-        fps = winnow_fingerprints(docs, text_col, id_col, k, w).persist()
-    try:
-        keep = (
-            fps.groupBy("fp")
-            .agg(F.count(F.lit(1)).alias("df"))
-            .where((F.col("df") >= 2) & (F.col("df") <= max_df))
-            .select("fp")
-        )
-        kept = fps.join(keep, "fp")
-        a = kept.select(F.col("fp"), F.col(id_col).alias("id_a"))
-        b = kept.select(F.col("fp"), F.col(id_col).alias("id_b"))
-        pairs = (
-            a.join(b, "fp")
-            .where(F.col("id_a") < F.col("id_b"))
-            .groupBy("id_a", "id_b")
-            .agg(F.count(F.lit(1)).alias("shared"))
-            .where(F.col("shared") >= min_shared)
-        )
-        # Materialize while fps is still cached: the two consumers above
-        # must read the SAME fingerprint table (cheap here; on a cluster
-        # the persist alone carries it).
-        return pairs.localCheckpoint(eager=True)
-    finally:
-        if own_fps:
-            fps.unpersist()
+    if fps is None:
+        fps = stage(winnow_fingerprints(docs, text_col, id_col, k, w))
+    keep = (
+        fps.groupBy("fp")
+        .agg(F.count(F.lit(1)).alias("df"))
+        .where((F.col("df") >= 2) & (F.col("df") <= max_df))
+        .select("fp")
+    )
+    kept = fps.join(keep, "fp")
+    a = kept.select(F.col("fp"), F.col(id_col).alias("id_a"))
+    b = kept.select(F.col("fp"), F.col(id_col).alias("id_b"))
+    pairs = (
+        a.join(b, "fp")
+        .where(F.col("id_a") < F.col("id_b"))
+        .groupBy("id_a", "id_b")
+        .agg(F.count(F.lit(1)).alias("shared"))
+        .where(F.col("shared") >= min_shared)
+    )
+    # Materialize while fps is still cached: the two consumers above
+    # must read the SAME fingerprint table (cheap here; on a cluster
+    # the staging cache alone carries it).
+    return pairs.localCheckpoint(eager=True)

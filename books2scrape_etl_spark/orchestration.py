@@ -12,14 +12,17 @@ them without an orchestrator:
   attempt runs under a job group and a timeout CANCELS the in-flight
   Spark jobs (a bare thread timeout would leak the running job —
   the cluster keeps burning after the caller gives up).
-- :func:`single_flight` — ``max_active_runs=1``: an O_EXCL lockfile
-  guard so overlapping scheduled runs skip instead of double-writing a
-  sink. Driver-local by design (one scheduler host, like one Airflow
-  scheduler); a multi-driver deployment would use a real lock service.
+- :func:`single_flight` — ``max_active_runs=1``: an ``flock``-held
+  lockfile so overlapping scheduled runs skip instead of double-writing
+  a sink. The kernel drops the lock when its holder dies, so a killed
+  run never wedges later ones. Driver-local by design (one scheduler
+  host, like one Airflow scheduler); a multi-driver deployment would
+  use a real lock service.
 """
 
 from __future__ import annotations
 
+import fcntl
 import os
 import time
 import uuid
@@ -41,7 +44,7 @@ def run_with_policy(
     retry_delay: float = 5.0,
     timeout: float | None = None,
     spark=None,
-    on_failure: Callable[[BaseException], None] | None = None,
+    on_failure: Callable[[Exception], None] | None = None,
     name: str = "pipeline",
 ) -> Any:
     """Run ``fn()`` with Airflow-style retry/timeout/failure policies.
@@ -52,11 +55,13 @@ def run_with_policy(
     abandoned after ``timeout`` seconds (airflow.py:44
     execution_timeout); if ``spark`` is given the attempt's jobs run in
     a dedicated job group that gets cancelled on timeout, so executors
-    stop doing dead work. On final failure, ``on_failure(exc)`` fires
-    (airflow.py:40 email_on_failure analogue — pass a mailer callback)
-    and the last exception re-raises.
+    stop doing dead work. The timeout raises on time: the hung attempt's
+    thread is abandoned, never joined. On final failure,
+    ``on_failure(exc)`` fires (airflow.py:40 email_on_failure analogue —
+    pass a mailer callback) and the last exception re-raises.
+    ``KeyboardInterrupt`` and ``SystemExit`` propagate at once, unretried.
     """
-    last: BaseException | None = None
+    last: Exception | None = None
     for attempt in range(retries + 1):
         if attempt:
             time.sleep(retry_delay)
@@ -74,18 +79,18 @@ def run_with_policy(
                     if spark is not None:
                         spark.sparkContext.setJobGroup("", "")
 
-            with ThreadPoolExecutor(max_workers=1) as pool:
-                fut = pool.submit(attempt_fn)
-                try:
-                    return fut.result(timeout=timeout)
-                except FuturesTimeoutError:
-                    if spark is not None:
-                        spark.sparkContext.cancelJobGroup(group)
-                    fut.cancel()
-                    raise PipelineTimeout(
-                        f"{name}: attempt {attempt + 1} exceeded {timeout}s"
-                    ) from None
-        except BaseException as exc:  # noqa: BLE001 — policy layer reports all
+            pool = ThreadPoolExecutor(max_workers=1)
+            try:
+                return pool.submit(attempt_fn).result(timeout=timeout)
+            except FuturesTimeoutError:
+                if spark is not None:
+                    spark.sparkContext.cancelJobGroup(group)
+                raise PipelineTimeout(
+                    f"{name}: attempt {attempt + 1} exceeded {timeout}s"
+                ) from None
+            finally:
+                pool.shutdown(wait=False)
+        except Exception as exc:
             last = exc
     if on_failure is not None:
         on_failure(last)
@@ -99,18 +104,16 @@ class AlreadyRunning(RuntimeError):
 
 @contextmanager
 def single_flight(name: str, lock_dir: str = "/tmp/spark_graft_locks"):
-    """``max_active_runs=1`` (airflow.py:35 analogue): O_EXCL lockfile
-    per pipeline name; a second concurrent entry raises
-    :class:`AlreadyRunning` instead of double-running."""
+    """``max_active_runs=1`` (airflow.py:35 analogue): an exclusive
+    ``flock`` on one lockfile per pipeline name; a second concurrent
+    entry raises :class:`AlreadyRunning` instead of double-running. The
+    lock lives on the open file, so it is released when the block exits
+    or the holding process dies."""
     os.makedirs(lock_dir, exist_ok=True)
     path = os.path.join(lock_dir, f"{name}.lock")
-    try:
-        fd = os.open(path, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-    except FileExistsError:
-        raise AlreadyRunning(f"{name}: lock held at {path}") from None
-    try:
-        os.write(fd, str(os.getpid()).encode())
-        os.close(fd)
+    with open(path, "a") as fh:
+        try:
+            fcntl.flock(fh, fcntl.LOCK_EX | fcntl.LOCK_NB)
+        except BlockingIOError:
+            raise AlreadyRunning(f"{name}: lock held at {path}") from None
         yield
-    finally:
-        os.unlink(path)

@@ -35,7 +35,7 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from books2scrape_etl_spark.functions.util import to_col
+from books2scrape_etl_spark.functions.util import stage, to_col
 
 
 def build_dim(
@@ -134,20 +134,14 @@ def build_dims_one_pass(
     for natural_key, _ in dim_specs.values():
         set_cols.setdefault(frozenset(natural_key), list(natural_key))
     sets = list(set_cols.values())
-    # generation-scoped persist: the per-dim grouping_id filters would
-    # otherwise be pushed BELOW the aggregate (each branch gets its own
-    # filtered copy of the scan+Expand+agg subtree — three full input
-    # scans again, and the differing pushed filters defeat exchange
-    # reuse). The cached frame is the union of the distinct key sets —
+    # staged: the per-dim grouping_id filters would otherwise be pushed
+    # BELOW the aggregate (each branch gets its own filtered copy of the
+    # scan+Expand+agg subtree — three full input scans again, and the
+    # differing pushed filters defeat exchange reuse). The cached frame is the union of the distinct key sets —
     # dim-sized by the exact-path contract — so every dim branch reads
     # the one materialized aggregate instead of re-scanning the input;
-    # the next star build retires this generation's cache entry.
-    from books2scrape_etl_spark.operators.scale import stage_persist
-
-    g = stage_persist(
-        "star.dims_one_pass",
-        df.groupingSets(sets, *all_cols).agg(F.grouping_id().alias("__gid")),
-    )
+    # a rebuild of the same star retires the previous cache entry.
+    g = stage(df.groupingSets(sets, *all_cols).agg(F.grouping_id().alias("__gid")))
     dims: dict[str, DataFrame] = {}
     for name, (natural_key, id_col) in dim_specs.items():
         s = set_cols[frozenset(natural_key)]

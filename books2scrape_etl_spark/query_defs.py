@@ -35,6 +35,7 @@ from books2scrape_etl_spark.functions.columns import (
     rating_ordinal,
     rewrite_relative_url,
 )
+from books2scrape_etl_spark.functions.util import stage
 from books2scrape_etl_spark.io import TESTDATA_SCHEMAS, read_table
 from books2scrape_etl_spark.operators import dedupe, multimodal, similarity, text
 from books2scrape_etl_spark.operators.binning import bin_fixed, bin_quantile_exact
@@ -1163,16 +1164,13 @@ def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select((F.col("doc_id") + _SIMHASH_OFFSET).alias("doc_id"), "text")
     )
     both = docs.unionByName(copies)
-    # one signature table + one band table over docs+copies; persist the
+    # one signature table + one band table over docs+copies; stage the
     # signatures (consumed by all three sections)
-    sig = both.select(
-        "doc_id", dedupe.simhash64(F.col("text")).alias("sig")
-    ).persist()
+    sig = stage(both.select("doc_id", dedupe.simhash64(F.col("text")).alias("sig")))
     # bands feeds three plan branches (recon + both sides of the bucket
     # check); without a cache each branch re-runs the Arrow signature
-    # pass (ADVICE r10). simhash_bands itself stays cache-free — the
-    # consumer owns the persist/unpersist pairing.
-    bands = dedupe.simhash_bands(both).persist()
+    # pass (ADVICE r10). simhash_bands itself stays cache-free.
+    bands = stage(dedupe.simhash_bands(both))
 
     # (a) band values reassemble the signature, doc by doc
     # shiftleft with a COLUMN shift amount needs the SQL form (the
@@ -1252,16 +1250,10 @@ def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("bigint")
         .alias("ok"),
     )
-    # eager-pin the 3 check rows, then drop the cached signature table
-    # before returning (the embed_generate materialize-then-unpersist
-    # rule — the returned plan must not need `sig`)
-    out = (
+    return (
         decomp.union(bucket).union(dist0).orderBy("check_name")
         .localCheckpoint(eager=True)
     )
-    sig.unpersist()
-    bands.unpersist()
-    return out
 
 
 @register(

@@ -225,23 +225,20 @@ def q_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("mon_cents"),
         F.max(F.expr("CAST(o_orderdate AS LONG) DIV 86400")).alias("last_day"),
     )
+    from books2scrape_etl_spark.functions.util import stage
     from books2scrape_etl_spark.operators.scale import ntile_scale
 
     ref = pc.agg(F.max("last_day").alias("ref_day"))
-    # persist the collapsed frame: three ntile_scale passes each take a
+    # stage the collapsed frame: three ntile_scale passes each take a
     # tiny per-partition-counts action over it
-    base = (
+    base = stage(
         pc.crossJoin(F.broadcast(ref))
         .withColumn("rec_days", F.col("ref_day") - F.col("last_day"))
-        .persist()
     )
     r = ntile_scale(base, ["rec_days", "o_custkey"], 5, out_col="r_q")
     r = ntile_scale(r, ["freq", "o_custkey"], 5, out_col="f_q")
     r = ntile_scale(r, ["mon_cents", "o_custkey"], 5, out_col="m_q")
-    # eager-pin the <=1000 segment rows, then drop the cached collapsed
-    # frame before returning (the embed_generate materialize-then-
-    # unpersist rule — the returned plan must not need `base`)
-    out = (
+    return (
         r.groupBy(
             (F.col("r_q") * 100 + F.col("f_q") * 10 + F.col("m_q")).alias("segment")
         )
@@ -256,8 +253,6 @@ def q_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy("segment")
         .localCheckpoint(eager=True)
     )
-    base.unpersist()
-    return out
 
 
 # ---------------------------------------------------------------------

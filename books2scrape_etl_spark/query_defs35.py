@@ -360,7 +360,8 @@ def q_cc_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = read_table(spark, "documents", sf_dir).where(
         F.col("doc_id") % 2 == 0
     )
-    cand = winnow_candidates(docs, max_df=50, min_shared=3).persist()
+    # winnow_candidates returns the edges pinned (localCheckpoint)
+    cand = winnow_candidates(docs, max_df=50, min_shared=3)
     pairs = cand.select("id_a", "id_b")
     star = connected_components_star(pairs)
     prop = connected_components(pairs)
@@ -369,15 +370,9 @@ def q_cc_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(-1).cast("long").alias("doc_id"),
         F.count(F.lit(1)).alias("component"),
     )
-    # eager-pin the small label/edge-count union, then drop the cached
-    # candidate edges BEFORE returning (the embed_generate rule: a
-    # returned plan must not depend on a persisted input, or every call
-    # leaks storage blocks in long-lived sessions)
-    out = (
+    return (
         star.select(F.lit("star").alias("algo"), "doc_id", "component")
         .union(prop.select(F.lit("prop").alias("algo"), "doc_id", "component"))
         .union(n_edges)
         .localCheckpoint(eager=True)
     )
-    cand.unpersist()
-    return out

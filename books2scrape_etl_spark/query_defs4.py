@@ -508,10 +508,9 @@ def q_dedup_cc_star(spark: SparkSession, sf_dir: str) -> DataFrame:
     from books2scrape_etl_spark.operators import dedupe
 
     docs = read_table(spark, "documents", sf_dir)
-    # materialize=True pins the edge list once (localCheckpoint) and
-    # unpersists the shingle/band intermediates — both CC algorithms
-    # then read the same materialized blocks
-    pairs = dedupe.verified_similar_pairs(docs, threshold=0.6, materialize=True)
+    # the edge list is pinned once (localCheckpoint) — both CC
+    # algorithms then read the same materialized blocks
+    pairs = dedupe.verified_similar_pairs(docs, threshold=0.6)
     comp_star = dedupe.connected_components_star(pairs)
     comp_prop = dedupe.connected_components(pairs)
     lab = comp_star.select(
@@ -1299,12 +1298,13 @@ def q_embed_generate(spark: SparkSession, sf_dir: str) -> DataFrame:
       over the vocab axis) the module documents, checked in-plan on
       real data, not just the unit tests' toy corpus.
     """
+    from books2scrape_etl_spark.functions.util import stage
     from books2scrape_etl_spark.operators.inference import embed_generate
 
     docs = read_table(spark, "documents", sf_dir)
-    # persist: four check branches consume emb; without it each branch
+    # staged: four check branches consume emb; without it each branch
     # re-runs the Python forward pass over the whole corpus
-    emb = embed_generate(docs).persist()
+    emb = stage(embed_generate(docs))
     placed = emb.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_placed"))
     bad_ids = (
         docs.select("doc_id")
@@ -1330,13 +1330,7 @@ def q_embed_generate(spark: SparkSession, sf_dir: str) -> DataFrame:
     def n(df: DataFrame) -> DataFrame:
         return df.agg(F.count(F.lit(1)).alias("n"))
 
-    # Eagerly pin the tiny 4-row check union, then drop the cached
-    # forward-pass blocks BEFORE returning: the returned plan must not
-    # depend on `emb`, or every call leaks storage in long-lived
-    # sessions (the r9c3 broadcast-build OOM class; the real driver
-    # harness never clears cache). Same materialize-then-unpersist
-    # pattern as dedupe.verified_similar_pairs.
-    out = (
+    return (
         _check_row("ids_bijective_with_documents", n(bad_ids))
         .union(_check_row("unit_or_zero_norms", n(bad_norm)))
         .union(_check_row("dim_is_16", n(bad_dim)))
@@ -1344,8 +1338,6 @@ def q_embed_generate(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy("k")
         .localCheckpoint(eager=True)
     )
-    emb.unpersist()
-    return out
 
 
 @register(

@@ -397,6 +397,7 @@ def q_dedup_invariants(spark: SparkSession, sf_dir: str) -> DataFrame:
       O(diameter) propagation and the O(log) large-star/small-star
       implementations must agree label for label.
     """
+    from books2scrape_etl_spark.functions.util import stage
     from books2scrape_etl_spark.operators import dedupe, similarity
 
     docs = read_table(spark, "documents", sf_dir).select("doc_id", "text")
@@ -411,13 +412,15 @@ def q_dedup_invariants(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select((F.col("doc_id") + _DEDUP_OFFSET).alias("doc_id"), "text")
     )
     both = docs.unionByName(copies)
+    # pinned now, while both dedup plans' four staging caches are live
+    # (the sections below stage six more frames)
     mh = _zero_row(
         "minhash_planted",
         _sym_diff_count(
             dedupe.minhash_dedup(docs, threshold=0.6).select("doc_id"),
             dedupe.minhash_dedup(both, threshold=0.6).select("doc_id"),
         ),
-    )
+    ).localCheckpoint(eager=True)
 
     emb = read_table(spark, "embeddings", sf_dir).select("vec_id", "embedding")
     ecopies = (
@@ -434,10 +437,10 @@ def q_dedup_invariants(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
     )
 
-    # bands feeds both sides of the planted-copy symmetric diff; cache
-    # it for the one eager pass then drop it (ADVICE r10 — the consumer
-    # owns the persist/unpersist pairing, simhash_bands stays cache-free)
-    bands = dedupe.simhash_bands(both).persist()
+    # bands feeds both sides of the planted-copy symmetric diff; stage
+    # it for the one eager pass (ADVICE r10 — simhash_bands stays
+    # cache-free)
+    bands = stage(dedupe.simhash_bands(both))
     copy_bands = bands.where(F.col("doc_id") >= _DEDUP_OFFSET).select(
         (F.col("doc_id") - _DEDUP_OFFSET).alias("doc_id"), "band", "band_val"
     )
@@ -447,7 +450,6 @@ def q_dedup_invariants(spark: SparkSession, sf_dir: str) -> DataFrame:
     sh = _zero_row(
         "simhash_planted", _sym_diff_count(copy_bands, orig_bands)
     ).localCheckpoint(eager=True)
-    bands.unpersist()
 
     chain = spark.range(0, 3).select(
         F.col("id").alias("id_a"), (F.col("id") + 1).alias("id_b")

@@ -115,8 +115,34 @@ def test_run_with_policy_timeout():
 
     from books2scrape_etl_spark.orchestration import PipelineTimeout, run_with_policy
 
+    t0 = time.monotonic()
     with pytest.raises(PipelineTimeout):
         run_with_policy(lambda: time.sleep(5), retries=0, timeout=0.2)
+    # raises on time: the hung attempt is abandoned, not joined
+    assert time.monotonic() - t0 < 0.2 + 1.0
+
+
+def test_run_with_policy_does_not_retry_keyboard_interrupt():
+    import pytest
+
+    from books2scrape_etl_spark.orchestration import run_with_policy
+
+    for timeout in (None, 5.0):
+        calls, failures = [], []
+
+        def interrupted():
+            calls.append(1)
+            raise KeyboardInterrupt
+
+        with pytest.raises(KeyboardInterrupt):
+            run_with_policy(
+                interrupted,
+                retries=2,
+                retry_delay=0.0,
+                timeout=timeout,
+                on_failure=failures.append,
+            )
+        assert len(calls) == 1 and failures == []
 
 
 def test_single_flight_blocks_second_entry():
@@ -130,4 +156,45 @@ def test_single_flight_blocks_second_entry():
                 pass
     # lock released -> re-entry fine
     with single_flight("t_sf"):
+        pass
+
+
+def test_single_flight_survives_killed_holder(tmp_path):
+    """A run killed while holding the lock must not wedge later runs:
+    the kernel drops an flock with its holder."""
+    import os
+    import signal
+    import subprocess
+    import sys
+
+    import pytest
+
+    from books2scrape_etl_spark.orchestration import AlreadyRunning, single_flight
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    child = subprocess.Popen(
+        [
+            sys.executable,
+            "-c",
+            "import sys, time\n"
+            f"sys.path.insert(0, {root!r})\n"
+            "from books2scrape_etl_spark.orchestration import single_flight\n"
+            f"with single_flight('t_kill', lock_dir={str(tmp_path)!r}):\n"
+            "    print('locked', flush=True)\n"
+            "    time.sleep(60)\n",
+        ],
+        stdout=subprocess.PIPE,
+        text=True,
+    )
+    try:
+        assert child.stdout.readline().strip() == "locked"
+        with pytest.raises(AlreadyRunning):
+            with single_flight("t_kill", lock_dir=str(tmp_path)):
+                pass
+    finally:
+        child.send_signal(signal.SIGKILL)
+        child.wait(timeout=30)
+        child.stdout.close()
+    assert os.path.exists(tmp_path / "t_kill.lock")  # the file stays behind
+    with single_flight("t_kill", lock_dir=str(tmp_path)):
         pass

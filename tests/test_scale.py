@@ -240,30 +240,117 @@ def test_topk_per_group_scale_prunes_before_exchange(spark):
     assert "SPARK_PARTITION_ID" not in plan
 
 
-def test_stage_persist_generations(spark):
-    """Staging caches are generation-scoped (VERDICT r12 item 4): a
-    second execution of the same operator retires the first one's
-    persisted frame instead of accumulating CacheManager entries."""
-    from books2scrape_etl_spark.operators.scale import (
-        _STAGE_GENERATIONS,
-        dense_ids_scale,
-    )
+def _cached_entries(spark, marker: str) -> int:
+    """Live cached RDDs whose plan mentions ``marker`` (a column name
+    unique to one test)."""
+    infos = spark.sparkContext._jsc.sc().getRDDStorageInfo()
+    return sum(1 for i in infos if marker in i.name() and i.numCachedPartitions() > 0)
 
-    # distinct inputs per generation: storageLevel resolves through the
-    # CacheManager by PLAN, so identical plans would answer for each
-    # other and hide the retirement
-    df1 = spark.createDataFrame([(i % 13,) for i in range(200)], "k int")
-    df2 = spark.createDataFrame([(i % 17,) for i in range(200)], "k int")
-    first = dense_ids_scale(df1, ["k"], "id", num_partitions=3)
-    gen1 = _STAGE_GENERATIONS["dense_ids_scale"]
-    assert gen1.storageLevel.useMemory
-    second = dense_ids_scale(df2, ["k"], "id", num_partitions=3)
-    gen2 = _STAGE_GENERATIONS["dense_ids_scale"]
-    assert gen2 is not gen1
-    assert not gen1.storageLevel.useMemory  # previous generation retired
-    # and both plans still evaluate correctly (recompute is value-safe)
-    assert sorted(r.id for r in first.collect()) == list(range(1, 14))
-    assert sorted(r.id for r in second.collect()) == list(range(1, 18))
+
+def test_stage_same_plan_keeps_one_entry(spark):
+    """Rebuilding the same plan re-stages it under the same key: the
+    previous execution's cache is released, never piled up or reused."""
+    for _ in range(3):
+        df = spark.range(200).select((F.col("id") % 13).alias("stage_same_k"))
+        got = dense_ids_scale(df, ["stage_same_k"], "id", num_partitions=3)
+        assert sorted(r.id for r in got.collect()) == list(range(1, 14))
+    assert _cached_entries(spark, "stage_same_k") == 1
+
+
+def test_stage_concurrent_inputs_keep_their_caches(spark):
+    """Two executions of one operator on different inputs, from two
+    threads, must not evict each other's staging caches."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    def run(mod):
+        df = spark.range(300).select((F.col("id") % mod).alias("stage_thread_k"))
+        got = dense_ids_scale(df, ["stage_thread_k"], "id", num_partitions=3)
+        return sorted(r.id for r in got.collect())
+
+    with ThreadPoolExecutor(max_workers=2) as pool:
+        got = list(pool.map(run, (11, 19)))
+    assert got == [list(range(1, 12)), list(range(1, 20))]
+    assert _cached_entries(spark, "stage_thread_k") == 2
+
+
+def test_stage_cap_evicts_exactly_the_oldest(spark):
+    from books2scrape_etl_spark.functions.util import _STAGE_CAP, _STAGED, stage
+
+    frames = [
+        stage(spark.range(10 + i).select(F.col("id").alias("stage_cap_k")))
+        for i in range(_STAGE_CAP + 1)
+    ]
+    assert not frames[0].storageLevel.useMemory
+    assert all(f.storageLevel.useMemory for f in frames[1:])
+    assert len(_STAGED) == _STAGE_CAP
+
+
+def test_stage_threads_stress():
+    """8 threads re-staging overlapping keys: every frame stays persisted
+    exactly while the LRU tracks it (a lost update under a race would
+    leave a persisted frame untracked, i.e. leaked). No Spark: the
+    frames are stand-ins with the three methods stage() calls."""
+    import sys
+    import threading
+
+    from books2scrape_etl_spark.functions import util
+
+    class Frame:
+        def __init__(self, key):
+            self.key, self.live = key, 0
+
+        def semanticHash(self):
+            return self.key
+
+        def persist(self):
+            self.live += 1
+            return self
+
+        def unpersist(self, blocking=False):
+            self.live -= 1
+
+    made = []
+
+    def worker(seed):
+        for i in range(2000):
+            f = Frame((seed * 7 + i) % (util._STAGE_CAP * 3))
+            made.append(f)
+            util.stage(f)
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=worker, args=(n,)) for n in range(8)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=60)
+        assert not any(t.is_alive() for t in threads)
+        tracked = {id(f) for f in util._STAGED.values()}
+        assert len(util._STAGED) == util._STAGE_CAP
+        assert all(f.live == (1 if id(f) in tracked else 0) for f in made)
+    finally:
+        sys.setswitchinterval(old)
+        with util._STAGE_LOCK:
+            for k in [k for k, f in util._STAGED.items() if isinstance(f, Frame)]:
+                del util._STAGED[k]
+
+
+def test_chained_ntile_scale_keeps_first_ranked_frame(spark):
+    """ntile_scale(ntile_scale(df)): the second call's plan reads the
+    first call's ranked frame, so staging the second must not release
+    the first (a per-operator slot did, and recomputed the window)."""
+    from books2scrape_etl_spark.operators.scale import ntile_scale
+
+    df = spark.range(500).select(
+        F.col("id").alias("chain_v"), (F.col("id") % 7).alias("chain_g")
+    )
+    r1 = ntile_scale(df, ["chain_v"], 4, out_col="chain_q1")
+    assert _cached_entries(spark, "chain_v") == 1
+    r2 = ntile_scale(r1, ["chain_g", "chain_v"], 3, out_col="chain_q2")
+    assert _cached_entries(spark, "chain_v") == 2
+    got = r2.groupBy("chain_q1").count().orderBy("chain_q1").collect()
+    assert [(r.chain_q1, r["count"]) for r in got] == [(q, 125) for q in range(1, 5)]
 
 
 def test_percent_rank_scale_single_row_group(spark):
