@@ -67,7 +67,10 @@ class sized_shuffle_partitions:
 # star dims (join_fact), the MinHash shingle and band tables
 # (dedup_minhash) and the ranked frame (surrogate_key_scale). A warm
 # pass re-stages the same four keys, so it never evicts its own working
-# set, and a full-registry sweep holds at most four staging caches.
+# set, and a full-registry sweep holds at most four staging caches. The
+# books pipeline (plans.books.transform_books) stages three: the parsed
+# pages, the tiered cleaned frame and the star's grouping-sets table;
+# a rerun on the same input replaces those three keys.
 _STAGE_CAP = 4
 _STAGED: OrderedDict[int, DataFrame] = OrderedDict()
 _STAGE_LOCK = threading.Lock()

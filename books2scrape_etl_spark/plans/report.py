@@ -147,10 +147,13 @@ def send_report(html: str, subject: str = "Pipeline report") -> bool:
 def run_report(cleaned: DataFrame, **agg_cols: str) -> dict:
     """Terminal action: aggregate -> collect one row -> render -> send.
     The rendered HTML shows reference-formatted display values
-    (``$1,234.50`` / ``4.20``); the returned dict keeps raw numerics."""
-    quality_gate(cleaned)
-    row = summary_aggregates(cleaned, **agg_cols).collect()[0]
-    summary = row.asDict()
+    (``$1,234.50`` / ``4.20``); the returned dict keeps raw numerics.
+
+    One job: the non-empty gate reads ``total_books`` off the collected
+    row instead of running :func:`quality_gate`'s separate probe."""
+    summary = summary_aggregates(cleaned, **agg_cols).collect()[0].asDict()
+    if summary["total_books"] == 0:
+        raise ValueError("pipeline produced an empty DataFrame")
     html = render_html_report(format_summary(summary))
     send_report(html)
     return summary

@@ -44,7 +44,6 @@ def streaming_books_star(
     out = out_dir or os.path.join(
         tempfile.gettempdir(), f"books_star_{uuid.uuid4().hex[:8]}"
     )
-    fact_dir = os.path.join(out, "fact")
     ckpt = os.path.join(out, "_ckpt")
 
     raw = (
@@ -54,16 +53,7 @@ def streaming_books_star(
     )
 
     def land(batch_df: DataFrame, batch_id: int) -> None:
-        cleaned = clean_books(batch_df)
-        dims, fact = build_books_star(cleaned)
-        # idempotent: same batch id -> same partition dir -> overwrite
-        (
-            fact.withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(fact_dir)
-        )
+        land_one_batch(spark, batch_df, out, batch_id)
 
     from books2scrape_etl_spark.streaming.windows import _few_state_partitions
 
@@ -75,14 +65,15 @@ def streaming_books_star(
             .start()
         )
         q.awaitTermination()
-    return spark.read.parquet(fact_dir)
+    return spark.read.parquet(os.path.join(out, "fact"))
 
 
 def land_one_batch(spark: SparkSession, raw: DataFrame, out: str, batch_id: int) -> None:
     """The foreachBatch body as a callable — exposed so tests can replay
-    a batch id directly and assert idempotence without a second stream."""
-    cleaned = clean_books(raw)
-    _, fact = build_books_star(cleaned)
+    a batch id directly and assert idempotence without a second stream.
+    Idempotent: the same batch id lands in the same partition directory
+    and overwrites it."""
+    _, fact = build_books_star(clean_books(raw))
     (
         fact.withColumn("batch_id", F.lit(batch_id))
         .write.mode("overwrite")

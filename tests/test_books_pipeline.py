@@ -1,16 +1,22 @@
 """Golden-output tests for the books ETL transform on the boundary
 fixture (FIXTURES.md §A invariants)."""
 
+import shutil
+
 import pytest
 from pyspark.sql import functions as F
 
+from books2scrape_etl_spark import io
+from books2scrape_etl_spark.functions import util
 from books2scrape_etl_spark.plans.books import (
     DIM_SPECS,
     PRICE_EXCL,
     clean_books,
     transform_books,
 )
-from books2scrape_etl_spark.plans.report import SUMMARY_KEYS, summary_aggregates
+from books2scrape_etl_spark.plans.report import SUMMARY_KEYS, run_report, summary_aggregates
+from books2scrape_etl_spark.sources.fixtures_html import DETAIL_PAGES
+from books2scrape_etl_spark.sources.scrape import html_source, parse_books
 from tests.fixtures import BOOKS_RAW_ROWS, books_raw_df
 
 
@@ -105,3 +111,55 @@ def test_clean_currency_idempotent(spark):
     df = books_raw_df(spark).select(clean_currency(PRICE_EXCL).alias("once"))
     twice = df.select(clean_currency(F.col("once")).alias("twice"))
     assert [r["twice"] for r in twice.collect()] == [r["once"] for r in df.collect()]
+
+
+def _write_pages(spark, tmp_path):
+    """The fixture pages as a parquet table on disk, the shape of a
+    scheduled run (scrape to files, then parse)."""
+    pages = tmp_path / "pages"
+    html_source(spark, DETAIL_PAGES).write.parquet(str(pages / "books_html.parquet"))
+    return pages
+
+
+def _parsed_pages(spark, pages):
+    return parse_books(io.read_table(spark, "books_html", str(pages)))
+
+
+def test_transform_parses_pages_once(spark, tmp_path, monkeypatch):
+    """After transform_books returns, every output reads staged rows:
+    with the pages gone, the dim and fact writes and the report still
+    succeed with the fixture's golden summary. A lazy transform would
+    re-scan the pages here and fail on the missing files."""
+    monkeypatch.delenv("SMTP_HOST", raising=False)
+    pages = _write_pages(spark, tmp_path)
+    cleaned, dims, fact = transform_books(_parsed_pages(spark, pages))
+    shutil.rmtree(pages)
+
+    for name, df in [*dims.items(), ("fact_book_inventory", fact)]:
+        io.write_parquet(df, str(tmp_path / "out" / name))
+    assert spark.read.parquet(str(tmp_path / "out" / "fact_book_inventory")).count() == 3
+    summary = run_report(cleaned)
+    assert summary["total_books"] == 3
+    assert summary["total_categories"] == 3
+    assert float(summary["total_inventory_value"]) == pytest.approx(2364.04)
+    assert float(summary["avg_rating"]) == pytest.approx(3.0)
+    assert summary["books_in_stock"] == 3
+
+
+def test_transform_staging_footprint(spark, tmp_path):
+    """One transform_books run stages exactly three frames (parsed,
+    tiered, the star's grouping-sets table); a rerun on the same input
+    replaces those three instead of adding more."""
+    pages = _write_pages(spark, tmp_path)
+    before = set(util._STAGED)
+    raw = _parsed_pages(spark, pages)
+    cleaned, _, _ = transform_books(raw)
+    added = [k for k in util._STAGED if k not in before]
+    assert len(added) == 3
+    assert added[:2] == [raw.semanticHash(), cleaned.semanticHash()]
+
+    staged = set(util._STAGED)
+    cleaned2, _, _ = transform_books(_parsed_pages(spark, pages))
+    assert set(util._STAGED) == staged
+    assert list(util._STAGED)[-3:] == added
+    assert util._STAGED[added[1]] is cleaned2  # the rerun's frame replaced the first
