@@ -158,7 +158,7 @@ _reorder()
 # perf entry point (bench.py, scripts/bench_warm.py, the driver
 # contract's __spark_entry__.queries()/entry(), tests/conftest.py's
 # session fixture) calls this explicitly AFTER its own setup instead.
-# Idempotent; opt out with SPARK_GRAFT_GC_FREEZE=0.
+# Idempotent.
 _FROZEN = False
 
 
@@ -167,10 +167,7 @@ def freeze_registry_heap() -> None:
     if _FROZEN:
         return
     import gc
-    import os
 
-    if os.environ.get("SPARK_GRAFT_GC_FREEZE", "1") == "0":
-        return
     gc.collect()
     gc.freeze()
     _FROZEN = True

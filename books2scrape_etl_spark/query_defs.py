@@ -113,11 +113,12 @@ def scan_csv(spark: SparkSession, sf_dir: str) -> DataFrame:
     return read_csv(spark, path, TESTDATA_SCHEMAS["nation"])
 
 
-# Golden-VALUES oracle (the sources_suite 'parse' precedent, full-width):
-# the three detail fixtures in sources/fixtures_html.py are static repo
-# files and parse_books is deterministic, so the ENTIRE 13-column output
-# is pinned literally — every field hand-checkable against the fixture
-# HTML. A parse regression in any field flips the value hash.
+# Golden-VALUES oracle: the three detail fixtures in
+# sources/fixtures_html.py are static repo files and parse_books is
+# deterministic, so the ENTIRE 13-column output is pinned literally —
+# every field hand-checkable against the fixture HTML. A parse
+# regression in any field flips the value hash. sources_suite packs
+# all 13 columns through its slot table, so this is its oracle too.
 _PARSE_GOLDEN_SQL = """
 SELECT * FROM (VALUES
   ('A Light in the Attic', 'A classic collection.', 'Poetry',

@@ -16,11 +16,10 @@ window slots.
   qnames stay registered as rows-only singles; this suite is their
   in-window value signal.
 - ``agg_olap_suite`` — agg_rollup + agg_cube + grouping_sets +
-  agg_having union-normalized into one slot, oracle composed by
-  wrapping the singles' registered oracle SQL (the query_defs4 suite
-  contract: a value change in any component flips the suite hash).
+  agg_having in one slot (``suites.register_suite``: a value change
+  in any component flips the suite hash).
 - ``text_suite`` — text_stats + lang_dist + vocab_topk +
-  repetition_stats, same contract.
+  repetition_stats, same mechanism.
 """
 
 from __future__ import annotations
@@ -30,7 +29,8 @@ from pyspark.sql import functions as F
 
 from books2scrape_etl_spark.functions.agg import oracle_sum_exact, sum_exact
 from books2scrape_etl_spark.io import read_table
-from books2scrape_etl_spark.registry import ORACLE_SQL, QUERIES, register
+from books2scrape_etl_spark.registry import register
+from books2scrape_etl_spark.suites import register_suite, width
 # Registration-order deps: wraps agg/text oracles from defs 1/2/4.
 from books2scrape_etl_spark import query_defs as _dep1  # noqa: F401,E402
 from books2scrape_etl_spark import query_defs2 as _dep2  # noqa: F401,E402
@@ -212,153 +212,27 @@ def q_scale_invariants(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ---------------------------------------------------------------------
-# Packing suites for rotated-out returners (query_defs4 suite contract:
-# wrap the singles' registered oracle SQL so both sides stay
-# definitionally in sync with the standalone qnames).
-# ---------------------------------------------------------------------
+# A7 (rollup / cube / grouping sets) + HAVING in one window slot.
+register_suite("agg_olap_suite", width(2, 2, 1), {
+    "agg_rollup": {"s1": "l_returnflag", "s2": "l_linestatus", "n1": "n"},
+    "agg_cube": {"s1": "l_returnflag", "s2": "l_linestatus", "n1": "n"},
+    "grouping_sets": {
+        "s1": "l_returnflag", "s2": "l_linestatus", "n1": "n", "n2": "g_rf",
+    },
+    "agg_having": {"n1": "l_suppkey", "n2": "n_lines", "d1": "sum_qty"},
+})
 
-_AGG_OLAP_SQL = f"""
-SELECT 'rollup' AS kind, l_returnflag AS k1, l_linestatus AS k2,
-       CAST(NULL AS INTEGER) AS g, CAST(n AS BIGINT) AS n,
-       CAST(NULL AS DOUBLE) AS d
-FROM ({ORACLE_SQL["agg_rollup"]}) q_r
-UNION ALL
-SELECT 'cube', l_returnflag, l_linestatus, CAST(NULL AS INTEGER),
-       CAST(n AS BIGINT), CAST(NULL AS DOUBLE)
-FROM ({ORACLE_SQL["agg_cube"]}) q_c
-UNION ALL
-SELECT 'gsets', l_returnflag, l_linestatus, CAST(g_rf AS INTEGER),
-       CAST(n AS BIGINT), CAST(NULL AS DOUBLE)
-FROM ({ORACLE_SQL["grouping_sets"]}) q_g
-UNION ALL
-SELECT 'having', CAST(l_suppkey AS VARCHAR), CAST(NULL AS VARCHAR),
-       CAST(NULL AS INTEGER), CAST(n_lines AS BIGINT), CAST(sum_qty AS DOUBLE)
-FROM ({ORACLE_SQL["agg_having"]}) q_h
-"""
-
-
-@register("agg_olap_suite", _AGG_OLAP_SQL)
-def q_agg_olap_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A7 (rollup / cube / grouping sets) + HAVING in one window slot,
-    union-normalized to (kind, k1, k2, g, n, d). The singles stay
-    registered for targeted debugging."""
-    null_s = F.lit(None).cast("string")
-    rollup = QUERIES["agg_rollup"](spark, sf_dir).select(
-        F.lit("rollup").alias("kind"),
-        F.col("l_returnflag").alias("k1"),
-        F.col("l_linestatus").alias("k2"),
-        F.lit(None).cast("int").alias("g"),
-        F.col("n").cast("long").alias("n"),
-        F.lit(None).cast("double").alias("d"),
-    )
-    cube = QUERIES["agg_cube"](spark, sf_dir).select(
-        F.lit("cube").alias("kind"),
-        F.col("l_returnflag").alias("k1"),
-        F.col("l_linestatus").alias("k2"),
-        F.lit(None).cast("int").alias("g"),
-        F.col("n").cast("long").alias("n"),
-        F.lit(None).cast("double").alias("d"),
-    )
-    gsets = QUERIES["grouping_sets"](spark, sf_dir).select(
-        F.lit("gsets").alias("kind"),
-        F.col("l_returnflag").alias("k1"),
-        F.col("l_linestatus").alias("k2"),
-        F.col("g_rf").cast("int").alias("g"),
-        F.col("n").cast("long").alias("n"),
-        F.lit(None).cast("double").alias("d"),
-    )
-    having = QUERIES["agg_having"](spark, sf_dir).select(
-        F.lit("having").alias("kind"),
-        F.col("l_suppkey").cast("string").alias("k1"),
-        null_s.alias("k2"),
-        F.lit(None).cast("int").alias("g"),
-        F.col("n_lines").cast("long").alias("n"),
-        F.col("sum_qty").cast("double").alias("d"),
-    )
-    return rollup.union(cube).union(gsets).union(having)
-
-
-_TEXT_SUITE_SQL = f"""
-SELECT 'stats' AS kind, CAST(doc_id AS BIGINT) AS id, lang_pred AS s1, fp AS s2,
-       CAST(n_chars_measured AS BIGINT) AS n1, CAST(n_words AS BIGINT) AS n2,
-       CAST(n_tokens AS BIGINT) AS n3, CAST(punct_ratio AS DOUBLE) AS d1,
-       CAST(quality AS DOUBLE) AS d2, CAST(NULL AS DOUBLE) AS d3
-FROM ({ORACLE_SQL["text_stats"]}) q_s
-UNION ALL
-SELECT 'lang', CAST(NULL AS BIGINT), lang_pred, lang_tagged,
-       CAST(n_docs AS BIGINT), CAST(NULL AS BIGINT), CAST(NULL AS BIGINT),
-       CAST(NULL AS DOUBLE), CAST(NULL AS DOUBLE), CAST(NULL AS DOUBLE)
-FROM ({ORACLE_SQL["lang_dist"]}) q_l
-UNION ALL
-SELECT 'vocab', CAST(NULL AS BIGINT), token, CAST(NULL AS VARCHAR),
-       CAST(cnt AS BIGINT), CAST(rank AS BIGINT), CAST(NULL AS BIGINT),
-       CAST(NULL AS DOUBLE), CAST(NULL AS DOUBLE), CAST(NULL AS DOUBLE)
-FROM ({ORACLE_SQL["vocab_topk"]}) q_v
-UNION ALL
-SELECT 'rep', CAST(doc_id AS BIGINT), CAST(NULL AS VARCHAR),
-       CAST(NULL AS VARCHAR), CAST(n_words AS BIGINT),
-       CAST(keep AS BIGINT), CAST(NULL AS BIGINT),
-       CAST(dup_word_frac AS DOUBLE), CAST(top_word_frac AS DOUBLE),
-       CAST(top_bigram_frac AS DOUBLE)
-FROM ({ORACLE_SQL["repetition_stats"]}) q_p
-"""
-
-
-@register("text_suite", _TEXT_SUITE_SQL)
-def q_text_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """L4 text analysis in one window slot — text_stats + lang_dist +
-    vocab_topk + repetition_stats union-normalized to
-    (kind, id, s1, s2, n1, n2, n3, d1, d2, d3, b1)."""
-    null_s = F.lit(None).cast("string")
-    null_l = F.lit(None).cast("long")
-    null_d = F.lit(None).cast("double")
-    stats = QUERIES["text_stats"](spark, sf_dir).select(
-        F.lit("stats").alias("kind"),
-        F.col("doc_id").cast("long").alias("id"),
-        F.col("lang_pred").alias("s1"),
-        F.col("fp").alias("s2"),
-        F.col("n_chars_measured").cast("long").alias("n1"),
-        F.col("n_words").cast("long").alias("n2"),
-        F.col("n_tokens").cast("long").alias("n3"),
-        F.col("punct_ratio").cast("double").alias("d1"),
-        F.col("quality").cast("double").alias("d2"),
-        null_d.alias("d3"),
-    )
-    lang = QUERIES["lang_dist"](spark, sf_dir).select(
-        F.lit("lang").alias("kind"),
-        null_l.alias("id"),
-        F.col("lang_pred").alias("s1"),
-        F.col("lang_tagged").alias("s2"),
-        F.col("n_docs").cast("long").alias("n1"),
-        null_l.alias("n2"),
-        null_l.alias("n3"),
-        null_d.alias("d1"),
-        null_d.alias("d2"),
-        null_d.alias("d3"),
-    )
-    vocab = QUERIES["vocab_topk"](spark, sf_dir).select(
-        F.lit("vocab").alias("kind"),
-        null_l.alias("id"),
-        F.col("token").alias("s1"),
-        null_s.alias("s2"),
-        F.col("cnt").cast("long").alias("n1"),
-        F.col("rank").cast("long").alias("n2"),
-        null_l.alias("n3"),
-        null_d.alias("d1"),
-        null_d.alias("d2"),
-        null_d.alias("d3"),
-    )
-    rep = QUERIES["repetition_stats"](spark, sf_dir).select(
-        F.lit("rep").alias("kind"),
-        F.col("doc_id").cast("long").alias("id"),
-        null_s.alias("s1"),
-        null_s.alias("s2"),
-        F.col("n_words").cast("long").alias("n1"),
-        F.col("keep").cast("long").alias("n2"),
-        null_l.alias("n3"),
-        F.col("dup_word_frac").cast("double").alias("d1"),
-        F.col("top_word_frac").cast("double").alias("d2"),
-        F.col("top_bigram_frac").cast("double").alias("d3"),
-    )
-    return stats.union(lang).union(vocab).union(rep)
+# L4 text analysis in one window slot.
+register_suite("text_suite", width(2, 4, 3), {
+    "text_stats": {
+        "s1": "lang_pred", "s2": "fp",
+        "n1": "doc_id", "n2": "n_chars_measured", "n3": "n_words", "n4": "n_tokens",
+        "d1": "punct_ratio", "d2": "quality",
+    },
+    "lang_dist": {"s1": "lang_pred", "s2": "lang_tagged", "n1": "n_docs"},
+    "vocab_topk": {"s1": "token", "n1": "cnt", "n2": "rank"},
+    "repetition_stats": {
+        "n1": "doc_id", "n2": "n_words", "n3": "keep",
+        "d1": "dup_word_frac", "d2": "top_word_frac", "d3": "top_bigram_frac",
+    },
+})

@@ -479,7 +479,7 @@ def q_grouped_map(spark: SparkSession, sf_dir: str) -> DataFrame:
     "books_e2e",
     # golden-values oracle: the books fixture is not an oracle view, but
     # the end-to-end result over it is deterministic — one row pinned
-    # from the fixture pages (same rationale as sources_suite 'parse')
+    # from the fixture pages (same rationale as parse_struct_expand's)
     """
     SELECT CAST(3 AS BIGINT) AS total_books,
            CAST(3 AS BIGINT) AS total_categories,

@@ -16,6 +16,10 @@ covers the full SURVEY.md §2 component list:
 - ``topk_ordered``          = limit_topk + sort_order (O1, O2)
 - ``json_map_ops``          = json_extract + map_ops (§2.8)
 
+distinct_suite, semi_anti_suite and set_ops_suite are packing suites
+(``suites.register_suite``: a union of the registered singles); the
+columns_*_suite and window_suite qnames are fused one-scan plans.
+
 plus ``asof_join_general`` — the two-table as-of join operator
 (operators/asof.py) checked against DuckDB's native ASOF LEFT JOIN.
 """
@@ -35,6 +39,9 @@ from books2scrape_etl_spark.functions.columns import (
 )
 from books2scrape_etl_spark.io import read_table
 from books2scrape_etl_spark.registry import register
+from books2scrape_etl_spark.suites import register_suite, width
+# Registration-order dep: the packing suites wrap defs1 singles.
+from books2scrape_etl_spark import query_defs as _dep1  # noqa: F401,E402
 
 _AVAIL_SQL = """CASE WHEN p_size % 3 = 0
                      THEN 'In stock (' || p_size || ' available)'
@@ -103,91 +110,26 @@ def q_columns_lineitem_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "distinct_suite",
-    """
-    SELECT 'multi' AS kind, c_mktsegment AS k1, CAST(c_nationkey AS VARCHAR) AS k2
-    FROM (SELECT DISTINCT c_mktsegment, c_nationkey FROM customer)
-    UNION ALL
-    SELECT 'single' AS kind, o_orderpriority AS k1, NULL AS k2
-    FROM (SELECT DISTINCT o_orderpriority FROM orders)
-    """,
-)
-def q_distinct_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """D1 + D2 — multi- and single-column DISTINCT
-    (transformation_pipeline.py:72-90), tagged and unioned."""
-    c = read_table(spark, "customer", sf_dir)
-    o = read_table(spark, "orders", sf_dir)
-    multi = (
-        c.select("c_mktsegment", "c_nationkey")
-        .distinct()
-        .select(
-            F.lit("multi").alias("kind"),
-            F.col("c_mktsegment").alias("k1"),
-            F.col("c_nationkey").cast("string").alias("k2"),
-        )
-    )
-    single = (
-        o.select("o_orderpriority")
-        .distinct()
-        .select(
-            F.lit("single").alias("kind"),
-            F.col("o_orderpriority").alias("k1"),
-            F.lit(None).cast("string").alias("k2"),
-        )
-    )
-    return multi.unionByName(single)
+# D1 + D2 — multi- and single-column DISTINCT
+# (transformation_pipeline.py:72-90).
+register_suite("distinct_suite", width(1, 1, 0), {
+    "distinct_multi": {"s1": "c_mktsegment", "n1": "c_nationkey"},
+    "distinct_single": {"s1": "o_orderpriority"},
+})
 
+# J6 — left-semi (EXISTS) and left-anti (NOT EXISTS) sides of the same
+# customer/orders pair.
+register_suite("semi_anti_suite", width(1, 1, 0), {
+    "join_semi": {"s1": "c_name", "n1": "c_custkey"},
+    "join_anti": {"s1": "c_name", "n1": "c_custkey"},
+})
 
-@register(
-    "semi_anti_suite",
-    """
-    SELECT 'semi' AS side, c_custkey, c_name FROM customer c
-    WHERE EXISTS (SELECT 1 FROM orders o
-                  WHERE o.o_custkey = c.c_custkey AND o.o_totalprice > 100000)
-    UNION ALL
-    SELECT 'anti' AS side, c_custkey, c_name FROM customer c
-    WHERE NOT EXISTS (SELECT 1 FROM orders o WHERE o.o_custkey = c.c_custkey)
-    """,
-)
-def q_semi_anti_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """J6 — left-semi (EXISTS) and left-anti (NOT EXISTS) sides of the
-    same customer/orders pair, tagged and unioned."""
-    cust = read_table(spark, "customer", sf_dir)
-    orders = read_table(spark, "orders", sf_dir)
-    big = orders.where(F.col("o_totalprice") > 100000)
-    semi = (
-        cust.join(big, cust["c_custkey"] == big["o_custkey"], "left_semi")
-        .select(F.lit("semi").alias("side"), "c_custkey", "c_name")
-    )
-    anti = (
-        cust.join(orders, cust["c_custkey"] == orders["o_custkey"], "left_anti")
-        .select(F.lit("anti").alias("side"), "c_custkey", "c_name")
-    )
-    return semi.unionByName(anti)
-
-
-@register(
-    "set_ops_suite",
-    """
-    SELECT 'union' AS op, nationkey FROM
-      (SELECT c_nationkey AS nationkey FROM customer UNION SELECT s_nationkey FROM supplier)
-    UNION ALL
-    SELECT 'intersect' AS op, nationkey FROM
-      (SELECT c_nationkey AS nationkey FROM customer INTERSECT SELECT s_nationkey FROM supplier)
-    UNION ALL
-    SELECT 'except' AS op, nationkey FROM
-      (SELECT c_nationkey AS nationkey FROM customer EXCEPT SELECT s_nationkey FROM supplier)
-    """,
-)
-def q_set_ops_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """O3 — UNION / INTERSECT / EXCEPT (distinct semantics), tagged."""
-    c = read_table(spark, "customer", sf_dir).select(F.col("c_nationkey").alias("nationkey"))
-    s = read_table(spark, "supplier", sf_dir).select(F.col("s_nationkey").alias("nationkey"))
-    u = c.union(s).distinct().select(F.lit("union").alias("op"), "nationkey")
-    i = c.intersect(s).select(F.lit("intersect").alias("op"), "nationkey")
-    e = c.subtract(s).select(F.lit("except").alias("op"), "nationkey")
-    return u.unionByName(i).unionByName(e)
+# O3 — UNION / INTERSECT / EXCEPT (distinct semantics).
+register_suite("set_ops_suite", width(0, 1, 0), {
+    "set_union": {"n1": "nationkey"},
+    "set_intersect": {"n1": "nationkey"},
+    "set_except": {"n1": "nationkey"},
+})
 
 
 @register(

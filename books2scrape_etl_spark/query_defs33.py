@@ -6,26 +6,13 @@ one 50-slot driver window can hold as singles. These five suites pack
 keep direct slots) so every wave-12–22 qname earns a hard driver row
 in round 8.
 
-Suite contract (same as query_defs10's; helpers live in suites.py,
-shared with query_defs35): each section re-runs the
-single's registered Spark callable and wraps the single's registered
-oracle SQL verbatim, so both sides stay definitionally in sync with
-the standalone qnames. On top of that, BOTH the Spark projection and
-the oracle projection here are generated from ONE slot-mapping table
-per section — the normalization itself cannot desync.
-
-Normalized schema per suite: ``sec`` (section = the single's qname)
-plus string slots s1.., BIGINT slots n1.., DOUBLE slots d1.. — unused
-slots NULL of the right type. Doubles pass through unchanged (they
-are hash-safe in the singles by construction); narrower ints are cast
-to BIGINT on both sides.
+Each suite is one slot table passed to ``suites.register_suite``
+(the suite contract and the normalized schema are documented there).
+The tables stay module constants: tests import them.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
-
-from books2scrape_etl_spark.registry import register
 # Registration-order deps: each suite wraps oracles from waves 12-22.
 from books2scrape_etl_spark import query_defs12 as _dep12  # noqa: F401,E402
 from books2scrape_etl_spark import query_defs13 as _dep13  # noqa: F401,E402
@@ -39,11 +26,7 @@ from books2scrape_etl_spark import query_defs20 as _dep20  # noqa: F401,E402
 from books2scrape_etl_spark import query_defs21 as _dep21  # noqa: F401,E402
 from books2scrape_etl_spark import query_defs22 as _dep22  # noqa: F401,E402
 
-from books2scrape_etl_spark.suites import (  # noqa: E402
-    suite_df as _suite_df,
-    suite_sql as _suite_sql,
-    width as _width,
-)
+from books2scrape_etl_spark.suites import register_suite, width as _width  # noqa: E402
 
 
 # ---------------------------------------------------------------------
@@ -83,15 +66,11 @@ _W12_SECTIONS: dict[str, dict[str, str]] = {
 }
 
 
-@register("wave12_suite", _suite_sql(_W12, _W12_SECTIONS))
-def q_wave12_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Wave-12 analytics in one window slot: rolling_active (aligned
-    DAU/WAU), pmi_collocations, robust_outliers (median/MAD),
-    quantile_normalize (percent_rank), gini_diversity, source_overlap
-    (pairwise vocab Jaccard), grouped_regression (closed-form OLS).
-    Each section is the single's own plan; the singles stay registered
-    for targeted debugging."""
-    return _suite_df(spark, sf_dir, _W12, _W12_SECTIONS)
+# Wave-12 analytics in one window slot: rolling_active (aligned
+# DAU/WAU), pmi_collocations, robust_outliers (median/MAD),
+# quantile_normalize (percent_rank), gini_diversity, source_overlap
+# (pairwise vocab Jaccard), grouped_regression (closed-form OLS).
+register_suite("wave12_suite", _W12, _W12_SECTIONS)
 
 
 # ---------------------------------------------------------------------
@@ -125,13 +104,11 @@ _W1314_SECTIONS: dict[str, dict[str, str]] = {
 }
 
 
-@register("wave13_14_suite", _suite_sql(_W1314, _W1314_SECTIONS))
-def q_wave13_14_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Wave-13/14 analytics in one window slot: event_transitions
-    (Markov matrix), skyline_pareto, assoc_rules (confidence/lift),
-    chi_square contingency, acf_lags (autocorrelation), ab_lift
-    (two-proportion z), session_paths (top gap-session type paths)."""
-    return _suite_df(spark, sf_dir, _W1314, _W1314_SECTIONS)
+# Wave-13/14 analytics in one window slot: event_transitions (Markov
+# matrix), skyline_pareto, assoc_rules (confidence/lift), chi_square
+# contingency, acf_lags (autocorrelation), ab_lift (two-proportion z),
+# session_paths (top gap-session type paths).
+register_suite("wave13_14_suite", _W1314, _W1314_SECTIONS)
 
 
 # ---------------------------------------------------------------------
@@ -163,13 +140,11 @@ _W1516_SECTIONS: dict[str, dict[str, str]] = {
 }
 
 
-@register("wave15_16_suite", _suite_sql(_W1516, _W1516_SECTIONS))
-def q_wave15_16_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Wave-15/16 analytics in one window slot: rfm_segments,
-    benford_digits (first-digit law), hll_distinct (sketch error-bound
-    audit), ks_test, welch_ttest, graph_walks (deterministic
-    hash-driven random walks)."""
-    return _suite_df(spark, sf_dir, _W1516, _W1516_SECTIONS)
+# Wave-15/16 analytics in one window slot: rfm_segments,
+# benford_digits (first-digit law), hll_distinct (sketch error-bound
+# audit), ks_test, welch_ttest, graph_walks (deterministic hash-driven
+# random walks).
+register_suite("wave15_16_suite", _W1516, _W1516_SECTIONS)
 
 
 # ---------------------------------------------------------------------
@@ -207,13 +182,11 @@ _W2021_SECTIONS: dict[str, dict[str, str]] = {
 }
 
 
-@register("wave20_21_suite", _suite_sql(_W2021, _W2021_SECTIONS))
-def q_wave20_21_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Wave-20/21 analytics in one window slot: rolling_slope,
-    funnel_latency, skew_profile, ship_delay, interarrival_stats,
-    dup_rate_by_source, dow_profile — all percentile/rollup shapes
-    whose doubles are hash-safe in the singles."""
-    return _suite_df(spark, sf_dir, _W2021, _W2021_SECTIONS)
+# Wave-20/21 analytics in one window slot: rolling_slope,
+# funnel_latency, skew_profile, ship_delay, interarrival_stats,
+# dup_rate_by_source, dow_profile — all percentile/rollup shapes whose
+# doubles are hash-safe in the singles.
+register_suite("wave20_21_suite", _W2021, _W2021_SECTIONS)
 
 
 # ---------------------------------------------------------------------
@@ -239,10 +212,8 @@ _W22_SECTIONS: dict[str, dict[str, str]] = {
 }
 
 
-@register("wave22_suite", _suite_sql(_W22, _W22_SECTIONS))
-def q_wave22_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Wave-22 analytics in one window slot: hhi_by_segment
-    (concentration), pareto_coverage (top-N revenue share),
-    ngram_containment (cross-source 3-gram containment), anomaly_days
-    (z-scored daily volume)."""
-    return _suite_df(spark, sf_dir, _W22, _W22_SECTIONS)
+# Wave-22 analytics in one window slot: hhi_by_segment
+# (concentration), pareto_coverage (top-N revenue share),
+# ngram_containment (cross-source 3-gram containment), anomaly_days
+# (z-scored daily volume).
+register_suite("wave22_suite", _W22, _W22_SECTIONS)

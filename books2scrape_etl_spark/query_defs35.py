@@ -10,14 +10,9 @@ recorded in queries.py last round. Round 12 adds two out-of-cohort
 sections to wave30_32_suite — sim_lsh + sim_ivf (VERDICT r11 item 3's
 sanctioned pull-forward; see that suite's comment block).
 
-Suite contract (query_defs33's, helpers in suites.py): each section
-re-runs the single's registered Spark callable and wraps the single's
-registered oracle SQL verbatim — with slot sources qualified as
-``sub_{name}.{src}`` — and BOTH projections are generated from ONE
-slot-mapping table per section, so the normalization cannot desync.
-Normalized schema: ``sec`` + string slots s1.., BIGINT n1.., DOUBLE
-d1.. (unused slots NULL of the right type; doubles pass through
-unchanged — hash-safe in the singles by construction).
+Each suite is one slot table passed to ``suites.register_suite``
+(the suite contract and the normalized schema are documented there).
+The tables stay module constants: tests import them.
 """
 
 from __future__ import annotations
@@ -25,11 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from books2scrape_etl_spark.registry import register
-from books2scrape_etl_spark.suites import (
-    suite_df as _suite_df,
-    suite_sql as _suite_sql,
-    width as _width,
-)
+from books2scrape_etl_spark.suites import register_suite, width as _width
 
 # Registration-order deps: each suite wraps oracles from waves 23-32;
 # wave30_32_suite additionally wraps sim_lsh (query_defs) and sim_ivf
@@ -93,17 +84,13 @@ _W2324_SECTIONS: dict[str, dict[str, str]] = {
 }
 
 
-@register("wave23_24_suite", _suite_sql(_W2324, _W2324_SECTIONS))
-def q_wave23_24_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Waves 23+24 in one window slot: calendar_dim (explode(sequence)
-    date dimension), apportion_budget (Hamilton largest-remainder),
-    winsorize (exact counting quantiles), zone_maps (file-skipping
-    stats), rank_correlation (Spearman via dense_ids_scale),
-    weighted_quantiles (cumulative-weight cuts), growth_mom_yoy
-    (self-join month neighbors), mode_stats (deterministic-tiebreak
-    mode). Each section is the single's own plan; the singles stay
-    registered for targeted debugging."""
-    return _suite_df(spark, sf_dir, _W2324, _W2324_SECTIONS)
+# Waves 23+24 in one window slot: calendar_dim (explode(sequence) date
+# dimension), apportion_budget (Hamilton largest-remainder), winsorize
+# (exact counting quantiles), zone_maps (file-skipping stats),
+# rank_correlation (Spearman via dense_ids_scale), weighted_quantiles
+# (cumulative-weight cuts), growth_mom_yoy (self-join month
+# neighbors), mode_stats (deterministic-tiebreak mode).
+register_suite("wave23_24_suite", _W2324, _W2324_SECTIONS)
 
 
 # ---------------------------------------------------------------------
@@ -135,15 +122,13 @@ _W2526_SECTIONS: dict[str, dict[str, str]] = {
 }
 
 
-@register("wave25_26_suite", _suite_sql(_W2526, _W2526_SECTIONS))
-def q_wave25_26_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Waves 25+26 in one window slot: attribution_last_touch (LOCF
-    credit), streak_islands (gaps-and-islands), decile_transition
-    (quintile mobility matrix), reconcile_daily (full-outer audit),
-    twap_value (time-weighted average), hazard_curve (survival
-    hazard), table_checksum (order-free xor fingerprints),
-    topk_with_ties (RANK ≤ k). Sections re-run the singles' plans."""
-    return _suite_df(spark, sf_dir, _W2526, _W2526_SECTIONS)
+# Waves 25+26 in one window slot: attribution_last_touch (LOCF
+# credit), streak_islands (gaps-and-islands), decile_transition
+# (quintile mobility matrix), reconcile_daily (full-outer audit),
+# twap_value (time-weighted average), hazard_curve (survival hazard),
+# table_checksum (order-free xor fingerprints), topk_with_ties (RANK ≤
+# k).
+register_suite("wave25_26_suite", _W2526, _W2526_SECTIONS)
 
 
 # ---------------------------------------------------------------------
@@ -194,16 +179,13 @@ _W2729_SECTIONS: dict[str, dict[str, str]] = {
 }
 
 
-@register("wave27_29_suite", _suite_sql(_W2729, _W2729_SECTIONS))
-def q_wave27_29_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Waves 27–29 in one window slot: ttr_stats (type-token ratio),
-    group_split (hash-deterministic user splits), histogram_2d,
-    seasonal_index (month-of-year index), discount_qty_corr
-    (integer-moment Pearson), adoption_curve (first-touch cumsum),
-    burstiness (Fano/CV), max_drawdown (prefix-max gap),
-    cdf_probes (threshold CDF), rank_shift (corpus-half token rank
-    deltas). Sections re-run the singles' plans."""
-    return _suite_df(spark, sf_dir, _W2729, _W2729_SECTIONS)
+# Waves 27–29 in one window slot: ttr_stats (type-token ratio),
+# group_split (hash-deterministic user splits), histogram_2d,
+# seasonal_index (month-of-year index), discount_qty_corr (integer-
+# moment Pearson), adoption_curve (first-touch cumsum), burstiness
+# (Fano/CV), max_drawdown (prefix-max gap), cdf_probes (threshold
+# CDF), rank_shift (corpus-half token rank deltas).
+register_suite("wave27_29_suite", _W2729, _W2729_SECTIONS)
 
 
 # ---------------------------------------------------------------------
@@ -245,18 +227,15 @@ _W3032_SECTIONS: dict[str, dict[str, str]] = {
 }
 
 
-@register("wave30_32_suite", _suite_sql(_W3032, _W3032_SECTIONS))
-def q_wave30_32_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Waves 30–32 in one window slot: bootstrap_se (deterministic-hash
-    bootstrap replicas), dedup_keep_best (quality-ranked survivor),
-    k_anonymity (QI group-size audit), data_freshness (per-type lag),
-    fd_audit (functional-dependency violations). change_point stays a
-    direct window single (its CUSUM scan is the heavy of the group).
-    Since round 12 the suite also packs sim_lsh + sim_ivf (the ANN
-    invariant-law checks — VERDICT r11 item 3's pull-forward), giving
-    both their first hard driver rows. Sections re-run the singles'
-    plans."""
-    return _suite_df(spark, sf_dir, _W3032, _W3032_SECTIONS)
+# Waves 30–32 in one window slot: bootstrap_se (deterministic-hash
+# bootstrap replicas), dedup_keep_best (quality-ranked survivor),
+# k_anonymity (QI group-size audit), data_freshness (per-type lag),
+# fd_audit (functional-dependency violations). change_point stays a
+# direct window single (its CUSUM scan is the heavy of the group).
+# Since round 12 the suite also packs sim_lsh + sim_ivf (the ANN
+# invariant-law checks — VERDICT r11 item 3's pull-forward), giving
+# both their first hard driver rows.
+register_suite("wave30_32_suite", _W3032, _W3032_SECTIONS)
 
 
 # ---------------------------------------------------------------------

@@ -16,7 +16,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from books2scrape_etl_spark.io import read_table
-from books2scrape_etl_spark.registry import register
+from books2scrape_etl_spark.registry import ORACLE_SQL, QUERIES, register
+from books2scrape_etl_spark.suites import register_suite, width
 # Registration-order deps: this module wraps oracles registered by
 # the modules below, so a DIRECT import of this module (tests) must
 # pull them first (queries.py already imports everything in order).
@@ -562,125 +563,32 @@ def q_dedup_cc_star(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ---------------------------------------------------------------------
-# Consolidation suites (same trick as scalar_funcs_suite): pack several
-# single-operator qnames into ONE oracle-paired qname so each frees a
-# slot in the driver's 50-entry correctness window for the wave-4
-# training ops. The underlying singles stay registered (and land right
-# after the window), and each suite row normalizes the component's full
-# output into a (kind, k, ...) union — a value change in ANY component
-# still flips the suite hash. Oracle SQL is composed by wrapping the
-# singles' already-registered oracle strings, so both sides stay
-# definitionally in sync with the standalone qnames.
-# ---------------------------------------------------------------------
+# S1-S7 in one window slot: range source, CSV sink→scan round trip
+# (explicit schema), parquet scan with pushdown, plus the two HTML
+# stages on the offline fixtures — parse_struct_expand (S2: detail HTML
+# → typed struct, all 13 columns) and explode_links (S3: listing HTML
+# → exploded detail URLs), whose oracles are golden VALUES pinned from
+# the fixture pages (mojibake included, extract_pipeline.py:10-51).
+register_suite("sources_suite", width(10, 3, 1), {
+    "range_source": {"s1": "url", "n1": "page_no"},
+    "scan_csv": {"s1": "n_name", "n1": "n_nationkey", "n2": "n_regionkey"},
+    "scan_parquet": {"s1": "p_name", "n1": "p_partkey", "d1": "p_retailprice"},
+    "parse_struct_expand": {
+        "s1": "Title", "s2": "Description", "s3": "Category",
+        "s4": "Image_link", "s5": "UPC", "s6": "Product Type",
+        "s7": "Price (excl. tax)", "s8": "Price (incl. tax)", "s9": "Tax",
+        "s10": "Number of reviews",
+        "n1": "No_of_books_in_Stock", "n2": "Rating", "n3": "Is_in_Stock",
+    },
+    "explode_links": {"s1": "listing_url", "s2": "url"},
+})
 
-from books2scrape_etl_spark.registry import ORACLE_SQL, QUERIES  # noqa: E402
-
-
-@register(
-    "sources_suite",
-    f"""
-    SELECT 'range' AS kind, CAST(page_no AS BIGINT) AS k, url AS s,
-           CAST(NULL AS DOUBLE) AS v
-    FROM ({ORACLE_SQL["range_source"]})
-    UNION ALL
-    SELECT 'csv', CAST(n_nationkey AS BIGINT),
-           n_name || '|' || CAST(n_regionkey AS VARCHAR), CAST(NULL AS DOUBLE)
-    FROM ({ORACLE_SQL["scan_csv"]})
-    UNION ALL
-    SELECT 'parquet', CAST(p_partkey AS BIGINT), p_name,
-           CAST(p_retailprice AS DOUBLE)
-    FROM ({ORACLE_SQL["scan_parquet"]})
-    UNION ALL
-    SELECT 'parse', k, s, v FROM (VALUES
-      (CAST(22 AS BIGINT), 'A Light in the Attic|abc123|Poetry|Â£51.77',
-       CAST(3 AS DOUBLE)),
-      (CAST(20 AS BIGINT),
-       'Tipping the Velvet|def456|Historical Fiction|Â£53.74',
-       CAST(1 AS DOUBLE)),
-      (CAST(3 AS BIGINT), 'Soumission|ghi789|Fiction|Â£50.10',
-       CAST(5 AS DOUBLE))) AS tp(k, s, v)
-    UNION ALL
-    SELECT 'links', CAST(NULL AS BIGINT), s, CAST(NULL AS DOUBLE) FROM (VALUES
-      ('http://books.toscrape.com/catalogue/page-1.html|http://books.toscrape.com/catalogue/a-light-in-the-attic_1000/index.html'),
-      ('http://books.toscrape.com/catalogue/page-1.html|http://books.toscrape.com/catalogue/tipping-the-velvet_999/index.html'),
-      ('http://books.toscrape.com/catalogue/page-1.html|http://books.toscrape.com/catalogue/soumission_998/index.html'),
-      ('http://books.toscrape.com/catalogue/page-2.html|http://books.toscrape.com/catalogue/sharp-objects_997/index.html')) AS tl(s)
-    """,
-)
-def q_sources_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """S1-S7 in one window slot: range source, CSV sink→scan round trip
-    (explicit schema), parquet scan with pushdown, PLUS the two HTML
-    stages run against the offline fixtures with golden-value oracles —
-    'parse' (S2: detail HTML → typed struct; Title|UPC|Category|price
-    packed into s, stock into k, rating into v) and 'links' (S3:
-    listing HTML → exploded detail URLs). The golden VALUES are pinned
-    from the fixture pages (the reference's own dirty data, mojibake
-    included, extract_pipeline.py:10-51), so the parse UDFs get a hash
-    signal, not just a row count. Union-normalized to (kind, k, s, v)."""
-    null_d = F.lit(None).cast("double")
-    r = QUERIES["range_source"](spark, sf_dir).select(
-        F.lit("range").alias("kind"),
-        F.col("page_no").cast("long").alias("k"),
-        F.col("url").alias("s"),
-        null_d.alias("v"),
-    )
-    c = QUERIES["scan_csv"](spark, sf_dir).select(
-        F.lit("csv").alias("kind"),
-        F.col("n_nationkey").cast("long").alias("k"),
-        F.concat_ws("|", F.col("n_name"), F.col("n_regionkey").cast("string")).alias("s"),
-        null_d.alias("v"),
-    )
-    p = QUERIES["scan_parquet"](spark, sf_dir).select(
-        F.lit("parquet").alias("kind"),
-        F.col("p_partkey").cast("long").alias("k"),
-        F.col("p_name").alias("s"),
-        F.col("p_retailprice").cast("double").alias("v"),
-    )
-    bk = QUERIES["parse_struct_expand"](spark, sf_dir).select(
-        F.lit("parse").alias("kind"),
-        F.col("No_of_books_in_Stock").cast("long").alias("k"),
-        F.concat_ws(
-            "|", "Title", "UPC", "Category", F.col("`Price (excl. tax)`")
-        ).alias("s"),
-        F.col("Rating").cast("double").alias("v"),
-    )
-    lk = QUERIES["explode_links"](spark, sf_dir).select(
-        F.lit("links").alias("kind"),
-        F.lit(None).cast("long").alias("k"),
-        F.concat_ws("|", "listing_url", "url").alias("s"),
-        null_d.alias("v"),
-    )
-    return r.union(c).union(p).union(bk).union(lk)
-
-
-@register(
-    "clean_suite",
-    f"""
-    SELECT 'currency' AS kind, CAST(p_partkey AS BIGINT) AS k,
-           CAST(NULL AS VARCHAR) AS s, CAST(price_clean AS DOUBLE) AS v
-    FROM ({ORACLE_SQL["clean_currency"]})
-    UNION ALL
-    SELECT 'desc', CAST(doc_id AS BIGINT), description, CAST(NULL AS DOUBLE)
-    FROM ({ORACLE_SQL["clean_description"]})
-    """,
-)
-def q_clean_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """P1 + P2 in one window slot: currency clean and description-suffix
-    strip, union-normalized to (kind, k, s, v)."""
-    cur = QUERIES["clean_currency"](spark, sf_dir).select(
-        F.lit("currency").alias("kind"),
-        F.col("p_partkey").cast("long").alias("k"),
-        F.lit(None).cast("string").alias("s"),
-        F.col("price_clean").cast("double").alias("v"),
-    )
-    des = QUERIES["clean_description"](spark, sf_dir).select(
-        F.lit("desc").alias("kind"),
-        F.col("doc_id").cast("long").alias("k"),
-        F.col("description").alias("s"),
-        F.lit(None).cast("double").alias("v"),
-    )
-    return cur.union(des)
+# P1 + P2 in one window slot: currency clean and description-suffix
+# strip.
+register_suite("clean_suite", width(1, 1, 1), {
+    "clean_currency": {"n1": "p_partkey", "d1": "price_clean"},
+    "clean_description": {"s1": "description", "n1": "doc_id"},
+})
 
 
 # The suite's 'hopping' section replays the SAME oracle as the
@@ -1189,82 +1097,19 @@ def q_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     return stratified_sample(docs, ["lang", "source"], "doc_id", 20)
 
 
-@register(
-    "subquery_suite",
-    f"""
-    SELECT 'scalar' AS kind, CAST(o_orderkey AS BIGINT) AS k,
-           CAST(NULL AS VARCHAR) AS s, CAST(o_totalprice AS DOUBLE) AS v
-    FROM ({ORACLE_SQL["scalar_subquery"]})
-    UNION ALL
-    SELECT 'corr', CAST(c_custkey AS BIGINT), c_name, CAST(NULL AS DOUBLE)
-    FROM ({ORACLE_SQL["correlated_subquery"]})
-    UNION ALL
-    SELECT 'in', CAST(s_suppkey AS BIGINT), s_name, CAST(NULL AS DOUBLE)
-    FROM ({ORACLE_SQL["in_subquery"]})
-    """,
-)
-def q_subquery_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Scalar + correlated + IN subqueries in one window slot
-    (union-normalized; the singles stay registered after the window)."""
-    null_s = F.lit(None).cast("string")
-    null_d = F.lit(None).cast("double")
-    a = QUERIES["scalar_subquery"](spark, sf_dir).select(
-        F.lit("scalar").alias("kind"),
-        F.col("o_orderkey").cast("long").alias("k"),
-        null_s.alias("s"),
-        F.col("o_totalprice").cast("double").alias("v"),
-    )
-    b = QUERIES["correlated_subquery"](spark, sf_dir).select(
-        F.lit("corr").alias("kind"),
-        F.col("c_custkey").cast("long").alias("k"),
-        F.col("c_name").alias("s"),
-        null_d.alias("v"),
-    )
-    c = QUERIES["in_subquery"](spark, sf_dir).select(
-        F.lit("in").alias("kind"),
-        F.col("s_suppkey").cast("long").alias("k"),
-        F.col("s_name").alias("s"),
-        null_d.alias("v"),
-    )
-    return a.union(b).union(c)
+# Scalar + correlated + IN subqueries in one window slot.
+register_suite("subquery_suite", width(1, 1, 1), {
+    "scalar_subquery": {"n1": "o_orderkey", "d1": "o_totalprice"},
+    "correlated_subquery": {"s1": "c_name", "n1": "c_custkey"},
+    "in_subquery": {"s1": "s_name", "n1": "s_suppkey"},
+})
 
-
-@register(
-    "pivot_unpivot_suite",
-    f"""
-    SELECT 'pivot' AS kind, CAST(NULL AS BIGINT) AS k,
-           l_returnflag || '|O' AS s, CAST(O AS DOUBLE) AS v
-    FROM ({ORACLE_SQL["pivot"]})
-    UNION ALL
-    SELECT 'pivot', CAST(NULL AS BIGINT), l_returnflag || '|F', CAST(F AS DOUBLE)
-    FROM ({ORACLE_SQL["pivot"]})
-    UNION ALL
-    SELECT 'unpivot', CAST(o_orderkey AS BIGINT), measure, CAST(val AS DOUBLE)
-    FROM ({ORACLE_SQL["unpivot"]})
-    """,
-)
-def q_pivot_unpivot_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pivot + unpivot in one window slot: the pivoted counts re-linearized
-    to (flag|status, count) rows, plus the stack()-unpivoted measures."""
-    null_k = F.lit(None).cast("long")
-    pv = QUERIES["pivot"](spark, sf_dir)
-    p_rows = []
-    for status in ["O", "F"]:
-        p_rows.append(
-            pv.select(
-                F.lit("pivot").alias("kind"),
-                null_k.alias("k"),
-                F.concat(F.col("l_returnflag"), F.lit(f"|{status}")).alias("s"),
-                F.col(status).cast("double").alias("v"),
-            )
-        )
-    up = QUERIES["unpivot"](spark, sf_dir).select(
-        F.lit("unpivot").alias("kind"),
-        F.col("o_orderkey").cast("long").alias("k"),
-        F.col("measure").alias("s"),
-        F.col("val").cast("double").alias("v"),
-    )
-    return p_rows[0].union(p_rows[1]).union(up)
+# Pivot + unpivot in one window slot: the pivoted O/F counts per flag,
+# plus the stack()-unpivoted measures.
+register_suite("pivot_unpivot_suite", width(1, 2, 1), {
+    "pivot": {"s1": "l_returnflag", "n1": "O", "n2": "F"},
+    "unpivot": {"s1": "measure", "n1": "o_orderkey", "d1": "val"},
+})
 
 
 _EMBED_GEN_SQL = """

@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 
 from books2scrape_etl_spark.io import read_table
 from books2scrape_etl_spark.registry import register
+from books2scrape_etl_spark.suites import register_suite, width
 # Registration-order dep: wraps sampling oracles from query_defs4.
 from books2scrape_etl_spark import query_defs4 as _dep4  # noqa: F401,E402
 from books2scrape_etl_spark.query_defs import BRUTE_TOPK_SQL
@@ -247,87 +248,21 @@ def q_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 # sampling suite — split + shards + stratified + weighted in one window
 # slot (VERDICT r3 item: shuffle_shards / stratified_sample were
 # oracle-paired but outside the 50-entry window; the suite gives all
-# four sampling ops one in-window hash row)
+# four sampling ops one in-window hash row). All four are hash-rule
+# projections (no RNG): the oracles re-derive every document's split,
+# shard+position, stratum rank and kept/weight independently.
 # =====================================================================
 
-
-def _register_sampling_suite() -> None:
-    # composed AFTER the singles register (import-order dependency on
-    # their ORACLE_SQL entries, same pattern as query_defs4's suites)
-    from books2scrape_etl_spark.registry import ORACLE_SQL
-
-    oracle = f"""
-    SELECT 'split' AS kind, CAST(doc_id AS BIGINT) AS k1,
-           CAST(bucket AS BIGINT) AS k2, split AS s,
-           CAST(NULL AS INTEGER) AS n, CAST(NULL AS DOUBLE) AS v
-    FROM ({ORACLE_SQL["split_train_test"]})
-    UNION ALL
-    SELECT 'shard', CAST(doc_id AS BIGINT), CAST(sort_key AS BIGINT),
-           CAST(shard AS VARCHAR), CAST(pos AS INTEGER), CAST(NULL AS DOUBLE)
-    FROM ({ORACLE_SQL["shuffle_shards"]})
-    UNION ALL
-    SELECT 'strat', CAST(doc_id AS BIGINT), CAST(NULL AS BIGINT),
-           lang || '|' || source, CAST(rn AS INTEGER), CAST(NULL AS DOUBLE)
-    FROM ({ORACLE_SQL["stratified_sample"]})
-    UNION ALL
-    SELECT 'wsamp', CAST(doc_id AS BIGINT), CAST(n_chars AS BIGINT),
-           CAST(NULL AS VARCHAR), CAST(NULL AS INTEGER), w
-    FROM ({ORACLE_SQL["weighted_sample"]})
-    """
-
-    @register("sampling_suite", oracle)
-    def q_sampling_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
-        """L7 + L13 in one window slot: deterministic 90/5/5 split,
-        md5-permutation shuffle-sharding, stratified quota sample, and
-        quality-weighted Bernoulli sample — every sampling primitive a
-        training-data pipeline needs, union-normalized to (kind, k1,
-        k2, s, n, v) so one value hash pins each document's split,
-        shard+position, stratum rank, and kept/weight. All four are
-        hash-rule projections (no RNG): the oracle re-derives every
-        assignment independently."""
-        null_i = F.lit(None).cast("int")
-        null_d = F.lit(None).cast("double")
-        sp = QUERIES["split_train_test"](spark, sf_dir).select(
-            F.lit("split").alias("kind"),
-            F.col("doc_id").cast("long").alias("k1"),
-            F.col("bucket").cast("long").alias("k2"),
-            F.col("split").alias("s"),
-            null_i.alias("n"),
-            null_d.alias("v"),
-        )
-        sh = QUERIES["shuffle_shards"](spark, sf_dir).select(
-            F.lit("shard").alias("kind"),
-            F.col("doc_id").cast("long").alias("k1"),
-            F.col("sort_key").cast("long").alias("k2"),
-            F.col("shard").cast("string").alias("s"),
-            F.col("pos").cast("int").alias("n"),
-            null_d.alias("v"),
-        )
-        st = QUERIES["stratified_sample"](spark, sf_dir).select(
-            F.lit("strat").alias("kind"),
-            F.col("doc_id").cast("long").alias("k1"),
-            F.lit(None).cast("long").alias("k2"),
-            # F.concat, not concat_ws: the oracle's `lang || '|' || source`
-            # is null-PROPAGATING and concat_ws null-SKIPS — parity must
-            # not depend on lang/source being non-null in the testdata
-            F.concat(F.col("lang"), F.lit("|"), F.col("source")).alias("s"),
-            F.col("rn").cast("int").alias("n"),
-            null_d.alias("v"),
-        )
-        ws = QUERIES["weighted_sample"](spark, sf_dir).select(
-            F.lit("wsamp").alias("kind"),
-            F.col("doc_id").cast("long").alias("k1"),
-            F.col("n_chars").cast("long").alias("k2"),
-            F.lit(None).cast("string").alias("s"),
-            null_i.alias("n"),
-            F.col("w").alias("v"),
-        )
-        return sp.union(sh).union(st).union(ws)
-
-
-from books2scrape_etl_spark.registry import QUERIES  # noqa: E402
-
-_register_sampling_suite()
+register_suite("sampling_suite", width(2, 4, 1), {
+    "split_train_test": {"s1": "split", "n1": "doc_id", "n2": "bucket"},
+    "shuffle_shards": {
+        "n1": "doc_id", "n2": "sort_key", "n3": "shard", "n4": "pos",
+    },
+    "stratified_sample": {
+        "s1": "lang", "s2": "source", "n1": "doc_id", "n2": "rn",
+    },
+    "weighted_sample": {"n1": "doc_id", "n2": "n_chars", "d1": "w"},
+})
 
 
 # =====================================================================

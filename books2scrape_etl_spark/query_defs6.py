@@ -24,7 +24,8 @@ from books2scrape_etl_spark.functions.agg import (
     sum_exact,
 )
 from books2scrape_etl_spark.io import read_table
-from books2scrape_etl_spark.registry import ORACLE_SQL, QUERIES, register
+from books2scrape_etl_spark.registry import register
+from books2scrape_etl_spark.suites import register_suite, width
 from books2scrape_etl_spark.query_defs import _utc
 
 
@@ -166,100 +167,21 @@ def q_tpch_q6(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # =====================================================================
-# tpch_suite — Q1 + Q4 + Q6 in one window slot (union-normalized to
-# (kind, s, k, v); the singles stay registered right past the window)
+# tpch_suite — Q1 + Q4 + Q6 in one window slot: Q1's group keys,
+# count and seven measures in one row per group, Q4's per-priority
+# counts, Q6's single revenue row (the singles stay registered right
+# past the window)
 # =====================================================================
 
-
-def _register_tpch_suite() -> None:
-    # composed after the singles register (same import-order pattern as
-    # query_defs4/5 suites): the suite oracle IS the singles' oracles,
-    # so the two can never drift apart.
-    q1_measures = [
-        "sum_qty",
-        "sum_base_price",
-        "sum_disc_price",
-        "sum_charge",
-        "avg_qty",
-        "avg_price",
-        "avg_disc",
-    ]
-    q1_rows = "\nUNION ALL\n".join(
-        f"""SELECT 'q1' AS kind,
-                   l_returnflag || '|' || l_linestatus || '|{m}' AS s,
-                   CAST(NULL AS BIGINT) AS k, {m} AS v FROM q1"""
-        for m in q1_measures
-    )
-    oracle = f"""
-    WITH q1 AS ({ORACLE_SQL["tpch_q1"]})
-    {q1_rows}
-    UNION ALL
-    SELECT 'q1', l_returnflag || '|' || l_linestatus || '|count_order',
-           count_order, CAST(NULL AS DOUBLE)
-    FROM q1
-    UNION ALL
-    SELECT 'q4', o_orderpriority, order_count, CAST(NULL AS DOUBLE)
-    FROM ({ORACLE_SQL["tpch_q4"]})
-    UNION ALL
-    SELECT 'q6', 'revenue', n_lines, revenue
-    FROM ({ORACLE_SQL["tpch_q6"]})
-    """
-
-    @register("tpch_suite", oracle)
-    def q_tpch_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
-        """TPC-H Q1/Q4/Q6 in one driver slot: Q1's 8 aggregates unpivot
-        to one row per (group, measure), Q4 contributes per-priority
-        counts, Q6 its single revenue row. One value hash pins all
-        three shapes."""
-        null_k = F.lit(None).cast("long")
-        null_v = F.lit(None).cast("double")
-        q1 = QUERIES["tpch_q1"](spark, sf_dir)
-        # F.concat (null-propagating) to match the oracle's `||`
-        grp = F.concat(F.col("l_returnflag"), F.lit("|"), F.col("l_linestatus"))
-        q1_m = q1.select(
-            F.lit("q1").alias("kind"),
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.concat(grp, F.lit(f"|{m}")).alias("s"),
-                            null_k.alias("k"),
-                            F.col(m).cast("double").alias("v"),
-                        )
-                        for m in (
-                            "sum_qty",
-                            "sum_base_price",
-                            "sum_disc_price",
-                            "sum_charge",
-                            "avg_qty",
-                            "avg_price",
-                            "avg_disc",
-                        )
-                    ],
-                    F.struct(
-                        F.concat(grp, F.lit("|count_order")).alias("s"),
-                        F.col("count_order").cast("long").alias("k"),
-                        null_v.alias("v"),
-                    ),
-                )
-            ).alias("m"),
-        ).select("kind", "m.s", "m.k", "m.v")
-        q4 = QUERIES["tpch_q4"](spark, sf_dir).select(
-            F.lit("q4").alias("kind"),
-            F.col("o_orderpriority").alias("s"),
-            F.col("order_count").cast("long").alias("k"),
-            null_v.alias("v"),
-        )
-        q6 = QUERIES["tpch_q6"](spark, sf_dir).select(
-            F.lit("q6").alias("kind"),
-            F.lit("revenue").alias("s"),
-            F.col("n_lines").cast("long").alias("k"),
-            F.col("revenue").cast("double").alias("v"),
-        )
-        return q1_m.union(q4).union(q6)
-
-
-_register_tpch_suite()
+register_suite("tpch_suite", width(2, 1, 7), {
+    "tpch_q1": {
+        "s1": "l_returnflag", "s2": "l_linestatus", "n1": "count_order",
+        "d1": "sum_qty", "d2": "sum_base_price", "d3": "sum_disc_price",
+        "d4": "sum_charge", "d5": "avg_qty", "d6": "avg_price", "d7": "avg_disc",
+    },
+    "tpch_q4": {"s1": "o_orderpriority", "n1": "order_count"},
+    "tpch_q6": {"n1": "n_lines", "d1": "revenue"},
+})
 
 
 # =====================================================================

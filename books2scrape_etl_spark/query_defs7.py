@@ -26,7 +26,8 @@ from pyspark.sql import functions as F
 
 from books2scrape_etl_spark.functions.agg import oracle_sum_exact, sum_exact
 from books2scrape_etl_spark.io import read_table
-from books2scrape_etl_spark.registry import ORACLE_SQL, QUERIES, register
+from books2scrape_etl_spark.registry import register
+from books2scrape_etl_spark.suites import register_suite, width
 from books2scrape_etl_spark.query_defs import _utc
 from books2scrape_etl_spark.query_defs6 import _ts_year_range
 
@@ -275,79 +276,21 @@ def q_tpch_q19(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # =====================================================================
-# tpch_suite2 — Q7 + Q13 + Q15 + Q17 + Q19 in one window slot
+# tpch_suite2 — Q7 + Q13 + Q15 + Q17 + Q19 in one window slot: five
+# distinct optimizer shapes (disjunctive multi-join, outer-join
+# histogram, twice-consumed aggregate, correlated-AVG decorrelation,
+# OR-of-ANDs pushdown) under one value hash
 # =====================================================================
 
-
-def _register_tpch_suite2() -> None:
-    oracle = f"""
-    SELECT 'q7' AS kind,
-           supp_nation || '|' || cust_nation || '|' || CAST(l_year AS VARCHAR) AS s,
-           CAST(NULL AS BIGINT) AS k, revenue AS v
-    FROM ({ORACLE_SQL["tpch_q7"]})
-    UNION ALL
-    SELECT 'q13', CAST(c_count AS VARCHAR), custdist, CAST(NULL AS DOUBLE)
-    FROM ({ORACLE_SQL["tpch_q13"]})
-    UNION ALL
-    SELECT 'q15', s_name, s_suppkey, total_revenue
-    FROM ({ORACLE_SQL["tpch_q15"]})
-    UNION ALL
-    SELECT 'q17', 'avg_yearly', n_lines, avg_yearly
-    FROM ({ORACLE_SQL["tpch_q17"]})
-    UNION ALL
-    SELECT 'q19', 'revenue', n_lines, revenue
-    FROM ({ORACLE_SQL["tpch_q19"]})
-    """
-
-    @register("tpch_suite2", oracle)
-    def q_tpch_suite2(spark: SparkSession, sf_dir: str) -> DataFrame:
-        """TPC-H Q7/Q13/Q15/Q17/Q19 in one driver slot, union-normalized
-        to (kind, s, k, v) — five distinct optimizer shapes (disjunctive
-        multi-join, outer-join histogram, twice-consumed aggregate,
-        correlated-AVG decorrelation, OR-of-ANDs pushdown) under one
-        value hash."""
-        null_k = F.lit(None).cast("long")
-        null_v = F.lit(None).cast("double")
-        q7 = QUERIES["tpch_q7"](spark, sf_dir).select(
-            F.lit("q7").alias("kind"),
-            F.concat(
-                F.col("supp_nation"),
-                F.lit("|"),
-                F.col("cust_nation"),
-                F.lit("|"),
-                F.col("l_year").cast("string"),
-            ).alias("s"),
-            null_k.alias("k"),
-            F.col("revenue").cast("double").alias("v"),
-        )
-        q13 = QUERIES["tpch_q13"](spark, sf_dir).select(
-            F.lit("q13").alias("kind"),
-            F.col("c_count").cast("string").alias("s"),
-            F.col("custdist").cast("long").alias("k"),
-            null_v.alias("v"),
-        )
-        q15 = QUERIES["tpch_q15"](spark, sf_dir).select(
-            F.lit("q15").alias("kind"),
-            F.col("s_name").alias("s"),
-            F.col("s_suppkey").cast("long").alias("k"),
-            F.col("total_revenue").cast("double").alias("v"),
-        )
-        q17 = QUERIES["tpch_q17"](spark, sf_dir).select(
-            F.lit("q17").alias("kind"),
-            F.lit("avg_yearly").alias("s"),
-            F.col("n_lines").cast("long").alias("k"),
-            F.col("avg_yearly").cast("double").alias("v"),
-        )
-        q19 = QUERIES["tpch_q19"](spark, sf_dir).select(
-            F.lit("q19").alias("kind"),
-            F.lit("revenue").alias("s"),
-            F.col("n_lines").cast("long").alias("k"),
-            F.col("revenue").cast("double").alias("v"),
-        )
-        return q7.union(q13).union(q15).union(q17).union(q19)
-
-
-_register_tpch_suite2()
+register_suite("tpch_suite2", width(2, 2, 1), {
+    "tpch_q7": {
+        "s1": "supp_nation", "s2": "cust_nation", "n1": "l_year", "d1": "revenue",
+    },
+    "tpch_q13": {"n1": "c_count", "n2": "custdist"},
+    "tpch_q15": {"s1": "s_name", "n1": "s_suppkey", "d1": "total_revenue"},
+    "tpch_q17": {"n1": "n_lines", "d1": "avg_yearly"},
+    "tpch_q19": {"n1": "n_lines", "d1": "revenue"},
+})
 
 
 # =====================================================================

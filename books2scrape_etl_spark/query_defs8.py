@@ -37,7 +37,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from books2scrape_etl_spark.io import read_table
-from books2scrape_etl_spark.registry import ORACLE_SQL, QUERIES, register
+from books2scrape_etl_spark.registry import register
+from books2scrape_etl_spark.suites import register_suite, width
 from books2scrape_etl_spark.query_defs import _utc
 
 _TABLES = ("region", "nation", "customer", "supplier", "part", "orders", "lineitem")
@@ -308,106 +309,22 @@ def q_tpch_q22(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # =====================================================================
-# tpch_suite3 — the final eight shapes in one window slot
+# tpch_suite3 — Q2/Q8/Q9/Q11/Q16/Q20/Q21/Q22 in one window slot; with
+# tpch_suite and tpch_suite2 this completes all 22 TPC-H query shapes
 # =====================================================================
 
-
-def _register_tpch_suite3() -> None:
-    oracle = f"""
-    SELECT 'q2' AS kind,
-           CAST(p_partkey AS VARCHAR) || '|' || s_name AS s,
-           CAST(NULL AS BIGINT) AS k, cost AS v
-    FROM ({ORACLE_SQL["tpch_q2"]})
-    UNION ALL
-    SELECT 'q8', CAST(o_year AS VARCHAR), CAST(NULL AS BIGINT), mkt_share
-    FROM ({ORACLE_SQL["tpch_q8"]})
-    UNION ALL
-    SELECT 'q9', nation || '|' || CAST(o_year AS VARCHAR),
-           CAST(NULL AS BIGINT), sum_profit
-    FROM ({ORACLE_SQL["tpch_q9"]})
-    UNION ALL
-    SELECT 'q11', CAST(p_partkey AS VARCHAR), CAST(NULL AS BIGINT), value
-    FROM ({ORACLE_SQL["tpch_q11"]})
-    UNION ALL
-    SELECT 'q16', p_brand || '|' || p_type || '|' || CAST(p_size AS VARCHAR),
-           supplier_cnt, CAST(NULL AS DOUBLE)
-    FROM ({ORACLE_SQL["tpch_q16"]})
-    UNION ALL
-    SELECT 'q20', s_name || '|' || n_name, CAST(NULL AS BIGINT),
-           CAST(NULL AS DOUBLE)
-    FROM ({ORACLE_SQL["tpch_q20"]})
-    UNION ALL
-    SELECT 'q21', s_name, numwait, CAST(NULL AS DOUBLE)
-    FROM ({ORACLE_SQL["tpch_q21"]})
-    UNION ALL
-    SELECT 'q22', CAST(cntrycode AS VARCHAR), numcust, totacctbal
-    FROM ({ORACLE_SQL["tpch_q22"]})
-    """
-
-    @register("tpch_suite3", oracle)
-    def q_tpch_suite3(spark: SparkSession, sf_dir: str) -> DataFrame:
-        """TPC-H Q2/Q8/Q9/Q11/Q16/Q20/Q21/Q22 in one driver slot,
-        union-normalized to (kind, s, k, v) — with tpch_suite and
-        tpch_suite2 this completes all 22 TPC-H query shapes."""
-        from pyspark.sql import functions as F
-
-        null_k = F.lit(None).cast("long")
-        null_v = F.lit(None).cast("double")
-        q2 = QUERIES["tpch_q2"](spark, sf_dir).select(
-            F.lit("q2").alias("kind"),
-            F.concat(F.col("p_partkey").cast("string"), F.lit("|"), F.col("s_name")).alias("s"),
-            null_k.alias("k"),
-            F.col("cost").cast("double").alias("v"),
-        )
-        q8 = QUERIES["tpch_q8"](spark, sf_dir).select(
-            F.lit("q8").alias("kind"),
-            F.col("o_year").cast("string").alias("s"),
-            null_k.alias("k"),
-            F.col("mkt_share").cast("double").alias("v"),
-        )
-        q9 = QUERIES["tpch_q9"](spark, sf_dir).select(
-            F.lit("q9").alias("kind"),
-            F.concat(F.col("nation"), F.lit("|"), F.col("o_year").cast("string")).alias("s"),
-            null_k.alias("k"),
-            F.col("sum_profit").cast("double").alias("v"),
-        )
-        q11 = QUERIES["tpch_q11"](spark, sf_dir).select(
-            F.lit("q11").alias("kind"),
-            F.col("p_partkey").cast("string").alias("s"),
-            null_k.alias("k"),
-            F.col("value").cast("double").alias("v"),
-        )
-        q16 = QUERIES["tpch_q16"](spark, sf_dir).select(
-            F.lit("q16").alias("kind"),
-            F.concat(
-                F.col("p_brand"), F.lit("|"), F.col("p_type"), F.lit("|"),
-                F.col("p_size").cast("string"),
-            ).alias("s"),
-            F.col("supplier_cnt").cast("long").alias("k"),
-            null_v.alias("v"),
-        )
-        q20 = QUERIES["tpch_q20"](spark, sf_dir).select(
-            F.lit("q20").alias("kind"),
-            F.concat(F.col("s_name"), F.lit("|"), F.col("n_name")).alias("s"),
-            null_k.alias("k"),
-            null_v.alias("v"),
-        )
-        q21 = QUERIES["tpch_q21"](spark, sf_dir).select(
-            F.lit("q21").alias("kind"),
-            F.col("s_name").alias("s"),
-            F.col("numwait").cast("long").alias("k"),
-            null_v.alias("v"),
-        )
-        q22 = QUERIES["tpch_q22"](spark, sf_dir).select(
-            F.lit("q22").alias("kind"),
-            F.col("cntrycode").cast("string").alias("s"),
-            F.col("numcust").cast("long").alias("k"),
-            F.col("totacctbal").cast("double").alias("v"),
-        )
-        out = q2
-        for part_df in (q8, q9, q11, q16, q20, q21, q22):
-            out = out.union(part_df)
-        return out
-
-
-_register_tpch_suite3()
+register_suite("tpch_suite3", width(3, 2, 1), {
+    "tpch_q2": {
+        "s1": "p_brand", "s2": "s_name", "s3": "n_name",
+        "n1": "p_partkey", "d1": "cost",
+    },
+    "tpch_q8": {"n1": "o_year", "d1": "mkt_share"},
+    "tpch_q9": {"s1": "nation", "n1": "o_year", "d1": "sum_profit"},
+    "tpch_q11": {"n1": "p_partkey", "d1": "value"},
+    "tpch_q16": {
+        "s1": "p_brand", "s2": "p_type", "n1": "p_size", "n2": "supplier_cnt",
+    },
+    "tpch_q20": {"s1": "s_name", "s2": "n_name"},
+    "tpch_q21": {"s1": "s_name", "n1": "numwait"},
+    "tpch_q22": {"n1": "cntrycode", "n2": "numcust", "d1": "totacctbal"},
+})

@@ -1,59 +1,31 @@
-"""Round-8 packing-suite tests: each query_defs33 suite must be the
-exact union of its singles — per-section row counts match the singles,
-and a spot-checked section is value-identical after normalization.
+"""Round-8 packing-suite tests: a suite section is value-identical to
+its single run through the same slot normalization (the per-suite
+width and row-count checks run over every suite in tests/test_suites.py).
 Also pins the udtf_sentences invariant conversion (both checks 1)."""
 
 from pyspark.sql import functions as F
 
-from books2scrape_etl_spark.query_defs33 import (
-    _W12,
-    _W12_SECTIONS,
-    _W22,
-    _W22_SECTIONS,
-)
 from books2scrape_etl_spark.queries import QUERIES
-from books2scrape_etl_spark.suites import sect_df as _sect_df
-
-
-def test_suite_sections_match_single_counts(spark, sf_dir):
-    for suite, sections in [
-        ("wave12_suite", _W12_SECTIONS),
-        ("wave22_suite", _W22_SECTIONS),
-    ]:
-        got = {
-            r["sec"]: r["n"]
-            for r in QUERIES[suite](spark, sf_dir)
-            .groupBy("sec")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .collect()
-        }
-        for name in sections:
-            want = QUERIES[name](spark, sf_dir).count()
-            assert got.get(name) == want, (suite, name, got.get(name), want)
+from books2scrape_etl_spark.suites import SUITES, sect_df as _sect_df
 
 
 def test_suite_section_values_identical(spark, sf_dir):
-    """wave22_suite's hhi section must be bit-identical to the single
-    run through the same slot normalization."""
-    suite = (
-        QUERIES["wave22_suite"](spark, sf_dir)
-        .where(F.col("sec") == "hhi_by_segment")
-        .collect()
-    )
-    single = _sect_df(
-        spark, sf_dir, "hhi_by_segment", _W22, _W22_SECTIONS["hhi_by_segment"]
-    ).collect()
+    """A suite section must be bit-identical to the single run through
+    the same slot normalization: wave22_suite's hhi section,
+    tpch_suite's Q1 (count and seven measures fanned out to slots of one
+    row per group) and sources_suite's parse section (quoted source
+    names such as ``Price (excl. tax)``)."""
     key = lambda r: tuple(str(v) for v in r)  # noqa: E731
-    assert sorted(map(key, suite)) == sorted(map(key, single))
-
-
-def test_wave12_suite_width_covers_all_sections():
-    """Every slot a section maps must exist in the suite width (a typo
-    would silently project NULLs on one side only)."""
-    slots = {s for s, _ in _W12}
-    for name, mapping in _W12_SECTIONS.items():
-        missing = set(mapping) - slots
-        assert not missing, (name, missing)
+    for suite, name in [
+        ("wave22_suite", "hhi_by_segment"),
+        ("tpch_suite", "tpch_q1"),
+        ("sources_suite", "parse_struct_expand"),
+    ]:
+        width, sections = SUITES[suite]
+        got = QUERIES[suite](spark, sf_dir).where(F.col("sec") == name).collect()
+        want = _sect_df(spark, sf_dir, name, width, sections[name]).collect()
+        assert want, (suite, name)
+        assert sorted(map(key, got)) == sorted(map(key, want)), (suite, name)
 
 
 def test_udtf_sentences_invariants(spark, sf_dir):

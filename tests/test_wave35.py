@@ -18,7 +18,7 @@ from books2scrape_etl_spark.query_defs35 import (
     _W3032_SECTIONS,
 )
 from books2scrape_etl_spark.queries import ORACLE_SQL, QUERIES
-from books2scrape_etl_spark.suites import sect_df as _sect_df
+from books2scrape_etl_spark.suites import SUITES, sect_df as _sect_df
 
 _ALL = [
     ("wave23_24_suite", _W2324, _W2324_SECTIONS),
@@ -51,13 +51,13 @@ def test_suite_widths_cover_all_sections():
 
 
 def test_suite_sql_sources_qualified():
-    """ADVICE r8: slot sources must be qualified sub_{name}.{src} so
+    """ADVICE r8: slot sources must be qualified sub_{name}."{src}" so
     resolution never depends on lateral-alias precedence."""
-    for suite, width, sections in _ALL:
+    for suite, (width, sections) in SUITES.items():
         sql = ORACLE_SQL[suite]
         for name, mapping in sections.items():
             for src in mapping.values():
-                assert f"sub_{name}.{src}" in sql, (suite, name, src)
+                assert f'sub_{name}."{src}"' in sql, (suite, name, src)
 
 
 def test_suite_sections_match_single_counts(spark, sf_dir):
