@@ -4,25 +4,57 @@ from __future__ import annotations
 
 import threading
 from collections import OrderedDict
+from collections.abc import Iterator
+from contextlib import contextmanager
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-# spark.sql.shuffle.partitions is SESSION-global: two guards
-# overlapping from different threads would run sibling plans at the
-# narrowed width and restore each other's stale values. Serialize all
-# guarded iteration loops (RLock so a same-thread nested guard still
-# composes LIFO-correctly instead of deadlocking).
-_SHUFFLE_GUARD_LOCK = threading.RLock()
+# Session confs are process-global, not thread-local: two guards
+# overlapping from different threads would run sibling plans under the
+# other's values and restore each other's stale ones. One lock
+# serializes every guarded section (RLock, so a same-thread nested
+# guard composes LIFO instead of deadlocking).
+_CONF_LOCK = threading.RLock()
 
 
-class sized_shuffle_partitions:
-    """Temporarily size ``spark.sql.shuffle.partitions`` to the data
-    while an EAGER iteration loop runs (the streaming module's
-    _few_state_partitions pattern, justified the same way): callers
-    run every round inside the guard and return only
-    localCheckpoint-materialized frames, so nothing lazy escapes with
-    the temporary value.
+@contextmanager
+def conf_guard(spark: SparkSession, confs: dict[str, str]) -> Iterator[None]:
+    """Set ``confs`` on the session for the body, then restore each
+    previous value, or unset a key that had none, on the normal and the
+    exception path. Every temporary conf change in the package goes
+    through here. The body must materialize what it builds (eager
+    localCheckpoint or collect): a lazy frame that escapes would run
+    under whatever values are in force later.
+
+    When every requested value is already in force the guard does
+    nothing: no lock, no set, no restore. Pool workers can then enter
+    the guard their caller holds while it waits on them
+    (stream_windows_suite's concurrent drains) instead of deadlocking
+    on the caller's lock. Such an entry relies on whoever put the
+    values in force keeping them for its body, as a holder that waits
+    on its workers does."""
+    if all(spark.conf.get(k, None) == v for k, v in confs.items()):
+        yield
+        return
+    with _CONF_LOCK:
+        prev = {k: spark.conf.get(k, None) for k in confs}
+        try:
+            for k, v in confs.items():
+                spark.conf.set(k, v)
+            yield
+        finally:
+            for k, v in prev.items():
+                if v is None:
+                    spark.conf.unset(k)
+                else:
+                    spark.conf.set(k, v)
+
+
+def sized_shuffle_partitions(spark: SparkSession, n_rows: int):
+    """Size ``spark.sql.shuffle.partitions`` to the data while an EAGER
+    iteration loop runs: callers run every round inside the guard and
+    return only localCheckpoint-materialized frames.
 
     Why: a vanilla session defaults to 200 shuffle partitions, and the
     iterative localCheckpoint pattern defeats AQE's post-shuffle
@@ -33,32 +65,9 @@ class sized_shuffle_partitions:
     (floor 8, ceiling the session's own setting, so cluster-sized
     configurations are never widened) keeps small inputs fast and
     1B-edge graphs on the caller's configured width."""
-
-    def __init__(self, spark: SparkSession, n_rows: int) -> None:
-        self.spark = spark
-        cur = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
-        self.n = max(8, min(cur, n_rows // 100_000 + 1))
-
-    def __enter__(self) -> None:
-        _SHUFFLE_GUARD_LOCK.acquire()
-        # If conf access raises after the acquire (stopped session ->
-        # py4j error), Python never runs __exit__ — release before
-        # re-raising or every future guarded section deadlocks.
-        try:
-            self.prev = self.spark.conf.get("spark.sql.shuffle.partitions", None)
-            self.spark.conf.set("spark.sql.shuffle.partitions", str(self.n))
-        except BaseException:
-            _SHUFFLE_GUARD_LOCK.release()
-            raise
-
-    def __exit__(self, *exc) -> None:
-        try:
-            if self.prev is None:
-                self.spark.conf.unset("spark.sql.shuffle.partitions")
-            else:
-                self.spark.conf.set("spark.sql.shuffle.partitions", self.prev)
-        finally:
-            _SHUFFLE_GUARD_LOCK.release()
+    cur = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
+    n = max(8, min(cur, n_rows // 100_000 + 1))
+    return conf_guard(spark, {"spark.sql.shuffle.partitions": str(n)})
 
 
 # Staging caches, keyed by the analyzed plan's semantic hash and kept

@@ -15,7 +15,7 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from books2scrape_etl_spark.functions.util import stage, to_col
+from books2scrape_etl_spark.functions.util import conf_guard, stage, to_col
 
 # Cap on order-bucket count (VERDICT r12 item 3 / ADVICE r12). The
 # bucket id is a count-of-boundaries-below expression evaluated per
@@ -566,26 +566,6 @@ _BLOOM_CONFS = {
 }
 
 
-from contextlib import contextmanager
-
-
-@contextmanager
-def _bloom_conf_guard(spark):
-    """Set the runtime-bloom confs, restoring every previous value on
-    exit — shared by the join and its plan-text probe."""
-    prev = {k: spark.conf.get(k, None) for k in _BLOOM_CONFS}
-    for k, v in _BLOOM_CONFS.items():
-        spark.conf.set(k, v)
-    try:
-        yield
-    finally:
-        for k, v in prev.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
-
-
 def bloom_pruned_join(spark, fact: DataFrame, dim: DataFrame, fact_key, dim_key) -> DataFrame:
     """Runtime bloom-filter-pruned shuffle join (Spark's AQE runtime
     filter): the selective dim side builds a `bloom_filter_agg` over its
@@ -601,7 +581,7 @@ def bloom_pruned_join(spark, fact: DataFrame, dim: DataFrame, fact_key, dim_key)
     pairing checks. The confs are session-wide, so the join is
     materialized eagerly under the conf guard and every previous value
     restored after."""
-    with _bloom_conf_guard(spark):
+    with conf_guard(spark, _BLOOM_CONFS):
         joined = fact.join(dim, to_col(fact_key) == to_col(dim_key))
         return joined.localCheckpoint(eager=True)
 
@@ -609,7 +589,7 @@ def bloom_pruned_join(spark, fact: DataFrame, dim: DataFrame, fact_key, dim_key)
 def bloom_plan_text(spark, fact: DataFrame, dim: DataFrame, fact_key, dim_key) -> str:
     """Optimized-plan text of the bloom-pruned join under the conf
     guard (for the plan test pinning `bloom_filter_agg` injection)."""
-    with _bloom_conf_guard(spark):
+    with conf_guard(spark, _BLOOM_CONFS):
         joined = fact.join(dim, to_col(fact_key) == to_col(dim_key))
         return joined._jdf.queryExecution().optimizedPlan().toString()
 
@@ -630,23 +610,6 @@ _SKEW_CONFS = {
     "spark.sql.autoBroadcastJoinThreshold": "-1",
     "spark.sql.adaptive.autoBroadcastJoinThreshold": "-1",
 }
-
-
-@contextmanager
-def _skew_conf_guard(spark):
-    """Set the AQE skew-join confs, restoring every previous value on
-    exit — shared by the join and its plan-text probe."""
-    prev = {k: spark.conf.get(k, None) for k in _SKEW_CONFS}
-    for k, v in _SKEW_CONFS.items():
-        spark.conf.set(k, v)
-    try:
-        yield
-    finally:
-        for k, v in prev.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
 
 
 def skew_join(spark, left: DataFrame, right: DataFrame, left_key, right_key) -> DataFrame:
@@ -672,7 +635,7 @@ def skew_join(spark, left: DataFrame, right: DataFrame, left_key, right_key) -> 
     scale the fact side always has thousands of mappers; at test scale
     callers must ensure the skewed input has several partitions (the
     demo query repartitions its scan first)."""
-    with _skew_conf_guard(spark):
+    with conf_guard(spark, _SKEW_CONFS):
         joined = left.join(right, to_col(left_key) == to_col(right_key))
         return joined.localCheckpoint(eager=True)
 
@@ -681,7 +644,7 @@ def skew_join_plan_text(spark, left: DataFrame, right: DataFrame, left_key, righ
     """Final (post-AQE) executed-plan text of the skewed join — requires
     running the query, since skew handling is a runtime re-plan (for the
     plan test pinning ``skew=true`` on the SortMergeJoin node)."""
-    with _skew_conf_guard(spark):
+    with conf_guard(spark, _SKEW_CONFS):
         joined = left.join(right, to_col(left_key) == to_col(right_key))
         # collect() executes joined's OWN QueryExecution; count() would
         # build a new one and leave this plan un-replanned (AQE final

@@ -6,7 +6,7 @@ Shape: land lineitem / orders / customer as catalog tables, ANALYZE
 them FOR ALL COLUMNS (row counts + per-column NDV/min/max — the
 selectivity inputs CostBasedJoinReorder needs), enable
 ``spark.sql.cbo.enabled`` + ``spark.sql.cbo.joinReorder.enabled``
-under a save/restore guard (the join_bloom conf-guard pattern), then
+under ``functions.util.conf_guard``, then
 run a three-table join written in a DELIBERATELY bad order:
 
     (lineitem JOIN orders) JOIN customer[c_mktsegment = 'BUILDING']
@@ -44,12 +44,12 @@ import os as _os
 import re as _re
 import shutil as _shutil
 import threading as _threading
-from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from books2scrape_etl_spark.functions.agg import oracle_sum_exact, sum_exact
+from books2scrape_etl_spark.functions.util import conf_guard
 from books2scrape_etl_spark.io import read_table
 from books2scrape_etl_spark.registry import register
 
@@ -64,40 +64,15 @@ from books2scrape_etl_spark.registry import register
 _LANDED: set[str] = set()
 _LAND_LOCK = _threading.Lock()
 
+# spark.sql.cbo.* is SESSION-global. Applied only through
+# functions.util.conf_guard, whose one lock serializes it with every
+# other guarded section (ADVICE r11: a concurrent query optimized while
+# CBO is on is value-safe, reordering is a pure optimization, but
+# plan-pin tests could flake under threaded runs).
 _CBO_CONFS = {
     "spark.sql.cbo.enabled": "true",
     "spark.sql.cbo.joinReorder.enabled": "true",
 }
-
-# spark.sql.cbo.* is SESSION-global like shuffle.partitions, so guard
-# sections serialize (ADVICE r11: a concurrent query optimized while
-# the guard is held would see CBO on — value-safe, reordering is a
-# pure optimization, but plan-pin tests could flake under threaded
-# runs). RLock so a same-thread nested guard composes LIFO-correctly,
-# mirroring functions/util.py's _SHUFFLE_GUARD_LOCK.
-_CBO_GUARD_LOCK = _threading.RLock()
-
-
-@contextmanager
-def cbo_conf_guard(spark: SparkSession):
-    """Enable CBO + join reordering, restoring every previous value on
-    exit — shared by the qname and the plan test. Serialized via
-    _CBO_GUARD_LOCK; the guarded body must materialize (the qname
-    eagerly localCheckpoints) so nothing lazy escapes with CBO on."""
-    with _CBO_GUARD_LOCK:
-        # Conf access can raise after the acquire (stopped session ->
-        # py4j error); the with-block releases on re-raise.
-        prev = {k: spark.conf.get(k, None) for k in _CBO_CONFS}
-        for k, v in _CBO_CONFS.items():
-            spark.conf.set(k, v)
-        try:
-            yield
-        finally:
-            for k, v in prev.items():
-                if v is None:
-                    spark.conf.unset(k)
-                else:
-                    spark.conf.set(k, v)
 
 
 def land_cbo_tables(spark: SparkSession, sf_dir: str) -> tuple[str, str, str]:
@@ -172,5 +147,5 @@ def q_join_reorder_cbo(spark: SparkSession, sf_dir: str) -> DataFrame:
     reorder of a deliberately mis-ordered 3-table join (reordered tree
     plan-pinned; oracle = the identical join, reordering is a pure
     optimization)."""
-    with cbo_conf_guard(spark):
+    with conf_guard(spark, _CBO_CONFS):
         return build_cbo_join(spark, sf_dir).localCheckpoint(eager=True)

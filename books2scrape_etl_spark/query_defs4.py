@@ -724,19 +724,20 @@ def q_stream_windows_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     # checkpoint dirs, same events input) — run them as CONCURRENT
     # streaming queries instead of back-to-back. Each drain's result is
     # pinned (memory table localCheckpoint / eager summary) before its
-    # future resolves, so assembly below is pure plan-building. The
-    # nested _few_state_partitions guards all set the same value, so
-    # interleaved enter/exit pairs are benign; the last exit restores
-    # the caller's setting. Measured: the suite's wall drops from the
-    # SUM of drains to roughly the slowest drain.
+    # future resolves, so assembly below is pure plan-building.
+    # Measured: the suite's wall drops from the SUM of drains to
+    # roughly the slowest drain.
     from concurrent.futures import ThreadPoolExecutor
 
-    from books2scrape_etl_spark.streaming.windows import _few_state_partitions
+    from books2scrape_etl_spark.functions.util import conf_guard
+    from books2scrape_etl_spark.streaming.windows import STATE_PARTITION_CONFS
 
-    # outer guard: every inner guard then saves/restores the SAME value,
-    # so one drain finishing early can't flip the conf to the session
-    # default while a sibling's first micro-batch is still planning
-    with _few_state_partitions(spark), ThreadPoolExecutor(max_workers=7) as pool:
+    # The outer guard holds the state width for the whole pool, so one
+    # drain finishing early can't restore the session default while a
+    # sibling's first micro-batch is still planning. Each drain's own
+    # guard then finds the width already in force and does nothing,
+    # which is what lets the seven run concurrently under the held lock.
+    with conf_guard(spark, STATE_PARTITION_CONFS), ThreadPoolExecutor(max_workers=7) as pool:
         f_h = pool.submit(streaming_hopping, spark, sf_dir)
         f_d = pool.submit(streaming_dedup, spark, sf_dir, 2)
         f_st = pool.submit(stateful_running_max, spark, sf_dir)

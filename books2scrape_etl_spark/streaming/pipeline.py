@@ -55,9 +55,10 @@ def streaming_books_star(
     def land(batch_df: DataFrame, batch_id: int) -> None:
         land_one_batch(spark, batch_df, out, batch_id)
 
-    from books2scrape_etl_spark.streaming.windows import _few_state_partitions
+    from books2scrape_etl_spark.functions.util import conf_guard
+    from books2scrape_etl_spark.streaming.windows import STATE_PARTITION_CONFS
 
-    with _few_state_partitions(spark):
+    with conf_guard(spark, STATE_PARTITION_CONFS):
         q = (
             raw.writeStream.foreachBatch(land)
             .option("checkpointLocation", ckpt)

@@ -29,6 +29,7 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from books2scrape_etl_spark.functions.util import conf_guard
 from books2scrape_etl_spark.io import TESTDATA_SCHEMAS
 
 
@@ -208,29 +209,14 @@ def _stream_events(spark: SparkSession, sf_dir: str, copies: int = 1) -> DataFra
     return raw
 
 
-class _few_state_partitions:
-    """Temporarily cap ``spark.sql.shuffle.partitions`` while a drain
-    runs. Streaming state partition count is fixed per checkpoint at
-    first run; a vanilla session's default 200 means 200 state-store
-    instances PER stateful operator PER micro-batch — ~10x the wall
-    clock of the drain on toy data. Save/restore is safe here (unlike
-    the UTC pin) because the drain executes EAGERLY inside the guard;
-    nothing lazy escapes with the temporary value. On a real cluster
-    callers drive partitioning via their own conf — this guard only
-    covers the self-contained drain helpers."""
-
-    def __init__(self, spark: SparkSession, n: int = 8) -> None:
-        self.spark, self.n = spark, n
-
-    def __enter__(self) -> None:
-        self.prev = self.spark.conf.get("spark.sql.shuffle.partitions", None)
-        self.spark.conf.set("spark.sql.shuffle.partitions", str(self.n))
-
-    def __exit__(self, *exc) -> None:
-        if self.prev is None:
-            self.spark.conf.unset("spark.sql.shuffle.partitions")
-        else:
-            self.spark.conf.set("spark.sql.shuffle.partitions", self.prev)
+# Shuffle width for the self-contained drain helpers. Streaming state
+# partition count is fixed per checkpoint at first run; a vanilla
+# session's default 200 means 200 state-store instances PER stateful
+# operator PER micro-batch — ~10x the wall clock of the drain on toy
+# data. Drains execute EAGERLY inside the guard, so nothing lazy
+# escapes with the narrowed width. On a real cluster callers drive
+# partitioning via their own conf.
+STATE_PARTITION_CONFS = {"spark.sql.shuffle.partitions": "8"}
 
 
 def _drain_to_memory(stream_df: DataFrame, output_mode: str) -> DataFrame:
@@ -245,7 +231,7 @@ def _drain_to_memory(stream_df: DataFrame, output_mode: str) -> DataFrame:
     name = f"s_{uuid.uuid4().hex[:10]}"
     spark = stream_df.sparkSession
     with tempfile.TemporaryDirectory(prefix=f"ckpt_{name}_") as ckpt:
-        with _few_state_partitions(spark):
+        with conf_guard(spark, STATE_PARTITION_CONFS):
             q = (
                 stream_df.writeStream.format("memory")
                 .queryName(name)

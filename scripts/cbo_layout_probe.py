@@ -96,7 +96,8 @@ sys.path.insert(0, _HERE)
 from cbo_reorder_probe import plan_metrics  # noqa: E402  (the shared executed-plan walker)
 
 from books2scrape_etl_spark.functions.agg import sum_exact  # noqa: E402
-from books2scrape_etl_spark.query_defs38 import cbo_conf_guard  # noqa: E402
+from books2scrape_etl_spark.functions.util import conf_guard  # noqa: E402
+from books2scrape_etl_spark.query_defs38 import _CBO_CONFS  # noqa: E402
 
 SF_DIR = os.environ.get("CBO_LAYOUT_SF_DIR", "/root/testdata/sf0.01")
 SCRATCH = "/tmp/spark_graft_scratch/cbo_layout_probe"
@@ -230,7 +231,7 @@ def main() -> int:
             return df, rows
 
         if cbo:
-            with cbo_conf_guard(spark):
+            with conf_guard(spark, _CBO_CONFS):
                 df, rows = body()
         else:
             df, rows = body()

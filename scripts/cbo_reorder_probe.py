@@ -84,12 +84,13 @@ def main() -> int:
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     if NO_BROADCAST:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    from books2scrape_etl_spark.query_defs38 import build_cbo_join, cbo_conf_guard
+    from books2scrape_etl_spark.functions.util import conf_guard
+    from books2scrape_etl_spark.query_defs38 import _CBO_CONFS, build_cbo_join
 
     def run(label: str, guard):
         t0 = time.time()
         if guard:
-            with cbo_conf_guard(spark):
+            with conf_guard(spark, _CBO_CONFS):
                 df = build_cbo_join(spark, SF_DIR)
                 rows = df.collect()
                 joins, sh = plan_metrics(df)

@@ -102,7 +102,8 @@ def test_join_reorder_cbo_reorders_join_tree(spark, sf_dir):
     # l_orderkey (lineitem joined last) with CBO on, and on c_custkey
     # (the written order) with it off — proving the REORDER RULE moved
     # the tree, not Spark's default planning.
-    from books2scrape_etl_spark.query_defs38 import build_cbo_join, cbo_conf_guard
+    from books2scrape_etl_spark.functions.util import conf_guard
+    from books2scrape_etl_spark.query_defs38 import _CBO_CONFS, build_cbo_join
 
     def top_join(df):
         s = df._jdf.queryExecution().optimizedPlan().toString()
@@ -110,7 +111,7 @@ def test_join_reorder_cbo_reorders_join_tree(spark, sf_dir):
 
     baseline = top_join(build_cbo_join(spark, sf_dir))
     assert "c_custkey" in baseline, baseline
-    with cbo_conf_guard(spark):
+    with conf_guard(spark, _CBO_CONFS):
         reordered = top_join(build_cbo_join(spark, sf_dir))
     assert "l_orderkey" in reordered and "c_custkey" not in reordered, reordered
 
