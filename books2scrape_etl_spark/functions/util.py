@@ -2,9 +2,13 @@
 
 from __future__ import annotations
 
+import atexit
+import hashlib
+import os
+import shutil
 import threading
 from collections import OrderedDict
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 from contextlib import contextmanager
 
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -114,6 +118,46 @@ def stage(df: DataFrame) -> DataFrame:
         while len(_STAGED) > _STAGE_CAP:
             _release(_STAGED.popitem(last=False)[1])
     return df
+
+
+# Scratch landings live under one root per (process, SparkContext), so
+# no other process or SparkContext ever sees, overwrites or deletes them.
+# One lock serializes every landing in the process (RLock, so a write
+# may land its own inputs); a call for an already-landed base does not
+# wait on it. Lock order is conf_guard's lock, then this one: a write
+# must not enter conf_guard.
+_SCRATCH = "/tmp/spark_graft_scratch"
+_LAND_LOCK = threading.RLock()
+
+
+def land_once(
+    spark: SparkSession, name: str, sf_dir: str, write: Callable[[str], None]
+) -> str:
+    """Return the scratch directory ``<name>_<digest of sf_dir>`` of
+    this session, calling ``write(base)`` to land it on the first call.
+
+    The one way the package writes data it reads back. A landed base is
+    never written again in the session: a lazy scan returned by an
+    earlier call may still read it. The marker file beside the base is
+    the land-once state, written only after ``write`` returns, so a
+    ``write`` that raises is retried from an empty base on the next
+    call. The session root is removed when the interpreter exits (the
+    scans are lazy, so no call can clean up inline)."""
+    root = os.path.join(_SCRATCH, f"{os.getpid()}_{spark.sparkContext.applicationId}")
+    digest = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:12]
+    base = os.path.join(root, f"{name}_{digest}")
+    marker = base + ".landed"
+    if os.path.exists(marker):
+        return base
+    with _LAND_LOCK:
+        if not os.path.exists(marker):
+            if not os.path.isdir(root):
+                os.makedirs(root)
+                atexit.register(shutil.rmtree, root, ignore_errors=True)
+            shutil.rmtree(base, ignore_errors=True)
+            write(base)
+            open(marker, "w").close()
+    return base
 
 
 def to_col(col: Column | str) -> Column:

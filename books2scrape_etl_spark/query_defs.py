@@ -15,8 +15,6 @@ that keep the differential check exact (see functions/agg.py and
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -35,7 +33,7 @@ from books2scrape_etl_spark.functions.columns import (
     rating_ordinal,
     rewrite_relative_url,
 )
-from books2scrape_etl_spark.functions.util import stage
+from books2scrape_etl_spark.functions.util import land_once, stage
 from books2scrape_etl_spark.io import TESTDATA_SCHEMAS, read_table
 from books2scrape_etl_spark.operators import dedupe, multimodal, similarity, text
 from books2scrape_etl_spark.operators.binning import bin_fixed, bin_quantile_exact
@@ -93,23 +91,16 @@ def scan_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
 def scan_csv(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S6 — CSV scan with an explicit schema (no inference pass), after
     an S5 CSV-sink round trip (extract_pipeline.py:89 /
-    transformation_pipeline.py:40 analogue).
-
-    The scratch path is keyed by applicationId (the scan_schema_drift
-    precedent): a shared fixed path races overwrite-vs-read when two
-    sessions run this qname concurrently — benign today only because
-    nation is SF-invariant, but the class of bug is the same."""
+    transformation_pipeline.py:40 analogue), landed through
+    ``land_once``."""
     from books2scrape_etl_spark.io import read_csv, write_csv
 
-    path = os.path.join(
-        "/tmp/spark_graft_scratch",
-        f"nation_csv_{spark.sparkContext.applicationId}",
+    path = land_once(
+        spark,
+        "nation_csv",
+        sf_dir,
+        lambda base: write_csv(read_table(spark, "nation", sf_dir), base, single_file=True),
     )
-    import atexit as _atexit
-    import shutil as _shutil
-
-    _atexit.register(_shutil.rmtree, path, ignore_errors=True)
-    write_csv(read_table(spark, "nation", sf_dir), path, single_file=True)
     return read_csv(spark, path, TESTDATA_SCHEMAS["nation"])
 
 

@@ -12,6 +12,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from books2scrape_etl_spark.functions.agg import oracle_sum_exact, sum_exact
+from books2scrape_etl_spark.functions.util import land_once
 from books2scrape_etl_spark.io import read_table
 from books2scrape_etl_spark.registry import register
 
@@ -529,13 +530,16 @@ def q_partition_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same layout enables dynamic partition pruning when the filter
     arrives via a dim join). This is the engine's default layout for
     100 TB fact tables."""
-    import os as _os
-
     li = read_table(spark, "lineitem", sf_dir)
-    out = _os.path.join("/tmp/spark_graft_scratch", f"li_part_{_os.path.basename(sf_dir)}")
-    li.select("l_returnflag", "l_extendedprice").write.mode("overwrite").partitionBy(
-        "l_returnflag"
-    ).parquet(out)
+    out = land_once(
+        spark,
+        "li_part",
+        sf_dir,
+        lambda base: li.select("l_returnflag", "l_extendedprice")
+        .write.mode("overwrite")
+        .partitionBy("l_returnflag")
+        .parquet(base),
+    )
     back = spark.read.parquet(out).where(F.col("l_returnflag") == "R")
     return back.groupBy("l_returnflag").agg(
         F.count(F.lit(1)).alias("n"), sum_exact("l_extendedprice", 2).alias("sum_price")
@@ -859,26 +863,25 @@ def q_stream_foreachbatch_rt(spark: SparkSession, sf_dir: str) -> DataFrame:
     - the per-type 'type' rows carry SQL-exact landed counts.
     """
     import os as _os
-    import tempfile as _tf
-    import uuid as _uuid
 
     from books2scrape_etl_spark.streaming.windows import _stream_events
 
-    out = _os.path.join(_tf.gettempdir(), f"fb_sink_{_uuid.uuid4().hex[:8]}")
-    ckpt = out + "_ckpt"
-
-    def land(batch_df, batch_id: int) -> None:
-        (batch_df.withColumn("batch_id", F.lit(batch_id))
-         .write.mode("append").parquet(out))
-
     ev = _stream_events(spark, sf_dir).select("event_id", "event_type", "value")
-    q = (
-        ev.writeStream.foreachBatch(land)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+
+    def run_stream(base: str) -> None:
+        def land(batch_df, batch_id: int) -> None:
+            (batch_df.withColumn("batch_id", F.lit(batch_id))
+             .write.mode("append").parquet(_os.path.join(base, "sink")))
+
+        q = (
+            ev.writeStream.foreachBatch(land)
+            .option("checkpointLocation", _os.path.join(base, "ckpt"))
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+
+    out = _os.path.join(land_once(spark, "fb_sink", sf_dir, run_stream), "sink")
     landed = spark.read.parquet(out)
     src = spark.read.parquet(_os.path.join(sf_dir, "events.parquet")).select(
         "event_id", "event_type", "value"

@@ -436,15 +436,19 @@ def q_join_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os as _os
 
     from books2scrape_etl_spark.functions.agg import sum_exact
+    from books2scrape_etl_spark.functions.util import land_once
     from books2scrape_etl_spark.operators.scale import bucketed_join, write_bucketed
 
-    scratch = "/tmp/spark_graft_scratch"
-    tag = _os.path.basename(sf_dir.rstrip("/")).replace(".", "_")
     li = read_table(spark, "lineitem", sf_dir).select("l_orderkey", "l_quantity")
     o = read_table(spark, "orders", sf_dir).select("o_orderkey", "o_orderpriority")
-    write_bucketed(li, f"li_b_{tag}", "l_orderkey", 8, _os.path.join(scratch, f"li_b_{tag}"))
-    write_bucketed(o, f"o_b_{tag}", "o_orderkey", 8, _os.path.join(scratch, f"o_b_{tag}"))
-    joined = bucketed_join(spark, f"li_b_{tag}", f"o_b_{tag}", "l_orderkey", "o_orderkey")
+
+    def land(base: str) -> None:
+        tag = _os.path.basename(base)
+        write_bucketed(li, f"{tag}_li", "l_orderkey", 8, _os.path.join(base, "li"))
+        write_bucketed(o, f"{tag}_o", "o_orderkey", 8, _os.path.join(base, "o"))
+
+    tag = _os.path.basename(land_once(spark, "bucketed", sf_dir, land))
+    joined = bucketed_join(spark, f"{tag}_li", f"{tag}_o", "l_orderkey", "o_orderkey")
     return joined.groupBy("o_orderpriority").agg(
         F.count(F.lit(1)).alias("n"), sum_exact("l_quantity", 2).alias("sum_qty")
     )

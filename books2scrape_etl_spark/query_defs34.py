@@ -49,6 +49,7 @@ import os as _os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from books2scrape_etl_spark.functions.util import land_once
 from books2scrape_etl_spark.io import read_table
 from books2scrape_etl_spark.registry import ORACLE_SQL, register
 
@@ -83,25 +84,9 @@ def q_scan_schema_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     relation via ``mergeSchema`` — planning-time footer-schema union,
     per-file null backfill, no rewrite of old files. The scratch write
     is part of the query by design (the join_bucketed land-once
-    contract); the oracle replays the union with a typed NULL literal.
-    At 100 TB this is the difference between evolving a table and
-    rewriting it.
-
-    The scratch path is keyed by (SF tag, applicationId): a path keyed
-    only by SF raced when two same-SF sessions ran concurrently —
-    overwrite-while-mergeSchema-read (ADVICE r8 / VERDICT r8 item 4;
-    the _ship_package per-process zip dir is the in-repo precedent)."""
-    scratch = "/tmp/spark_graft_scratch"
-    tag = _os.path.basename(sf_dir.rstrip("/")).replace(".", "_")
-    app_id = spark.sparkContext.applicationId
-    base = _os.path.join(scratch, f"drift_{tag}_{app_id}")
-    # best-effort removal of OUR dir at interpreter exit (the scan is
-    # lazy, so it can't be cleaned inline; other sessions' dirs are
-    # never touched — deleting them would reintroduce the race)
-    import atexit as _atexit
-    import shutil as _shutil
-
-    _atexit.register(_shutil.rmtree, base, ignore_errors=True)
+    contract, through ``land_once``); the oracle replays the union with
+    a typed NULL literal. At 100 TB this is the difference between
+    evolving a table and rewriting it."""
     nation = read_table(spark, "nation", sf_dir)
     v1 = nation.select(
         F.col("n_nationkey").cast("bigint").alias("nationkey"),
@@ -114,8 +99,12 @@ def q_scan_schema_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("n_regionkey").cast("bigint").alias("regionkey"),
         F.lit("v2").alias("snapshot"),
     )
-    v1.write.mode("overwrite").parquet(_os.path.join(base, "v1"))
-    v2.write.mode("overwrite").parquet(_os.path.join(base, "v2"))
+
+    def land(base: str) -> None:
+        v1.write.mode("overwrite").parquet(_os.path.join(base, "v1"))
+        v2.write.mode("overwrite").parquet(_os.path.join(base, "v2"))
+
+    base = land_once(spark, "drift", sf_dir, land)
     merged = (
         spark.read.option("mergeSchema", "true")
         .parquet(_os.path.join(base, "v1"), _os.path.join(base, "v2"))

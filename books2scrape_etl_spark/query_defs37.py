@@ -29,21 +29,13 @@ full-rescan pattern at scale.
 
 from __future__ import annotations
 
-import atexit as _atexit
-import os as _os
-import shutil as _shutil
-import threading as _threading
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from books2scrape_etl_spark.functions.agg import oracle_sum_exact, sum_exact
+from books2scrape_etl_spark.functions.util import land_once
 from books2scrape_etl_spark.io import read_table
 from books2scrape_etl_spark.registry import register
-
-# Bases already landed this session (land-once; see build_dpp_join).
-_LANDED: set[str] = set()
-_LAND_LOCK = _threading.Lock()
 
 _JOIN_DPP_SQL = f"""
     WITH f AS (SELECT strftime(l_shipdate, '%Y-%m') AS ship_month,
@@ -71,26 +63,16 @@ def build_dpp_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     month = F.date_format("l_shipdate", "yyyy-MM").alias("ship_month")
 
     # Land the fact partitioned by the dim-derived key. The write is
-    # part of the query by design (the join_bucketed/partition_pruning
-    # land-once contract); scratch is keyed by (SF tag, applicationId)
-    # so concurrent same-SF sessions never overwrite each other's live
-    # scan (the scan_schema_drift rule), with best-effort cleanup of
-    # OUR dir at interpreter exit (the scan is lazy). Land-once per
-    # (tag, app) within the session: a second call reuses the already-
-    # written base instead of mode('overwrite')-clobbering a directory
-    # a previously returned lazy plan may still scan, and atexit is
-    # registered exactly once per base (ADVICE r10).
-    tag = _os.path.basename(sf_dir.rstrip("/")).replace(".", "_")
-    base = _os.path.join(
-        "/tmp/spark_graft_scratch", f"dpp_{tag}_{spark.sparkContext.applicationId}"
+    # part of the query by design (the partition_pruning layout).
+    base = land_once(
+        spark,
+        "dpp",
+        sf_dir,
+        lambda base: li.select(month, "l_extendedprice")
+        .write.mode("overwrite")
+        .partitionBy("ship_month")
+        .parquet(base),
     )
-    with _LAND_LOCK:
-        if base not in _LANDED:
-            _atexit.register(_shutil.rmtree, base, ignore_errors=True)
-            li.select(month, "l_extendedprice").write.mode("overwrite").partitionBy(
-                "ship_month"
-            ).parquet(base)
-            _LANDED.add(base)
 
     # Month dim (83 rows — auto-broadcast; DPP's default
     # reuseBroadcastOnly=true makes the pruning subquery FREE: it

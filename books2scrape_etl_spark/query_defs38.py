@@ -39,30 +39,15 @@ choosing the order from statistics is the Spark-native upgrade.
 
 from __future__ import annotations
 
-import atexit as _atexit
 import os as _os
-import re as _re
-import shutil as _shutil
-import threading as _threading
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from books2scrape_etl_spark.functions.agg import oracle_sum_exact, sum_exact
-from books2scrape_etl_spark.functions.util import conf_guard
+from books2scrape_etl_spark.functions.util import conf_guard, land_once
 from books2scrape_etl_spark.io import read_table
 from books2scrape_etl_spark.registry import register
-
-# Bases already landed+ANALYZEd this session (land-once, the
-# query_defs37 rule: never atexit-accumulate or overwrite a directory
-# an already-returned lazy plan may still scan). Keyed by scratch path
-# (per-process) while saveAsTable writes the SESSION catalog — a
-# second SparkSession in the same process with the same
-# applicationId-tag would skip landing yet find stale catalog entries.
-# Unreachable under the driver's one-session-per-process contract
-# (VERDICT r11); revisit only if that contract changes.
-_LANDED: set[str] = set()
-_LAND_LOCK = _threading.Lock()
 
 # spark.sql.cbo.* is SESSION-global. Applied only through
 # functions.util.conf_guard, whose one lock serializes it with every
@@ -78,35 +63,31 @@ _CBO_CONFS = {
 def land_cbo_tables(spark: SparkSession, sf_dir: str) -> tuple[str, str, str]:
     """Land the three join inputs as external catalog tables and
     ANALYZE them (CBO reads stats from the catalog, so plain parquet
-    scans can't feed it). Once per (SF tag, applicationId): the
-    external path keeps placement explicit and concurrent-session-safe;
-    stats live in the session catalog for every later call."""
-    tag = _os.path.basename(sf_dir.rstrip("/")).replace(".", "_")
-    app = _re.sub(r"\W", "_", spark.sparkContext.applicationId)
-    base = _os.path.join("/tmp/spark_graft_scratch", f"cbo_{tag}_{app}")
-    names = (f"cbo_li_{tag}_{app}", f"cbo_o_{tag}_{app}", f"cbo_c_{tag}_{app}")
+    scans can't feed it), once per session through ``land_once``; the
+    stats stay in the session catalog for every later call."""
     cols = {
         "lineitem": ["l_orderkey", "l_extendedprice"],
         "orders": ["o_orderkey", "o_custkey", "o_orderpriority"],
         "customer": ["c_custkey", "c_mktsegment"],
     }
-    with _LAND_LOCK:
-        if base not in _LANDED:
-            _atexit.register(_shutil.rmtree, base, ignore_errors=True)
-            for name, (t, cs) in zip(names, cols.items()):
-                (
-                    read_table(spark, t, sf_dir)
-                    .select(*cs)
-                    .write.mode("overwrite")
-                    .format("parquet")
-                    .option("path", _os.path.join(base, name))
-                    .saveAsTable(name)
-                )
-                spark.sql(
-                    f"ANALYZE TABLE {name} COMPUTE STATISTICS FOR ALL COLUMNS"
-                )
-            _LANDED.add(base)
-    return names
+
+    def names(base: str) -> tuple[str, str, str]:
+        tag = _os.path.basename(base)
+        return (f"{tag}_li", f"{tag}_o", f"{tag}_c")
+
+    def land(base: str) -> None:
+        for name, (t, cs) in zip(names(base), cols.items()):
+            (
+                read_table(spark, t, sf_dir)
+                .select(*cs)
+                .write.mode("overwrite")
+                .format("parquet")
+                .option("path", _os.path.join(base, name))
+                .saveAsTable(name)
+            )
+            spark.sql(f"ANALYZE TABLE {name} COMPUTE STATISTICS FOR ALL COLUMNS")
+
+    return names(land_once(spark, "cbo", sf_dir, land))
 
 
 def build_cbo_join(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -29,6 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from books2scrape_etl_spark.functions.util import land_once
 from books2scrape_etl_spark.io import read_table
 from books2scrape_etl_spark.operators import freq, quantize
 from books2scrape_etl_spark.registry import register
@@ -234,14 +235,14 @@ def q_scan_jsonl(spark: SparkSession, sf_dir: str) -> DataFrame:
     table — the LLM-corpus interchange format. The oracle reads the
     ORIGINAL parquet, so the check pins lossless serialization of text
     (newlines, unicode) through the JSON line format."""
-    import os
-
     from books2scrape_etl_spark.io import TESTDATA_SCHEMAS, read_jsonl, write_jsonl
 
-    path = os.path.join(
-        "/tmp/spark_graft_scratch", f"documents_jsonl_{os.path.basename(sf_dir)}"
+    path = land_once(
+        spark,
+        "documents_jsonl",
+        sf_dir,
+        lambda base: write_jsonl(read_table(spark, "documents", sf_dir), base),
     )
-    write_jsonl(read_table(spark, "documents", sf_dir), path)
     return read_jsonl(spark, path, TESTDATA_SCHEMAS["documents"])
 
 
@@ -257,15 +258,15 @@ def q_scan_orc(spark: SparkSession, sf_dir: str) -> DataFrame:
     interchange. Timestamp column excluded: ORC stores session-local
     timestamps (a known cross-format semantic difference) — the events
     reader's NTZ handling in read_table is the engine's answer there."""
-    import os
-
     from books2scrape_etl_spark.io import read_orc, write_orc
 
-    path = os.path.join(
-        "/tmp/spark_graft_scratch", f"orders_orc_{os.path.basename(sf_dir)}"
-    )
     cols = ["o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice", "o_orderpriority"]
-    write_orc(read_table(spark, "orders", sf_dir).select(*cols), path)
+    path = land_once(
+        spark,
+        "orders_orc",
+        sf_dir,
+        lambda base: write_orc(read_table(spark, "orders", sf_dir).select(*cols), base),
+    )
     return read_orc(spark, path)
 
 
@@ -290,9 +291,6 @@ def q_scan_merge_schema(spark: SparkSession, sf_dir: str) -> DataFrame:
     footer-only operation (no data rewrite) — that is the point."""
     import os
 
-    root = os.path.join(
-        "/tmp/spark_graft_scratch", f"docs_evolving_{os.path.basename(sf_dir)}"
-    )
     docs = read_table(spark, "documents", sf_dir)
     b1 = docs.where(F.col("doc_id") % 2 == 0).select(
         "doc_id", F.lit(1).alias("batch"), "text"
@@ -300,8 +298,12 @@ def q_scan_merge_schema(spark: SparkSession, sf_dir: str) -> DataFrame:
     b2 = docs.where(F.col("doc_id") % 2 == 1).select(
         "doc_id", F.lit(2).alias("batch"), "lang"
     )
-    b1.write.mode("overwrite").parquet(os.path.join(root, "b1"))
-    b2.write.mode("overwrite").parquet(os.path.join(root, "b2"))
+
+    def land(base: str) -> None:
+        b1.write.mode("overwrite").parquet(os.path.join(base, "b1"))
+        b2.write.mode("overwrite").parquet(os.path.join(base, "b2"))
+
+    root = land_once(spark, "docs_evolving", sf_dir, land)
     merged = spark.read.option("mergeSchema", "true").parquet(
         os.path.join(root, "b1"), os.path.join(root, "b2")
     )
@@ -322,15 +324,17 @@ def q_compact_files(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from books2scrape_etl_spark.io import compact_small_files
 
-    base = os.path.join(
-        "/tmp/spark_graft_scratch", f"orders_compact_{os.path.basename(sf_dir)}"
-    )
     cols = ["o_orderkey", "o_custkey", "o_orderstatus", "o_orderpriority"]
-    src, dst = os.path.join(base, "small"), os.path.join(base, "compacted")
-    read_table(spark, "orders", sf_dir).select(*cols).repartition(64).write.mode(
-        "overwrite"
-    ).parquet(src)
-    return compact_small_files(spark, src, dst, target_files=4)
+
+    def land(base: str) -> None:
+        src = os.path.join(base, "small")
+        read_table(spark, "orders", sf_dir).select(*cols).repartition(64).write.mode(
+            "overwrite"
+        ).parquet(src)
+        compact_small_files(spark, src, os.path.join(base, "compacted"), target_files=4)
+
+    base = land_once(spark, "orders_compact", sf_dir, land)
+    return spark.read.parquet(os.path.join(base, "compacted"))
 
 
 _OUTLIER_SQL = """

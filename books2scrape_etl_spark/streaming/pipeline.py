@@ -21,8 +21,6 @@ the same plan upstream).
 from __future__ import annotations
 
 import os
-import tempfile
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -33,18 +31,16 @@ from books2scrape_etl_spark.plans.books import build_books_star, clean_books
 def streaming_books_star(
     spark: SparkSession,
     landing_dir: str,
-    out_dir: str | None = None,
+    out_dir: str,
     max_files_per_trigger: int = 1,
 ) -> DataFrame:
     """Drain ``landing_dir`` (parquet files of raw book rows) through
     the books star transform under foreachBatch; returns the landed
-    fact rows re-read from the sink (with their batch_id column)."""
+    fact rows re-read from the sink ``out_dir`` (with their batch_id
+    column)."""
     from books2scrape_etl_spark.io import BOOKS_RAW_SCHEMA
 
-    out = out_dir or os.path.join(
-        tempfile.gettempdir(), f"books_star_{uuid.uuid4().hex[:8]}"
-    )
-    ckpt = os.path.join(out, "_ckpt")
+    ckpt = os.path.join(out_dir, "_ckpt")
 
     raw = (
         spark.readStream.schema(BOOKS_RAW_SCHEMA)
@@ -53,7 +49,7 @@ def streaming_books_star(
     )
 
     def land(batch_df: DataFrame, batch_id: int) -> None:
-        land_one_batch(spark, batch_df, out, batch_id)
+        land_one_batch(spark, batch_df, out_dir, batch_id)
 
     from books2scrape_etl_spark.functions.util import conf_guard
     from books2scrape_etl_spark.streaming.windows import STATE_PARTITION_CONFS
@@ -66,7 +62,7 @@ def streaming_books_star(
             .start()
         )
         q.awaitTermination()
-    return spark.read.parquet(os.path.join(out, "fact"))
+    return spark.read.parquet(os.path.join(out_dir, "fact"))
 
 
 def land_one_batch(spark: SparkSession, raw: DataFrame, out: str, batch_id: int) -> None:

@@ -23,13 +23,12 @@ from __future__ import annotations
 
 import os
 import tempfile
-import threading
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from books2scrape_etl_spark.functions.util import conf_guard
+from books2scrape_etl_spark.functions.util import conf_guard, land_once
 from books2scrape_etl_spark.io import TESTDATA_SCHEMAS
 
 
@@ -107,58 +106,19 @@ def session_windows_batch(events: DataFrame, gap_minutes: int = 30) -> DataFrame
     )
 
 
-_EVENTS_STAGE_LOCK = threading.Lock()
+def _stage_events_dir(spark: SparkSession, src: str, copies: int) -> str:
+    """The file-stream source wants a directory: land one holding
+    ``copies`` symlinks to the events file ``src`` (what a real
+    deployment's landing directory would be), once per (src, copies)
+    per session. Concurrent drains (stream_windows_suite's seven
+    streams) share it; it is never rebuilt under a live stream."""
 
-
-def _stage_events_dir(src: str, copies: int) -> str:
-    """Validate-or-(re)build the symlinked landing dir, safely under
-    CONCURRENT drains (stream_windows_suite runs its seven streams in
-    parallel) and concurrent same-SF processes: the old
-    rmtree-then-recreate on every call deleted a sibling's staging dir
-    out from under its in-flight stream and raced two creators into
-    FileExistsError (measured the moment the suite went concurrent).
-    Now: if the dir already has exactly the expected symlinks, reuse
-    it untouched (the steady-state path); otherwise build aside and
-    atomically rename into place. The in-process lock serializes the
-    suite's threads; cross-process, the loser of the rename race falls
-    back to validating what the winner installed."""
-    import hashlib
-    import shutil
-
-    digest = hashlib.md5(f"{src}|{copies}".encode()).hexdigest()[:16]
-    stream_dir = os.path.join(tempfile.gettempdir(), f"events_stream_{digest}")
-    want = sorted(f"events_{i}.parquet" for i in range(copies))
-
-    def valid() -> bool:
-        try:
-            entries = sorted(os.listdir(stream_dir))
-        except OSError:
-            return False
-        if entries != want:
-            return False
-        try:
-            return all(
-                os.readlink(os.path.join(stream_dir, e)) == src for e in entries
-            )
-        except OSError:
-            return False
-
-    with _EVENTS_STAGE_LOCK:
-        if valid():
-            return stream_dir
-        build = f"{stream_dir}.build_{os.getpid()}_{uuid.uuid4().hex[:6]}"
-        os.makedirs(build)
+    def link(base: str) -> None:
+        os.makedirs(base)
         for i in range(copies):
-            os.symlink(src, os.path.join(build, f"events_{i}.parquet"))
-        shutil.rmtree(stream_dir, ignore_errors=True)
-        try:
-            os.rename(build, stream_dir)
-        except OSError:
-            # another process installed it between our rmtree and rename
-            shutil.rmtree(build, ignore_errors=True)
-            if not valid():
-                raise
-        return stream_dir
+            os.symlink(src, os.path.join(base, f"events_{i}.parquet"))
+
+    return land_once(spark, f"events_stream_x{copies}", src, link)
 
 
 def _stream_events(spark: SparkSession, sf_dir: str, copies: int = 1) -> DataFrame:
@@ -184,15 +144,11 @@ def _stream_events(spark: SparkSession, sf_dir: str, copies: int = 1) -> DataFra
             for f in TESTDATA_SCHEMAS["events"].fields
         ]
     )
-    # the file-stream source wants a directory; expose the single parquet
-    # file through a symlinked dir (what a real deployment's landing
-    # directory would be). ``copies`` symlinks the file N times — a
-    # genuinely duplicated stream for exercising dedup (every event
-    # arrives ``copies`` times; exactly-once semantics must collapse it).
-    # Dir name = md5 of (src, copies): stable across processes (Python's
-    # salted hash() minted a fresh dir per driver run, leaking stale
-    # /tmp dirs each round — ADVICE r4).
-    raw = spark.readStream.schema(schema).parquet(_stage_events_dir(src, copies))
+    # ``copies`` > 1 is a genuinely duplicated stream for exercising
+    # dedup (every event arrives ``copies`` times; exactly-once
+    # semantics must collapse it).
+    stream_dir = _stage_events_dir(spark, src, copies)
+    raw = spark.readStream.schema(schema).parquet(stream_dir)
     if ts_read == "bigint":
         # raw epoch longs: infer the unit (ns/us/ms/s) from sampled
         # values of the batch probe — same magnitude rule as io.py; a

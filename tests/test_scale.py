@@ -1,6 +1,7 @@
 """Scale-path operator tests: the distributed constructions must be
 semantically identical to their exact forms."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from books2scrape_etl_spark.operators.scale import dense_ids_scale, salted_join
@@ -334,6 +335,175 @@ def test_stage_threads_stress():
         with util._STAGE_LOCK:
             for k in [k for k, f in util._STAGED.items() if isinstance(f, Frame)]:
                 del util._STAGED[k]
+
+
+@pytest.fixture
+def stand_in_session():
+    """A stand-in for land_once's only session use,
+    ``spark.sparkContext.applicationId``; its scratch root is removed
+    after the test."""
+    import os
+    import shutil
+    import types
+    import uuid
+
+    from books2scrape_etl_spark.functions import util
+
+    app = f"stand-in-{uuid.uuid4().hex[:8]}"
+    yield types.SimpleNamespace(sparkContext=types.SimpleNamespace(applicationId=app))
+    shutil.rmtree(os.path.join(util._SCRATCH, f"{os.getpid()}_{app}"), ignore_errors=True)
+
+
+def test_land_once_threads_write_once(stand_in_session, tmp_path):
+    """16 threads race on one base: ``write`` runs exactly once and
+    every thread gets the one path."""
+    import os
+    import sys
+    import threading
+    import time
+    from concurrent.futures import ThreadPoolExecutor
+
+    from books2scrape_etl_spark.functions.util import land_once
+
+    calls = []
+    start = threading.Barrier(16)
+
+    def write(base):
+        calls.append(base)
+        time.sleep(0.05)
+        os.makedirs(base)
+
+    def one(_):
+        start.wait(timeout=30)
+        return land_once(stand_in_session, "threads", str(tmp_path), write)
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        with ThreadPoolExecutor(max_workers=16) as pool:
+            paths = list(pool.map(one, range(16), timeout=60))
+    finally:
+        sys.setswitchinterval(old)
+    assert len(calls) == 1
+    assert set(paths) == {calls[0]}
+
+
+def test_land_once_second_call_leaves_base_untouched(stand_in_session, tmp_path):
+    import os
+
+    from books2scrape_etl_spark.functions.util import land_once
+
+    base = land_once(stand_in_session, "reuse", str(tmp_path), os.makedirs)
+    ino = os.stat(base).st_ino
+
+    def must_not_run(_):
+        raise AssertionError("landed twice")
+
+    assert land_once(stand_in_session, "reuse", str(tmp_path), must_not_run) == base
+    assert os.stat(base).st_ino == ino
+
+
+def test_land_once_failed_write_lands_again(stand_in_session, tmp_path):
+    import os
+
+    from books2scrape_etl_spark.functions.util import land_once
+
+    seen = []
+
+    def partial(base):
+        seen.append(base)
+        os.makedirs(base)
+        open(os.path.join(base, "partial"), "w").close()
+        raise OSError("disk full")
+
+    with pytest.raises(OSError):
+        land_once(stand_in_session, "retry", str(tmp_path), partial)
+    assert not os.path.exists(seen[0] + ".landed")
+
+    def whole(base):
+        os.makedirs(base)
+        open(os.path.join(base, "whole"), "w").close()
+
+    assert land_once(stand_in_session, "retry", str(tmp_path), whole) == seen[0]
+    assert os.listdir(seen[0]) == ["whole"]
+    assert os.path.exists(seen[0] + ".landed")
+
+
+def test_land_once_keeps_earlier_lazy_scan(spark, tmp_path):
+    from books2scrape_etl_spark.functions.util import land_once
+
+    base = land_once(spark, "lazy_scan", str(tmp_path), lambda b: spark.range(7).write.parquet(b))
+    df = spark.read.parquet(base)
+    assert df.count() == 7
+    again = land_once(
+        spark,
+        "lazy_scan",
+        str(tmp_path),
+        lambda b: spark.range(3).write.mode("overwrite").parquet(b),
+    )
+    assert again == base
+    assert sorted(r.id for r in df.collect()) == list(range(7))
+
+
+def test_land_once_root_removed_at_exit(tmp_path):
+    """No JVM: a stand-in session lands one base in a child process;
+    once the child exits its session root is gone."""
+    import os
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    code = (
+        "import os, sys, types\n"
+        "from books2scrape_etl_spark.functions.util import land_once\n"
+        "ctx = types.SimpleNamespace(applicationId='stand-in-exit')\n"
+        "spark = types.SimpleNamespace(sparkContext=ctx)\n"
+        "base = land_once(spark, 'exit', sys.argv[1], os.makedirs)\n"
+        "assert os.path.isdir(base)\n"
+        "print(os.path.dirname(base))\n"
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", code, str(tmp_path)],
+        cwd=repo,
+        capture_output=True,
+        text=True,
+        check=True,
+        timeout=120,
+    )
+    root = out.stdout.strip()
+    assert os.path.basename(root).endswith("_stand-in-exit")
+    assert not os.path.exists(root)
+
+
+def test_same_basename_inputs_land_separately(spark, sf_dir, tmp_path):
+    """Two inputs whose directories share a basename each read their
+    own landing within one session."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    from books2scrape_etl_spark.queries import ORACLE_SQL, QUERIES
+    from tests.oracle import TABLES, compare, run_oracle
+
+    dirs = []
+    for side, keep in (("a", 1.0), ("b", 0.5)):
+        d = tmp_path / side / "sf0.001"
+        d.mkdir(parents=True)
+        for t in TABLES:
+            src = os.path.join(sf_dir, f"{t}.parquet")
+            if t in ("nation", "lineitem"):
+                tbl = pq.read_table(src)
+                pq.write_table(tbl.slice(0, int(tbl.num_rows * keep)), str(d / f"{t}.parquet"))
+            else:
+                os.symlink(src, d / f"{t}.parquet")
+        dirs.append(str(d))
+    for qname in ("join_dpp", "scan_csv"):
+        frames = [QUERIES[qname](spark, d) for d in dirs]
+        rows = [sorted(map(tuple, f.collect())) for f in frames]
+        assert rows[0] != rows[1], qname
+        for d, f in zip(dirs, frames):
+            problems = compare(f, run_oracle(ORACLE_SQL[qname], d))
+            assert not problems, f"{qname} on {d}: {problems}"
 
 
 def test_chained_ntile_scale_keeps_first_ranked_frame(spark):

@@ -1,8 +1,9 @@
 """The package caches intermediates one way, ``functions.util.stage``,
-and changes session confs temporarily one way,
-``functions.util.conf_guard``. Static scans (no Spark) fail on any
-other ``.persist(`` / ``.cache(`` or ``conf.unset(`` call under the
-package."""
+changes session confs temporarily one way, ``functions.util.conf_guard``,
+and lands scratch data one way, ``functions.util.land_once``. Static
+scans (no Spark) fail on any other ``.persist(`` / ``.cache(``,
+``conf.unset(``, ``import atexit``, ``tempfile.gettempdir(`` or
+scratch-root literal under the package."""
 
 import ast
 import pathlib
@@ -11,19 +12,23 @@ PKG = pathlib.Path(__file__).resolve().parent.parent / "books2scrape_etl_spark"
 ALLOWED = PKG / "functions" / "util.py"
 
 
-def _calls_outside_util(match):
+def _nodes_outside_util(match):
     hits = []
     for path in sorted(PKG.rglob("*.py")):
         if path == ALLOWED:
             continue
         for node in ast.walk(ast.parse(path.read_text(), str(path))):
-            if (
-                isinstance(node, ast.Call)
-                and isinstance(node.func, ast.Attribute)
-                and match(node.func)
-            ):
+            if match(node):
                 hits.append(f"{path.relative_to(PKG.parent)}:{node.lineno}")
     return hits
+
+
+def _calls_outside_util(match):
+    return _nodes_outside_util(
+        lambda n: isinstance(n, ast.Call)
+        and isinstance(n.func, ast.Attribute)
+        and match(n.func)
+    )
 
 
 def test_no_persist_or_cache_outside_stage():
@@ -40,3 +45,23 @@ def test_no_conf_unset_outside_conf_guard():
         and f.value.attr == "conf"
     )
     assert not hits, "change confs through functions.util.conf_guard: " + ", ".join(hits)
+
+
+def _is_landing(node):
+    if isinstance(node, ast.Import):
+        return any(a.name == "atexit" for a in node.names)
+    if isinstance(node, ast.ImportFrom):
+        return node.module == "atexit"
+    if isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute):
+        return node.func.attr == "gettempdir"
+    return (
+        isinstance(node, ast.Constant)
+        and isinstance(node.value, str)
+        and "/tmp/spark_graft_scratch" in node.value
+    )
+
+
+def test_no_scratch_landing_outside_land_once():
+    # tempfile.TemporaryDirectory stays allowed: its with-scope cleans up
+    hits = _nodes_outside_util(_is_landing)
+    assert not hits, "land scratch data through functions.util.land_once: " + ", ".join(hits)

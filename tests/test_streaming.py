@@ -345,9 +345,9 @@ def test_stateful_state_survives_midrun_kill(spark, tmp_path):
     assert sorted(set(ids)) == list(range(200))
 
 
-def test_stage_events_dir_concurrent_and_reusable(sf_dir):
+def test_stage_events_dir_concurrent_and_reusable(spark, sf_dir):
     """The staging dir must survive concurrent stagers (the parallel
-    suite's seven drains) and be REUSED, not rebuilt, once valid — a
+    suite's seven drains) and be REUSED, not rebuilt, once landed — a
     destructive rebuild deletes a sibling's landing dir mid-drain
     (the r9c3 FileExistsError find)."""
     import os
@@ -357,16 +357,16 @@ def test_stage_events_dir_concurrent_and_reusable(sf_dir):
 
     src = os.path.abspath(os.path.join(sf_dir, "events.parquet"))
     with ThreadPoolExecutor(max_workers=8) as pool:
-        dirs = list(pool.map(lambda _: _stage_events_dir(src, 1), range(16)))
+        dirs = list(pool.map(lambda _: _stage_events_dir(spark, src, 1), range(16)))
     assert len(set(dirs)) == 1
     d = dirs[0]
     assert sorted(os.listdir(d)) == ["events_0.parquet"]
     assert os.readlink(os.path.join(d, "events_0.parquet")) == src
-    # steady state: a second call reuses the installed dir untouched
+    # steady state: a second call reuses the landed dir untouched
     ino = os.stat(d).st_ino
-    assert _stage_events_dir(src, 1) == d
+    assert _stage_events_dir(spark, src, 1) == d
     assert os.stat(d).st_ino == ino
     # a different layout (copies=2) gets its own dir, same guarantees
-    d2 = _stage_events_dir(src, 2)
+    d2 = _stage_events_dir(spark, src, 2)
     assert d2 != d
     assert sorted(os.listdir(d2)) == ["events_0.parquet", "events_1.parquet"]

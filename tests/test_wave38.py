@@ -202,8 +202,8 @@ def test_conf_guard_releases_lock_when_conf_call_raises():
 
 
 def test_land_cbo_tables_lands_once(spark, sf_dir):
-    # second call must reuse the session's landed+ANALYZEd tables (the
-    # query_defs37 land-once rule: no overwrite under a live lazy scan)
+    # second call must reuse the session's landed+ANALYZEd tables
+    # (functions.util.land_once: no overwrite under a live lazy scan)
     names1 = land_cbo_tables(spark, sf_dir)
     li = spark.table(names1[0])
     n_before = li.count()
