@@ -19,14 +19,13 @@ from pyspark.sql import DataFrame, SparkSession
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from books2scrape_etl_spark.functions.util import land_once  # noqa: E402
 from books2scrape_etl_spark.plans.flagship import flagship  # noqa: E402
 from books2scrape_etl_spark.queries import (  # noqa: E402
     ORACLE_SQL,
     QUERIES,
     freeze_registry_heap,
 )
-
-_SHIPPED: set[int] = set()
 
 
 def _ship_package(spark: SparkSession) -> None:
@@ -38,28 +37,27 @@ def _ship_package(spark: SparkSession) -> None:
     repo as its cwd (local mode inherits cwd), deserialization fails
     with ModuleNotFoundError. Shipping a zip via addPyFile works for any
     driver cwd and for real multi-host executors alike.
+
+    The zip lands once per session through ``land_once``, under that
+    session's own scratch root (two concurrent drivers never rewrite
+    each other's zip while an executor fetches it), and is removed with
+    the root when the interpreter exits. addPyFile keys the executor-side
+    cache on the file NAME, so the zip's base name stays fixed.
     """
-    sc = spark.sparkContext
-    if id(sc) in _SHIPPED:
-        return
     import shutil
-    import tempfile
 
     repo_root = os.path.dirname(os.path.abspath(__file__))
-    # per-process zip path: a FIXED /tmp name races when two drivers run
-    # concurrently on one host — make_archive rewrites the file while the
-    # other session's executor fetches it ("exists and does not match
-    # contents of", observed with two parallel verify sweeps). addPyFile
-    # keys the executor-side cache on the file NAME, so the base name
-    # must stay stable; only the directory is unique.
-    zip_base = os.path.join(
-        tempfile.mkdtemp(prefix="b2s_pkg_"), "books2scrape_etl_spark_pkg"
-    )
-    zip_path = shutil.make_archive(
-        zip_base, "zip", root_dir=repo_root, base_dir="books2scrape_etl_spark"
-    )
-    sc.addPyFile(zip_path)
-    _SHIPPED.add(id(sc))
+
+    def write(base: str) -> None:
+        zip_path = shutil.make_archive(
+            os.path.join(base, "books2scrape_etl_spark_pkg"),
+            "zip",
+            root_dir=repo_root,
+            base_dir="books2scrape_etl_spark",
+        )
+        spark.sparkContext.addPyFile(zip_path)
+
+    land_once(spark, "pkg", repo_root, write)
 
 
 def entry(spark: SparkSession) -> DataFrame:

@@ -94,8 +94,8 @@ def bin_quantile_approx(
     """
     n = len(labels)
     probs = [i / n for i in range(1, n)]
-    edges = df.approxQuantile(col, probs, relative_error)
-    c = F.col(col)
+    c = to_col(col)
+    edges = df.select(c.alias("__q")).approxQuantile("__q", probs, relative_error)
     expr = None
     for i, lab in enumerate(labels):
         if i < len(edges):

@@ -53,8 +53,9 @@ def _sample_order_boundaries(
     n_buckets = min(n_buckets, _MAX_ORDER_BUCKETS)
     if n_buckets <= 1:
         return []
+    cols = [to_col(c) for c in key_cols]
     samp = (
-        d.select(*key_cols, F.xxhash64(*key_cols).alias("__h"))
+        d.select(*cols, F.xxhash64(*cols).alias("__h"))
         .orderBy("__h")
         .limit(per_bucket * n_buckets)
         .collect()

@@ -155,9 +155,9 @@ _reorder()
 # NOT an import side effect (ADVICE r8): freezing at import time would
 # also permanently exempt whatever caller state happens to be alive
 # (pytest internals, half-built fixtures) from cycle collection. Each
-# perf entry point (bench.py, scripts/bench_warm.py, the driver
-# contract's __spark_entry__.queries()/entry(), tests/conftest.py's
-# session fixture) calls this explicitly AFTER its own setup instead.
+# perf entry point (bench.py, the driver contract's
+# __spark_entry__.queries()/entry(), tests/conftest.py's session
+# fixture) calls this explicitly AFTER its own setup instead.
 # Idempotent.
 _FROZEN = False
 

@@ -10,6 +10,10 @@
 # ~5-minute plumbing check across all five axes; unset = full registry,
 # ~10 min per axis).
 #
+# The logs and the perturbed copy of SF_DIR live in one fresh log dir,
+# removed on exit when every axis reports "fail": 0 and kept (its path
+# printed) otherwise.
+#
 # Axes (first measured green in the round-9 second continuation):
 #   1 vanilla          — the driver's own session shape
 #   2 perturbed data   — facts hash-sampled 80-90% (data-vintage probe)
@@ -19,15 +23,27 @@
 set -u
 SF=${1:-/root/testdata/sf0.01}
 REPO=$(cd "$(dirname "$0")/.." && pwd)
-MUT=/tmp/sfmut_matrix
 LOGDIR=$(mktemp -d /tmp/robustness_XXXX)
+MUT=$LOGDIR/sfmut
 echo "logs: $LOGDIR"
+GREEN=0
+
+cleanup() {
+  if [ "$GREEN" -eq 5 ]; then
+    rm -rf "$LOGDIR"
+  else
+    echo "kept logs: $LOGDIR"
+  fi
+}
+trap cleanup EXIT
 
 run() { # name sf_dir extra_conf
-  local name=$1 sf=$2 conf=${3:-}
+  local name=$1 sf=$2 conf=${3:-} last
   ( cd /tmp && SIM_SF_DIR="$sf" SIM_CONF="$conf" \
       python "$REPO/scripts/driver_sim.py" > "$LOGDIR/$name.log" 2>&1 )
-  printf '%-16s %s\n' "$name" "$(tail -1 "$LOGDIR/$name.log")"
+  last=$(tail -1 "$LOGDIR/$name.log")
+  printf '%-16s %s\n' "$name" "$last"
+  case $last in *'"fail": 0,'*) GREEN=$((GREEN + 1)) ;; esac
 }
 
 python "$REPO/scripts/mutate_testdata.py" "$SF" "$MUT" > /dev/null

@@ -2,12 +2,15 @@
 fixture (FIXTURES.md §A invariants)."""
 
 import shutil
+from collections import Counter
 
 import pytest
+from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from books2scrape_etl_spark import io
 from books2scrape_etl_spark.functions import util
+from books2scrape_etl_spark.operators.scale import EXACT_SORT_BUDGET_CONF, ntile_scale
 from books2scrape_etl_spark.plans.books import (
     DIM_SPECS,
     PRICE_EXCL,
@@ -163,3 +166,46 @@ def test_transform_staging_footprint(spark, tmp_path):
     assert set(util._STAGED) == staged
     assert list(util._STAGED)[-3:] == added
     assert util._STAGED[added[1]] is cleaned2  # the rerun's frame replaced the first
+
+
+def test_transform_over_exact_sort_budget(spark, tmp_path, monkeypatch):
+    """Above the exact-sort budget the tiers take approximate value
+    edges and the dims take the bucketed surrogate keys, both over the
+    reference's dotted column names. The whole run succeeds; the
+    report, which reads no price tier, equals the under-budget
+    (golden) one, and so do the dims whose keys are not price tiers."""
+    monkeypatch.delenv("SMTP_HOST", raising=False)
+    raw = books_raw_df(spark)
+    golden_cleaned, golden_dims, _ = transform_books(raw)
+    golden = run_report(golden_cleaned)
+    same_dims = ("dim_book", "dim_category", "dim_stock_tier")
+    golden_rows = {
+        name: golden_dims[name].orderBy(DIM_SPECS[name][1]).collect() for name in same_dims
+    }
+
+    with util.conf_guard(spark, {EXACT_SORT_BUDGET_CONF: "0"}):
+        cleaned, dims, fact = transform_books(raw)
+        for name, df in [*dims.items(), ("fact_book_inventory", fact)]:
+            io.write_parquet(df, str(tmp_path / name))
+        summary = run_report(cleaned)
+
+    assert summary == golden
+    for name in same_dims:
+        landed = spark.read.parquet(str(tmp_path / name))
+        assert landed.orderBy(DIM_SPECS[name][1]).collect() == golden_rows[name], name
+    fact_rows = spark.read.parquet(str(tmp_path / "fact_book_inventory")).count()
+    assert fact_rows == len(BOOKS_RAW_ROWS)
+
+
+def test_ntile_scale_dotted_column(cleaned):
+    """The bucketed ntile resolves a dotted order column and equals the
+    exact window form."""
+    order = [PRICE_EXCL, "UPC"]
+    scaled = ntile_scale(cleaned, order, 3, out_col="t", num_partitions=4)
+    w = Window.orderBy(*[util.to_col(c).asc_nulls_first() for c in order])
+    exact = cleaned.withColumn("t", F.ntile(3).over(w))
+
+    def tiles(df):
+        return Counter(tuple(r) for r in df.select(util.to_col(PRICE_EXCL), "UPC", "t").collect())
+
+    assert tiles(scaled) == tiles(exact)

@@ -2,25 +2,30 @@
 changes session confs temporarily one way, ``functions.util.conf_guard``,
 and lands scratch data one way, ``functions.util.land_once``. Static
 scans (no Spark) fail on any other ``.persist(`` / ``.cache(``,
-``conf.unset(``, ``import atexit``, ``tempfile.gettempdir(`` or
-scratch-root literal under the package."""
+``conf.unset(``, ``import atexit``, ``tempfile.gettempdir(``,
+``mkdtemp(`` or scratch-root literal under the package or in the
+driver contract module, and on any underscore-prefixed package name
+that a script imports."""
 
 import ast
 import pathlib
 
-PKG = pathlib.Path(__file__).resolve().parent.parent / "books2scrape_etl_spark"
+REPO = pathlib.Path(__file__).resolve().parent.parent
+PKG = REPO / "books2scrape_etl_spark"
 ALLOWED = PKG / "functions" / "util.py"
 
 
-def _nodes_outside_util(match):
+def _nodes(paths, match):
     hits = []
-    for path in sorted(PKG.rglob("*.py")):
-        if path == ALLOWED:
-            continue
+    for path in paths:
         for node in ast.walk(ast.parse(path.read_text(), str(path))):
             if match(node):
-                hits.append(f"{path.relative_to(PKG.parent)}:{node.lineno}")
+                hits.append(f"{path.relative_to(REPO)}:{node.lineno}")
     return hits
+
+
+def _nodes_outside_util(match):
+    return _nodes((p for p in sorted(PKG.rglob("*.py")) if p != ALLOWED), match)
 
 
 def _calls_outside_util(match):
@@ -52,8 +57,10 @@ def _is_landing(node):
         return any(a.name == "atexit" for a in node.names)
     if isinstance(node, ast.ImportFrom):
         return node.module == "atexit"
-    if isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute):
-        return node.func.attr == "gettempdir"
+    if isinstance(node, ast.Call):
+        f = node.func
+        name = f.attr if isinstance(f, ast.Attribute) else getattr(f, "id", None)
+        return name in ("gettempdir", "mkdtemp")
     return (
         isinstance(node, ast.Constant)
         and isinstance(node.value, str)
@@ -63,5 +70,22 @@ def _is_landing(node):
 
 def test_no_scratch_landing_outside_land_once():
     # tempfile.TemporaryDirectory stays allowed: its with-scope cleans up
-    hits = _nodes_outside_util(_is_landing)
+    hits = _nodes_outside_util(_is_landing) + _nodes([REPO / "__spark_entry__.py"], _is_landing)
     assert not hits, "land scratch data through functions.util.land_once: " + ", ".join(hits)
+
+
+def test_scripts_import_public_names_only():
+    # a script that reaches a private name breaks on every refactor of it
+    hits = []
+    for path in sorted((REPO / "scripts").glob("*.py")):
+        for node in ast.walk(ast.parse(path.read_text(), str(path))):
+            if (
+                isinstance(node, ast.ImportFrom)
+                and (node.module or "").split(".")[0] == "books2scrape_etl_spark"
+            ):
+                hits += [
+                    f"{path.relative_to(REPO)}:{node.lineno} {a.name}"
+                    for a in node.names
+                    if a.name.startswith("_")
+                ]
+    assert not hits, "import public package names in scripts: " + ", ".join(hits)
