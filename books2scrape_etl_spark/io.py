@@ -1,17 +1,21 @@
-"""IO layer: explicit schemas + readers/writers.
+"""IO layer: schemas + readers/writers.
 
 The reference re-infers its schema on every CSV read
 (transformation_pipeline.py:40 — ``pd.read_csv`` with no dtype=) and uses CSV
 as the only on-disk format (SURVEY.md §1.1). At scale both are wrong:
 inference is an extra full pass and nondeterministic; CSV is row-oriented,
-schema-less and unsplittable when compressed. The engine declares every
-schema as an explicit StructType and defaults to Parquet (columnar,
-schema-carrying, predicate-pushdown + column-pruning capable); CSV remains
-an edge format for parity with the reference (extract_pipeline.py:89).
+schema-less and unsplittable when compressed. The engine defaults to Parquet
+(columnar, schema-carrying, predicate-pushdown + column-pruning capable) and
+hands every table scan an explicit schema: ``read_table`` takes it from the
+parquet footer in the Spark driver, with no Spark job, converted exactly as
+Spark's own inference would; CSV and JSONL reads take declared StructTypes.
+CSV remains an edge format for parity with the reference
+(extract_pipeline.py:89).
 """
 
 from __future__ import annotations
 
+import json
 import logging
 import os
 
@@ -23,7 +27,9 @@ _log = logging.getLogger(__name__)
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 # ---------------------------------------------------------------------------
-# Testdata schemas (TESTDATA.md / FIXTURES.md §B) — declared, never inferred.
+# Testdata schemas (TESTDATA.md / FIXTURES.md §B) — the declared contract.
+# ``read_table`` does not read with these: it takes each file's own footer
+# schema, because the physical types have drifted between data vintages.
 # ---------------------------------------------------------------------------
 
 TESTDATA_SCHEMAS: dict[str, T.StructType] = {
@@ -159,7 +165,73 @@ def read_table(spark: SparkSession, name: str, sf_dir: str = DEFAULT_SF_DIR) -> 
     path = os.path.join(sf_dir, f"{name}.parquet")
     if name == "events":
         return _read_events_any_vintage(spark, path)
-    return spark.read.parquet(path)
+    return _read_parquet(spark, path)
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` under the schema that call would infer,
+    read from one footer in the Spark driver. Inference itself runs a Spark job
+    on every call (Spark's schema merge parallelizes even a single file);
+    this is a handful of JVM calls and no job. A path with no
+    footer to read goes to Spark unchanged, so its error is Spark's own."""
+    schema = _footer_schema(spark, path)
+    return (spark.read if schema is None else spark.read.schema(schema)).parquet(path)
+
+
+def _footer_schema(spark: SparkSession, path: str) -> T.StructType | None:
+    """The schema Spark's parquet inference gives ``path`` without
+    ``mergeSchema``: the footer of ``_common_metadata``, else ``_metadata``,
+    else the first data file by path, listed as Spark's file index lists
+    (recursively, skipping hidden and ``_``-prefixed names), converted
+    by Spark's ``ParquetToSparkSchemaConverter`` under the session's SQLConf
+    — so ``nanosAsLong`` and the TIMESTAMP_NTZ inference apply exactly as in
+    a scan. ``None`` when the path does not exist or holds no file."""
+    from py4j.java_gateway import JavaClass
+
+    # JavaClass by name: one JVM round trip per call, where each dotted
+    # step of ``spark._jvm.org.apache...`` costs one more
+    gateway = spark.sparkContext._gateway._gateway_client
+
+    def cls(name: str) -> JavaClass:
+        return JavaClass(name, gateway)
+
+    state = spark._jsparkSession.sessionState()
+    conf = state.newHadoopConf()
+    root = cls("org.apache.hadoop.fs.Path")(path)
+    fs = root.getFileSystem(conf)
+    if not fs.exists(root):
+        return None
+    leaves = []
+    pending = [fs.getFileStatus(root)]
+    while pending:
+        status = pending.pop()
+        if not status.isDirectory():
+            leaves.append(status)
+            continue
+        for child in fs.listStatus(status.getPath()):
+            name = child.getPath().getName()
+            hidden = (
+                (name.startswith("_") and "=" not in name)
+                or name.startswith(".")
+                or name.endswith("._COPYING_")
+            )
+            if not hidden or name.startswith(("_common_metadata", "_metadata")):
+                pending.append(child)
+    if not leaves:
+        return None
+    rank = {"_common_metadata": 0, "_metadata": 1}
+    chosen = min(leaves, key=lambda s: (rank.get(s.getPath().getName(), 2), s.getPath().toString()))
+    parquet = "org.apache.spark.sql.execution.datasources.parquet."
+    footer = cls("org.apache.parquet.hadoop.Footer")(
+        chosen.getPath(),
+        cls(parquet + "ParquetFooterReader").readFooter(
+            cls("org.apache.parquet.hadoop.util.HadoopInputFile").fromStatus(chosen, conf),
+            cls("org.apache.parquet.format.converter.ParquetMetadataConverter").SKIP_ROW_GROUPS,
+        ),
+    )
+    converter = cls(parquet + "ParquetToSparkSchemaConverter")(state.conf())
+    schema = cls(parquet + "ParquetFileFormat").readSchemaFromFooter(footer, converter)
+    return T.StructType.fromJson(json.loads(schema.json()))
 
 
 # Epoch-unit magnitude bands: 2000-2100 wall clocks land at ~1e9 (s),
@@ -368,7 +440,7 @@ def _read_events_any_vintage(spark: SparkSession, path: str) -> DataFrame:
     # Harmless for micros files (the conf only affects NANOS columns);
     # required for nanos files, which otherwise fail the scan outright.
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(path)
+    df = _read_parquet(spark, path)
     ts_type = dict(df.dtypes).get("ts")
     if ts_type == "bigint":
         return df.withColumn("ts", _epoch_long_to_ts(df, path))

@@ -505,3 +505,21 @@ def test_headline_shuffle_budgets(spark, sf_dir):
         if shuffles > _HEADLINE_SHUFFLE_BUDGET[qname]:
             over[qname] = (shuffles, _HEADLINE_SHUFFLE_BUDGET[qname])
     assert not over, f"shuffle budget exceeded (got, budget): {over}"
+
+
+def test_rerun_reuses_generated_classes(spark, sf_dir):
+    """A warm headline pass finds its generated classes in Spark's
+    codegen cache: one pass compiles ~256 distinct classes, which the
+    default 100-entry cache evicted before the next pass, so every warm
+    pass recompiled all of them with Janino."""
+    from bench import HEADLINE, force
+
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    compiles = []
+    for _ in range(2):
+        before = metrics.METRIC_COMPILATION_TIME().getCount()
+        for qname in HEADLINE:
+            force(QUERIES[qname](spark, sf_dir))
+        compiles.append(metrics.METRIC_COMPILATION_TIME().getCount() - before)
+    assert compiles[1] < 20, f"classes compiled per pass (first, second): {compiles}"
+    assert spark.conf.get("spark.sql.codegen.cache.maxEntries") == "512"

@@ -4,8 +4,9 @@ and lands scratch data one way, ``functions.util.land_once``. Static
 scans (no Spark) fail on any other ``.persist(`` / ``.cache(``,
 ``conf.unset(``, ``import atexit``, ``tempfile.gettempdir(``,
 ``mkdtemp(`` or scratch-root literal under the package or in the
-driver contract module, and on any underscore-prefixed package name
-that a script imports."""
+driver contract module, on any ``mkdtemp(`` / ``gettempdir(`` in a test
+module, and on any underscore-prefixed package name that a script
+imports."""
 
 import ast
 import pathlib
@@ -52,16 +53,20 @@ def test_no_conf_unset_outside_conf_guard():
     assert not hits, "change confs through functions.util.conf_guard: " + ", ".join(hits)
 
 
+def _is_temp_dir_call(node):
+    if not isinstance(node, ast.Call):
+        return False
+    f = node.func
+    name = f.attr if isinstance(f, ast.Attribute) else getattr(f, "id", None)
+    return name in ("gettempdir", "mkdtemp")
+
+
 def _is_landing(node):
     if isinstance(node, ast.Import):
         return any(a.name == "atexit" for a in node.names)
     if isinstance(node, ast.ImportFrom):
         return node.module == "atexit"
-    if isinstance(node, ast.Call):
-        f = node.func
-        name = f.attr if isinstance(f, ast.Attribute) else getattr(f, "id", None)
-        return name in ("gettempdir", "mkdtemp")
-    return (
+    return _is_temp_dir_call(node) or (
         isinstance(node, ast.Constant)
         and isinstance(node.value, str)
         and "/tmp/spark_graft_scratch" in node.value
@@ -69,9 +74,17 @@ def _is_landing(node):
 
 
 def test_no_scratch_landing_outside_land_once():
-    # tempfile.TemporaryDirectory stays allowed: its with-scope cleans up
-    hits = _nodes_outside_util(_is_landing) + _nodes([REPO / "__spark_entry__.py"], _is_landing)
-    assert not hits, "land scratch data through functions.util.land_once: " + ", ".join(hits)
+    # tempfile.TemporaryDirectory stays allowed: its with-scope cleans up;
+    # tests take pytest's tmp_path, which pytest removes
+    hits = (
+        _nodes_outside_util(_is_landing)
+        + _nodes([REPO / "__spark_entry__.py"], _is_landing)
+        + _nodes(sorted((REPO / "tests").glob("*.py")), _is_temp_dir_call)
+    )
+    assert not hits, (
+        "land scratch data through functions.util.land_once (in tests, pytest's tmp_path): "
+        + ", ".join(hits)
+    )
 
 
 def test_scripts_import_public_names_only():

@@ -467,16 +467,16 @@ def test_morton_key_roundtrip_bits():
         assert got[(x, y)] == morton_py(x, y), (x, y)
 
 
-def test_ewma_weights_and_window_edge(spark):
+def test_ewma_weights_and_window_edge(spark, tmp_path):
     """ewma_num over a single-user stream: with fewer events than the
     window, the weight prefix is truncated newest-first (weight 1.0 on
     the current row); hand-computed oracle on 3 events."""
     from books2scrape_etl_spark.queries import QUERIES
-    import tempfile, os
+    import os
     from pyspark.sql import Row
     import datetime as dt
 
-    d = tempfile.mkdtemp()
+    d = str(tmp_path)
     rows = [
         Row(event_id=i, ts=dt.datetime(2024, 1, 1, 0, 0, i), user_id=1,
             event_type="click", value=float(v), props="{}")
