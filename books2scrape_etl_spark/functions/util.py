@@ -31,6 +31,15 @@ def conf_guard(spark: SparkSession, confs: dict[str, str]) -> Iterator[None]:
     localCheckpoint or collect): a lazy frame that escapes would run
     under whatever values are in force later.
 
+    The package's one materialization rule: an eager localCheckpoint
+    runs only inside a ``with`` block whose exit ends what the frame
+    depends on, this guard (directly or through
+    :func:`sized_shuffle_partitions`) or a
+    ``tempfile.TemporaryDirectory`` whose files the frame read.
+    Elsewhere a frame read more than once goes through :func:`stage`,
+    and one returned or read once stays lazy.
+    tests/test_staging_lint.py enforces the rule.
+
     When every requested value is already in force the guard does
     nothing: no lock, no set, no restore. Pool workers can then enter
     the guard their caller holds while it waits on them

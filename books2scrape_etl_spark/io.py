@@ -336,10 +336,6 @@ def _pin_utc(spark: SparkSession) -> None:
     spark.conf.set("spark.sql.session.timeZone", "UTC")
 
 
-def read_all(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> dict[str, DataFrame]:
-    return {name: read_table(spark, name, sf_dir) for name in TABLES}
-
-
 def read_csv(spark: SparkSession, path: str, schema: T.StructType) -> DataFrame:
     """CSV scan with an explicit schema (S6) — replaces the reference's
     inferring ``pd.read_csv`` (transformation_pipeline.py:40). No inference

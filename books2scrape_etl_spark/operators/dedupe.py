@@ -506,14 +506,9 @@ def connected_components_star(pairs: DataFrame, max_iter: int = 25) -> DataFrame
         ).collect()[0]
         return row["n"], row["h"]
 
-    nodes = stage(
-        pairs.select(F.col("id_a").alias("doc_id"))
-        .union(pairs.select(F.col("id_b").alias("doc_id")))
-        .distinct()
+    edges = stage(
+        canon(pairs.select(F.col("id_a").alias("u"), F.col("id_b").alias("v")))
     )
-    edges = canon(
-        pairs.select(F.col("id_a").alias("u"), F.col("id_b").alias("v"))
-    ).localCheckpoint(eager=True)
     fp = fingerprint(edges)
 
     converged = False
@@ -543,6 +538,11 @@ def connected_components_star(pairs: DataFrame, max_iter: int = 25) -> DataFrame
 
     # At the fixpoint the edge set is a star forest oriented (child, root);
     # isolated-after-contraction roots label themselves.
+    nodes = (
+        pairs.select(F.col("id_a").alias("doc_id"))
+        .union(pairs.select(F.col("id_b").alias("doc_id")))
+        .distinct()
+    )
     with _sized_shuffle_partitions(pairs.sparkSession, fp[0]):
         labels = (
             nodes.join(edges, nodes["doc_id"] == edges["u"], "left")
@@ -565,14 +565,14 @@ def verified_similar_pairs(
     shingle_n: int = 3,
     num_hashes: int = 16,
 ) -> DataFrame:
-    """Verified-similar edge list (id_a < id_b), eagerly pinned with
-    localCheckpoint: the front half of the component-exact dedup paths
-    — exposed so callers can run several CC algorithms (or other graph
-    consumers) over ONE candidate-generation pass instead of paying the
-    minhash stage per consumer."""
-    return _similar_pairs(
-        docs, text_col, threshold, bands, rows, shingle_n, num_hashes
-    ).localCheckpoint(eager=True)
+    """Verified-similar edge list (id_a < id_b), staged: the front half
+    of the component-exact dedup paths — exposed so callers can run
+    several CC algorithms (or other graph consumers) over ONE
+    candidate-generation pass instead of paying the minhash stage per
+    consumer."""
+    return stage(
+        _similar_pairs(docs, text_col, threshold, bands, rows, shingle_n, num_hashes)
+    )
 
 
 def minhash_dedup_cc(

@@ -174,7 +174,7 @@ def heavy_hitters(
         >= F.col("total") * F.lit(fr.numerator),
     ).select("token", "exact_cnt")
     est = cms_estimate(toks, hot.select("token"), depth, width)
-    out = (
+    return (
         hot.join(est, "token")
         .select(
             "token",
@@ -183,7 +183,6 @@ def heavy_hitters(
             (F.col("cms_est") >= F.col("exact_cnt")).alias("bound_ok"),
         )
     )
-    return out.localCheckpoint(eager=True)
 
 
 def unigram_quality(
@@ -217,7 +216,7 @@ def unigram_quality(
             F.coalesce(F.sum("tf"), F.lit(0)).alias("sum_tf"),
         )
     )
-    out = (
+    return (
         docs.select("doc_id")
         .join(per_doc, "doc_id", "left")
         .select(
@@ -231,7 +230,6 @@ def unigram_quality(
             ).alias("avg_tf"),
         )
     )
-    return out.localCheckpoint(eager=True)
 
 
 def token_budget_select(

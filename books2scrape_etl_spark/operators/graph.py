@@ -17,7 +17,7 @@ scale discipline:
   the dangling-mass scalar forces one action per round anyway, so
   materializing ranks first makes that action a scan instead of a
   full lineage replay (measured 2x on the purchase graph); nodes and
-  out-degrees checkpoint once up front since every round reuses them;
+  out-degrees are staged once up front since every round reuses them;
 - the dangling-node mass (rank parked on nodes with no out-edges) is
   a 1-row aggregate collected per iteration — one scalar per round,
   the same budget as CC's convergence fingerprint.
@@ -48,22 +48,21 @@ def pagerank(
     teleport ``1-damping`` and classic dangling-mass redistribution.
     Node set = every id appearing on either edge side; parallel edges
     count as weight (a multi-edge contributes once per occurrence)."""
-    from books2scrape_etl_spark.functions.util import sized_shuffle_partitions
+    from books2scrape_etl_spark.functions.util import sized_shuffle_partitions, stage
 
-    nodes = (
+    nodes = stage(
         edges.select(F.col(src).alias("node"))
         .union(edges.select(F.col(dst).alias("node")))
         .distinct()
-        .localCheckpoint(eager=False)
     )
     n = nodes.count()
     if n == 0:
         return nodes.withColumn("pr", F.lit(0.0))
-    out_deg = edges.groupBy(F.col(src).alias("node")).agg(
-        F.count(F.lit(1)).alias("deg")
-    ).localCheckpoint(eager=True)
+    out_deg = stage(
+        edges.groupBy(F.col(src).alias("node")).agg(F.count(F.lit(1)).alias("deg"))
+    )
     n_edges = edges.count()
-    ranks = nodes.withColumn("pr", F.lit(1.0 / n)).localCheckpoint(eager=False)
+    ranks = nodes.withColumn("pr", F.lit(1.0 / n))
     # graph-sized round shuffles (see functions.util): every round is
     # eager (the dangling collect + checkpoint), and the final ranks
     # are checkpoint-pinned before the guard exits

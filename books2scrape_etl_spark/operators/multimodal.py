@@ -64,12 +64,6 @@ def documents_as_media(docs: DataFrame) -> DataFrame:
     ).withColumn("n_bytes", F.octet_length("payload"))
 
 
-def read_binary_dir(spark, path: str) -> DataFrame:
-    """L5 source — Spark's built-in binaryFile reader: one row per file
-    with (path, modificationTime, length, content<binary>)."""
-    return spark.read.format("binaryFile").load(path)
-
-
 # ---------------------------------------------------------------------------
 # Pure-Python image codec: PPM (P6) encode/decode + BMP (24/32-bit) decode.
 # Uncompressed formats need no external library; the parsing, pixel math

@@ -383,6 +383,5 @@ def embedding_near_dup(
         .where(cosine(F.col("v_a"), F.col("v_b")) >= threshold)
         .select("id_b")
         .distinct()
-        .localCheckpoint(eager=True)
     )
     return emb.join(dupes, emb["vec_id"] == dupes["id_b"], "left_anti")

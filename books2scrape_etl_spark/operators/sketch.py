@@ -90,11 +90,9 @@ def kmv_distinct(
         F.col("k_used") < k, F.col("k_used").cast("double")
     ).otherwise(F.lit((k - 1) * _HASH_SPACE) / F.col("kth_hash").cast("double"))
     joined = sk.join(exact, groups) if groups else sk.crossJoin(exact)
-    out = joined.select(
+    return joined.select(
         *groups, "k_used", "kth_hash", est.alias("est_dv"), "exact_dv"
     )
-    # Materialize while the shared distinct table is still cached.
-    return out.localCheckpoint(eager=True)
 
 
 def kmv_set_ops(
@@ -156,11 +154,10 @@ def kmv_set_ops(
         F.lit(float((k - 1) * 4294967296)) / F.col("kth_u").cast("double")
     )
     est_j = F.col("n_shared").cast("double") / F.col("k_u").cast("double")
-    out = row.select(
+    return row.select(
         "k_a", "kth_a", "k_b", "kth_b", "k_u", "kth_u", "n_shared",
         est_union.alias("est_union"),
         est_j.alias("est_jaccard"),
         (est_j * est_union).alias("est_intersection"),
         "exact_union", "exact_inter",
     )
-    return out.localCheckpoint(eager=True)

@@ -32,6 +32,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from books2scrape_etl_spark.functions.util import stage
+
 
 def skyline_2d(
     df: DataFrame,
@@ -44,13 +46,12 @@ def skyline_2d(
     per-x group each one collapsed (every input row sharing that x,
     frontier or not). Duplicate frontier points (same x AND y) are
     mutually non-dominating and fold into one output row."""
-    cand = (
+    # consumed twice (bucket-max action + final filter): stage the
+    # domain-sized rollup instead of re-scanning the input
+    cand = stage(
         df.select(F.col(x).alias("x"), F.col(y).alias("y"))
         .groupBy("x")
         .agg(F.max("y").alias("y"), F.count(F.lit(1)).alias("n_rows"))
-        # consumed twice (bucket-max action + final filter); materialize
-        # the domain-sized rollup once instead of re-scanning the input
-        .localCheckpoint(eager=True)
     )
     bucketed = cand.withColumn(
         "__b", F.col("x").cast("bigint") - (F.col("x").cast("bigint") % bucket_width)

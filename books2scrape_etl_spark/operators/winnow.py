@@ -161,13 +161,12 @@ def decontaminate(
         fps = stage(winnow_fingerprints(docs, text_col, id_col, k, w))
     bench_fps = fps.where(bench_pred).select("fp").distinct()
     train_fps = fps.where(~bench_pred)
-    out = (
+    return (
         train_fps.join(bench_fps, "fp")
         .groupBy(id_col)
         .agg(F.count(F.lit(1)).alias("n_shared"))
         .where(F.col("n_shared") >= min_shared)
     )
-    return out.localCheckpoint(eager=True)
 
 
 def winnow_candidates(
@@ -204,14 +203,10 @@ def winnow_candidates(
     kept = fps.join(keep, "fp")
     a = kept.select(F.col("fp"), F.col(id_col).alias("id_a"))
     b = kept.select(F.col("fp"), F.col(id_col).alias("id_b"))
-    pairs = (
+    return (
         a.join(b, "fp")
         .where(F.col("id_a") < F.col("id_b"))
         .groupBy("id_a", "id_b")
         .agg(F.count(F.lit(1)).alias("shared"))
         .where(F.col("shared") >= min_shared)
     )
-    # Materialize while fps is still cached: the two consumers above
-    # must read the SAME fingerprint table (cheap here; on a cluster
-    # the staging cache alone carries it).
-    return pairs.localCheckpoint(eager=True)

@@ -1242,10 +1242,7 @@ def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("bigint")
         .alias("ok"),
     )
-    return (
-        decomp.union(bucket).union(dist0).orderBy("check_name")
-        .localCheckpoint(eager=True)
-    )
+    return decomp.union(bucket).union(dist0).orderBy("check_name")
 
 
 @register(
@@ -1366,9 +1363,9 @@ def q_sim_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries = emb.where(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("q_id"), F.col("embedding").alias("q_vec")
     )
-    # ≤ 25 rows: eager-pin so the five check branches don't re-run the
-    # bucket join, and nothing cached leaks past the return
-    res = similarity.lsh_topk(emb, queries, k=5).localCheckpoint(eager=True)
+    # ≤ 25 rows: staged so the five check branches don't re-run the
+    # bucket join and top-k
+    res = stage(similarity.lsh_topk(emb, queries, k=5))
 
     e_q = emb.select(F.col("vec_id").alias("q_id"), F.col("embedding").alias("qv"))
     e_v = emb.select("vec_id", F.col("embedding").alias("vv"))

@@ -25,6 +25,7 @@ import math
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from books2scrape_etl_spark.functions.util import stage
 from books2scrape_etl_spark.io import read_table
 from books2scrape_etl_spark.registry import register
 from books2scrape_etl_spark.query_defs import _NORM_SQL, topk_with_rank
@@ -738,7 +739,7 @@ def q_als_invariants(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     orders = read_table(spark, "orders", sf_dir)
     li = read_table(spark, "lineitem", sf_dir)
-    ratings = purchase_ratings(orders, li).localCheckpoint(eager=True)
+    ratings = stage(purchase_ratings(orders, li))
     pred = als_fit_predict(ratings)
     n_ratings = ratings.count()
     err = F.col("prediction") - F.col("rating")
@@ -844,7 +845,7 @@ def q_als_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     k = 5
     orders = read_table(spark, "orders", sf_dir)
     li = read_table(spark, "lineitem", sf_dir)
-    ratings = purchase_ratings(orders, li).localCheckpoint(eager=True)
+    ratings = stage(purchase_ratings(orders, li))
     n_users = ratings.select("user").distinct().count()
     top = als_topk(ratings, k=k)
     per_user = top.groupBy("user").agg(

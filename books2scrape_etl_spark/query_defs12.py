@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from books2scrape_etl_spark.functions.agg import oracle_sum_exact, sum_exact
+from books2scrape_etl_spark.functions.util import stage
 from books2scrape_etl_spark.io import read_table
 from books2scrape_etl_spark.operators.text import normalize_for_fingerprint
 from books2scrape_etl_spark.registry import register
@@ -79,14 +80,13 @@ def q_ts_gapfill(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("user_id") % _GAPFILL_USER_MOD == 0
     )
     es = F.col("ts").cast("long")
-    hourly = (
+    # consumed twice (bounds + fill join); Catalyst has no CTE reuse,
+    # so stage the small hourly rollup instead of scanning the raw
+    # events twice (plan-audited)
+    hourly = stage(
         ev.select("user_id", (es - es % 3600).alias("hour_es"), "value")
         .groupBy("user_id", "hour_es")
         .agg(F.count(F.lit(1)).alias("n"), sum_exact("value", scale=4).alias("sv"))
-        # consumed twice (bounds + fill join); Catalyst has no CTE
-        # reuse, so materialize the small hourly rollup once instead
-        # of scanning the raw events twice (plan-audited)
-        .localCheckpoint(eager=True)
     )
     grid = (
         hourly.groupBy("user_id")
@@ -268,14 +268,13 @@ def q_pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.split(normalize_for_fingerprint(F.col("text")), " ").alias("l")
     )
     # uni feeds three consumers (cx join, cy join, nu total) and bi two
-    # (scores, nb total); materialize each vocab-sized rollup once —
-    # without this the corpus is scanned and re-tokenized five times
+    # (scores, nb total); stage each vocab-sized rollup — without this
+    # the corpus is re-tokenized and re-aggregated per consumer
     # (plan-audited; Catalyst has no CTE reuse)
-    uni = (
+    uni = stage(
         toks.select(F.explode("l").alias("w"))
         .groupBy("w")
         .agg(F.count(F.lit(1)).alias("cw"))
-        .localCheckpoint(eager=True)
     )
     n = F.size("l")
     bigrams = toks.where(n >= 2).select(
@@ -287,11 +286,10 @@ def q_pmi_collocations(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("p")
     )
-    bi = (
+    bi = stage(
         bigrams.select("p.w1", "p.w2")
         .groupBy("w1", "w2")
         .agg(F.count(F.lit(1)).alias("cxy"))
-        .localCheckpoint(eager=True)
     )
     tot = uni.agg(F.sum("cw").alias("nu")).crossJoin(
         bi.agg(F.sum("cxy").alias("nb"))
@@ -522,18 +520,14 @@ def q_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     assumed small (tens of feeds); the vocab join keys are tokens, so
     the shuffle scales with vocab size, not corpus size."""
     docs = read_table(spark, "documents", sf_dir)
-    vocab = (
+    # consumed three times (sizes, both join sides); stage the
+    # vocab-sized rollup rather than re-running it per consumer
+    # (plan-audited; Catalyst has no CTE reuse)
+    vocab = stage(
         docs.select(
             "source",
-            F.explode(
-                F.split(normalize_for_fingerprint(F.col("text")), " ")
-            ).alias("w"),
-        )
-        .distinct()
-        # consumed three times (sizes, both join sides); materialize the
-        # vocab-sized rollup once rather than re-tokenizing the corpus
-        # per consumer (plan-audited; Catalyst has no CTE reuse)
-        .localCheckpoint(eager=True)
+            F.explode(F.split(normalize_for_fingerprint(F.col("text")), " ")).alias("w"),
+        ).distinct()
     )
     sizes = vocab.groupBy("source").agg(F.count(F.lit(1)).alias("nv"))
     a = vocab.select(F.col("source").alias("src_a"), "w")

@@ -22,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from books2scrape_etl_spark.functions.util import stage
 from books2scrape_etl_spark.io import read_table
 from books2scrape_etl_spark.oracle_shared import SESSION_GAP_S as _SESSION_GAP_S
 from books2scrape_etl_spark.registry import register
@@ -242,7 +243,7 @@ def q_graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     li = read_table(spark, "lineitem", sf_dir)
-    edges = copurchase_edges(li).select("src", "dst").localCheckpoint(eager=True)
+    edges = stage(copurchase_edges(li).select("src", "dst"))
     tri = triangle_counts(edges)
     deg = (
         edges.select(F.col("src").alias("node"))

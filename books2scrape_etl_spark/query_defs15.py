@@ -105,13 +105,13 @@ def q_graph_bfs(spark: SparkSession, sf_dir: str) -> DataFrame:
     pattern, dedupe.py). The oracle's recursive CTE dedupes (node,
     dist) pairs per level, so min(dist) is the same BFS distance.
     All outputs are exact BIGINTs."""
+    from books2scrape_etl_spark.functions.util import sized_shuffle_partitions, stage
     from books2scrape_etl_spark.operators.graph import copurchase_edges
 
     li = read_table(spark, "lineitem", sf_dir)
     e = copurchase_edges(li).select("src", "dst")
-    edges = (
+    edges = stage(
         e.unionAll(e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-        .localCheckpoint(eager=True)
     )
     seeds = (
         edges.select(F.col("src").alias("node"))
@@ -120,21 +120,18 @@ def q_graph_bfs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .limit(3)
         .select("node", F.lit(0).cast("bigint").alias("dist"))
     )
-    dist = seeds.localCheckpoint(eager=True)
-    frontier = dist
     # hop shuffles sized to the graph (functions.util): each hop is
     # eager (checkpoint + isEmpty), distances are exact integers, and
     # only checkpointed frames survive the guard — the final agg below
     # runs at the caller's configured width
-    from books2scrape_etl_spark.functions.util import sized_shuffle_partitions
-
     with sized_shuffle_partitions(spark, edges.count()):
+        dist = seeds.localCheckpoint(eager=True)
+        frontier = dist
         for h in range(1, _BFS_HOPS + 1):
             # shuffle-hash on both joins: the frontier/visited sets are
             # the build sides (node-bounded); never let Catalyst
-            # broadcast the EDGE table (checkpointed-leaf stats
-            # under-estimate it, and a driver-built edge broadcast is
-            # exactly what dies at scale)
+            # broadcast the EDGE table (a driver-built edge broadcast
+            # is exactly what dies at scale)
             nxt = (
                 frontier.hint("shuffle_hash")
                 .join(edges, frontier["node"] == edges["src"])
@@ -251,7 +248,6 @@ def q_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("total_cents").cast("double") / F.col("n_cust").cast("double"),
         )
         .orderBy("segment")
-        .localCheckpoint(eager=True)
     )
 
 

@@ -46,6 +46,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from books2scrape_etl_spark.functions.agg import oracle_sum_exact, sum_exact
+from books2scrape_etl_spark.functions.util import stage
 from books2scrape_etl_spark.io import read_table
 from books2scrape_etl_spark.operators.sketch import portable_hash32
 from books2scrape_etl_spark.registry import register
@@ -121,12 +122,11 @@ def q_ts_interp(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("user_id") % _INTERP_USER_MOD == 0
     )
     es = F.col("ts").cast("long")
-    hourly = (
+    # consumed twice (bounds + fill join) — stage it
+    hourly = stage(
         ev.select("user_id", (es - es % 3600).alias("hour_es"), "value")
         .groupBy("user_id", "hour_es")
         .agg(sum_exact("value", scale=4).alias("sv"))
-        # consumed twice (bounds + fill join) — materialize once
-        .localCheckpoint(eager=True)
     )
     grid = (
         hourly.groupBy("user_id")
@@ -221,11 +221,16 @@ def q_graph_walks(spark: SparkSession, sf_dir: str) -> DataFrame:
     neighbor array), which makes a sampling operator value-verifiable:
     the DuckDB recursive CTE traces bit-identical paths.
 
-    Scale: one adjacency shuffle (groupBy node, checkpointed once);
-    each step joins the walker frontier (walks-sized) against it —
-    broadcast while walkers are few, shuffle-hash keyed by node at
-    production walker counts (the graph_bfs posture). All outputs are
-    exact BIGINTs."""
+    Scale: one adjacency shuffle (groupBy node), localCheckpoint-ed
+    inside a graph-sized shuffle guard (the graph_bfs loop); each step
+    joins the walker frontier (walks-sized) against it — broadcast
+    while walkers are few, shuffle-hash keyed by node at production
+    walker counts (the graph_bfs posture). The steps stay one lazy
+    chain: over the checkpointed adjacency the planner reuses each
+    step's broadcast, while over a staged cache it re-runs the nested
+    broadcasts of every earlier step (a build+force at sf0.001 ran 224
+    stages against 20). All outputs are exact BIGINTs."""
+    from books2scrape_etl_spark.functions.util import sized_shuffle_partitions
     from books2scrape_etl_spark.operators.graph import copurchase_edges
 
     li = read_table(spark, "lineitem", sf_dir)
@@ -233,40 +238,43 @@ def q_graph_walks(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = e.unionAll(
         e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     )
-    adj = (
-        edges.groupBy(F.col("src").alias("u"))
-        .agg(
-            F.sort_array(F.collect_list("dst")).alias("nbrs"),
-            F.count(F.lit(1)).alias("deg"),
-        )
-        .localCheckpoint(eager=True)
-    )
-    seeds = (
-        adj.select(F.col("u").alias("seed"))
-        .orderBy("seed")
-        .limit(_WALK_SEEDS)
-        .select("seed", F.lit(0).cast("bigint").alias("step"), F.col("seed").alias("node"))
-    )
-    cur = seeds
-    out = seeds
-    for t in range(_WALK_STEPS):
-        key = F.concat_ws(
-            "_", F.col("node").cast("string"), F.lit(t).cast("string")
-        )
-        nxt = (
-            F.broadcast(cur)
-            .join(adj, cur["node"] == adj["u"])
-            .select(
-                "seed",
-                F.lit(t + 1).cast("bigint").alias("step"),
-                F.element_at(
-                    "nbrs",
-                    ((portable_hash32(key) % F.col("deg")) + 1).cast("int"),
-                ).alias("node"),
+    # sized to the line items, a cheap proxy for the edge count (the
+    # edges come from a self-join; counting them would run it twice)
+    with sized_shuffle_partitions(spark, li.count()):
+        adj = (
+            edges.groupBy(F.col("src").alias("u"))
+            .agg(
+                F.sort_array(F.collect_list("dst")).alias("nbrs"),
+                F.count(F.lit(1)).alias("deg"),
             )
+            .localCheckpoint(eager=True)
         )
-        cur = nxt
-        out = out.unionAll(nxt)
+        seeds = (
+            adj.select(F.col("u").alias("seed"))
+            .orderBy("seed")
+            .limit(_WALK_SEEDS)
+            .select("seed", F.lit(0).cast("bigint").alias("step"), F.col("seed").alias("node"))
+        )
+        cur = seeds
+        out = seeds
+        for t in range(_WALK_STEPS):
+            key = F.concat_ws(
+                "_", F.col("node").cast("string"), F.lit(t).cast("string")
+            )
+            nxt = (
+                F.broadcast(cur)
+                .join(adj, cur["node"] == adj["u"])
+                .select(
+                    "seed",
+                    F.lit(t + 1).cast("bigint").alias("step"),
+                    F.element_at(
+                        "nbrs",
+                        ((portable_hash32(key) % F.col("deg")) + 1).cast("int"),
+                    ).alias("node"),
+                )
+            )
+            cur = nxt
+            out = out.unionAll(nxt)
     return out.orderBy("seed", "step")
 
 

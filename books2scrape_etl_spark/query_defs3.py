@@ -37,6 +37,7 @@ from books2scrape_etl_spark.functions.columns import (
     rating_ordinal,
     rewrite_relative_url,
 )
+from books2scrape_etl_spark.functions.util import stage
 from books2scrape_etl_spark.io import read_table
 from books2scrape_etl_spark.registry import register
 from books2scrape_etl_spark.suites import register_suite, width
@@ -342,9 +343,9 @@ def q_sim_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     # and the coverage recomputation — the law compares one index, not
     # two independently trained ones
     centers = similarity.kmeans_centroids(emb, n_lists=8)
-    res = similarity.ivf_topk(
-        emb, queries, k=5, n_lists=8, n_probe=3, centers=centers
-    ).localCheckpoint(eager=True)
+    res = stage(
+        similarity.ivf_topk(emb, queries, k=5, n_lists=8, n_probe=3, centers=centers)
+    )
 
     e_q = emb.select(F.col("vec_id").alias("q_id"), F.col("embedding").alias("qv"))
     e_v = emb.select("vec_id", F.col("embedding").alias("vv"))
@@ -363,12 +364,8 @@ def q_sim_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("rr") != F.col("rank")
     )
     bad_k = res.groupBy("q_id").agg(F.count(F.lit(1)).alias("c")).where(F.col("c") > 5)
-    # 25-row exact set feeds both sides of the equality — pin it once
-    exact = (
-        similarity.brute_force_topk(emb, queries, k=5)
-        .select("q_id", "vec_id")
-        .localCheckpoint(eager=True)
-    )
+    # 25-row exact set feeds both sides of the equality — stage it
+    exact = stage(similarity.brute_force_topk(emb, queries, k=5).select("q_id", "vec_id"))
     hits = (
         exact.join(res.select("q_id", "vec_id"), ["q_id", "vec_id"])
         .agg(F.count(F.lit(1)).alias("h"))

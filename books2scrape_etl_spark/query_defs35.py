@@ -330,6 +330,7 @@ def q_cc_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     nodes / ~15.6k edges at sf0.001 — pinned by
     tests/test_wave35.py::test_cc_exact_cap_keeps_dense_near_dup_graph),
     not sparse organic pairs."""
+    from books2scrape_etl_spark.functions.util import stage
     from books2scrape_etl_spark.operators.dedupe import (
         connected_components,
         connected_components_star,
@@ -339,8 +340,8 @@ def q_cc_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = read_table(spark, "documents", sf_dir).where(
         F.col("doc_id") % 2 == 0
     )
-    # winnow_candidates returns the edges pinned (localCheckpoint)
-    cand = winnow_candidates(docs, max_df=50, min_shared=3)
+    # both CC algorithms and the edge count read the candidate graph
+    cand = stage(winnow_candidates(docs, max_df=50, min_shared=3))
     pairs = cand.select("id_a", "id_b")
     star = connected_components_star(pairs)
     prop = connected_components(pairs)
@@ -353,5 +354,4 @@ def q_cc_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
         star.select(F.lit("star").alias("algo"), "doc_id", "component")
         .union(prop.select(F.lit("prop").alias("algo"), "doc_id", "component"))
         .union(n_edges)
-        .localCheckpoint(eager=True)
     )

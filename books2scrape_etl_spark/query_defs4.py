@@ -509,8 +509,8 @@ def q_dedup_cc_star(spark: SparkSession, sf_dir: str) -> DataFrame:
     from books2scrape_etl_spark.operators import dedupe
 
     docs = read_table(spark, "documents", sf_dir)
-    # the edge list is pinned once (localCheckpoint) — both CC
-    # algorithms then read the same materialized blocks
+    # the edge list is staged once — both CC algorithms then read the
+    # same cached blocks
     pairs = dedupe.verified_similar_pairs(docs, threshold=0.6)
     comp_star = dedupe.connected_components_star(pairs)
     comp_prop = dedupe.connected_components(pairs)
@@ -855,35 +855,14 @@ def _streamed_books_source_summary(spark: SparkSession) -> DataFrame:
     source. Exactly-once offset replay is the property under test: a
     re-read or skipped page changes n_diff/counts away from the fixture
     goldens."""
-    import os
-    import tempfile
-    import uuid
-
     from books2scrape_etl_spark.sources.datasource import register_books_source
+    from books2scrape_etl_spark.streaming.windows import _drain_to_memory
 
     register_books_source(spark)
-    name = f"books_src_{uuid.uuid4().hex[:8]}"
-    # Checkpoint in a TemporaryDirectory removed after drain, and drop
-    # the memory-sink table once its rows are pinned by an eager
-    # localCheckpoint — otherwise every suite run leaks one ckpt dir
-    # and one registered table (ADVICE r6). The checkpoint must
-    # outlive awaitTermination only; the memory table must outlive the
-    # localCheckpoint action only.
-    with tempfile.TemporaryDirectory(prefix=f"ckpt_{name}_") as ckpt:
-        (
-            spark.readStream.format("books")
-            .option("pages", "2")
-            .option("fixtures", "true")
-            .load()
-            .writeStream.format("memory")
-            .queryName(name)
-            .option("checkpointLocation", os.path.join(ckpt, "offsets"))
-            .trigger(availableNow=True)
-            .start()
-            .awaitTermination()
-        )
-        streamed = spark.table(name).localCheckpoint(eager=True)
-        spark.catalog.dropTempView(name)
+    streamed = _drain_to_memory(
+        spark.readStream.format("books").option("pages", "2").option("fixtures", "true").load(),
+        "append",
+    )
     batch = (
         spark.read.format("books").option("pages", "2").option("fixtures", "true").load()
     )
@@ -1182,7 +1161,6 @@ def q_embed_generate(spark: SparkSession, sf_dir: str) -> DataFrame:
         .union(_check_row("dim_is_16", n(bad_dim)))
         .union(_check_row("repartition_invariant", n(bad_repart)))
         .orderBy("k")
-        .localCheckpoint(eager=True)
     )
 
 

@@ -17,6 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from books2scrape_etl_spark.functions.util import stage
 from books2scrape_etl_spark.io import read_table
 from books2scrape_etl_spark.registry import register
 from books2scrape_etl_spark.suites import register_suite, width
@@ -73,7 +74,7 @@ def q_winnow_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs over it (df cap 50 — the skew guard), and the benchmark
     decontamination flags (docs sharing ≥3 fingerprints with the 2%
     held-out set doc_id % 50 = 0). The fingerprint pass — the expensive
-    map-side scan — runs ONCE (localCheckpoint) and feeds all three
+    map-side scan — runs ONCE (staged) and feeds all three
     sections; sections union into (section, a, b, v) so one value-hash
     pins every fingerprint, every pair, and every contamination count."""
     from books2scrape_etl_spark.operators.winnow import (
@@ -83,7 +84,7 @@ def q_winnow_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = read_table(spark, "documents", sf_dir)
-    fps = winnow_fingerprints(docs, k=8, w=8).localCheckpoint(eager=True)
+    fps = stage(winnow_fingerprints(docs, k=8, w=8))
     cand = winnow_candidates(docs, max_df=50, min_shared=3, fps=fps)
     decon = decontaminate(docs, F.col("doc_id") % 50 == 0, min_shared=3, fps=fps)
     null_b = F.lit(None).cast("bigint")

@@ -322,6 +322,31 @@ def q_dedup_invariants(spark: SparkSession, sf_dir: str) -> DataFrame:
     from books2scrape_etl_spark.functions.util import stage
     from books2scrape_etl_spark.operators import dedupe, similarity
 
+    # The sections stage ten frames between them, more than the stage
+    # cap holds, so they run in an order where no staged frame is
+    # released before a job reads it: the eager CC section first, then
+    # the MinHash section, collected while its four staging caches are
+    # live, then the two lazy sections (three frames).
+
+    # a 4-node path 0-1-2-3 plus the pair 100-101, as a literal
+    # relation: a union-shaped edge list fed into the star algorithm's
+    # internal self-union trips the same Catalyst
+    # Union.rewriteConstraints bug as the planted copies below
+    edges = spark.createDataFrame(
+        [(0, 1), (1, 2), (2, 3), (100, 101)], "id_a long, id_b long"
+    )
+    prop = dedupe.connected_components(edges)
+    star = dedupe.connected_components_star(edges)
+    agree = _sym_diff_count(prop, star).withColumn("j", F.lit(1))
+    ncomp = prop.agg(F.countDistinct("component").alias("nc")).withColumn(
+        "j", F.lit(1)
+    )
+    cc = agree.join(ncomp, "j").select(
+        F.lit("cc_chain").alias("section"),
+        F.col("nc").cast("long").alias("n"),
+        ((F.col("n") == 0) & (F.col("nc") == 2)).alias("ok"),
+    )
+
     docs = read_table(spark, "documents", sf_dir).select("doc_id", "text")
     # copies come from a FRESH scan: self-union of one plan trips a
     # Catalyst constraint-rewrite bug (NoSuchElementException in
@@ -334,15 +359,14 @@ def q_dedup_invariants(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select((F.col("doc_id") + _DEDUP_OFFSET).alias("doc_id"), "text")
     )
     both = docs.unionByName(copies)
-    # pinned now, while both dedup plans' four staging caches are live
-    # (the sections below stage six more frames)
     mh = _zero_row(
         "minhash_planted",
         _sym_diff_count(
             dedupe.minhash_dedup(docs, threshold=0.6).select("doc_id"),
             dedupe.minhash_dedup(both, threshold=0.6).select("doc_id"),
         ),
-    ).localCheckpoint(eager=True)
+    )
+    mh = spark.createDataFrame(mh.collect(), mh.schema)
 
     emb = read_table(spark, "embeddings", sf_dir).select("vec_id", "embedding")
     ecopies = (
@@ -360,8 +384,7 @@ def q_dedup_invariants(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     # bands feeds both sides of the planted-copy symmetric diff; stage
-    # it for the one eager pass (ADVICE r10 — simhash_bands stays
-    # cache-free)
+    # it (ADVICE r10 — simhash_bands stays cache-free)
     bands = stage(dedupe.simhash_bands(both))
     copy_bands = bands.where(F.col("doc_id") >= _DEDUP_OFFSET).select(
         (F.col("doc_id") - _DEDUP_OFFSET).alias("doc_id"), "band", "band_val"
@@ -369,29 +392,8 @@ def q_dedup_invariants(spark: SparkSession, sf_dir: str) -> DataFrame:
     orig_bands = bands.where(
         (F.col("doc_id") < _DEDUP_OFFSET) & (F.col("doc_id") % 10 == 0)
     ).select("doc_id", "band", "band_val")
-    sh = _zero_row(
-        "simhash_planted", _sym_diff_count(copy_bands, orig_bands)
-    ).localCheckpoint(eager=True)
+    sh = _zero_row("simhash_planted", _sym_diff_count(copy_bands, orig_bands))
 
-    chain = spark.range(0, 3).select(
-        F.col("id").alias("id_a"), (F.col("id") + 1).alias("id_b")
-    )
-    pair = spark.createDataFrame([(100, 101)], "id_a long, id_b long")
-    # materialize the 6-row edge list: feeding a union-shaped plan into
-    # the star algorithm's internal self-union trips the same Catalyst
-    # Union.rewriteConstraints bug as above; a checkpointed scan doesn't
-    edges = chain.unionByName(pair).localCheckpoint(eager=True)
-    prop = dedupe.connected_components(edges)
-    star = dedupe.connected_components_star(edges)
-    agree = _sym_diff_count(prop, star).withColumn("j", F.lit(1))
-    ncomp = prop.agg(F.countDistinct("component").alias("nc")).withColumn(
-        "j", F.lit(1)
-    )
-    cc = agree.join(ncomp, "j").select(
-        F.lit("cc_chain").alias("section"),
-        F.col("nc").cast("long").alias("n"),
-        ((F.col("n") == 0) & (F.col("nc") == 2)).alias("ok"),
-    )
     return cc.union(eb).union(mh).union(sh).orderBy("section")
 
 

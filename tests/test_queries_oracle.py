@@ -23,12 +23,15 @@ from books2scrape_etl_spark.queries import ORACLE_SQL, QUERIES
 from tests.oracle import compare, run_oracle
 
 # Session-global state mutators (conf guards, checkpoints, catalog
-# writes) — detected from source so a future conf-guarded query lands
-# in the serial tier automatically. Suites re-run other callables
-# (possibly conf-guarded ones), and *_rt queries execute real streams.
+# writes, temp views; query_defs8's _sql_query registers the testdata
+# tables as views) — detected from source so a future conf-guarded
+# query lands in the serial tier automatically. Suites re-run other
+# callables (possibly conf-guarded ones), and *_rt queries execute real
+# streams. test_oracle_match_pooled asserts that the pooled rest leaves
+# the session's confs and catalog as it found them.
 _STATEFUL = re.compile(
     r"conf\.set|conf_guard|bloom_pruned_join|skew_join|bucketed"
-    r"|checkpoint|write_bucketed|ANALYZE TABLE|saveAsTable"
+    r"|checkpoint|write_bucketed|ANALYZE TABLE|saveAsTable|TempView|_sql_query"
 )
 
 
@@ -56,9 +59,19 @@ def test_oracle_match(spark, sf_dir, qname):
     assert not problems, f"{qname}: {problems}"
 
 
+def _session_state(spark):
+    """Every session conf set (``SET``) and every catalog table: what a
+    pooled qname must leave as it found it, since its threads share
+    one session."""
+    confs = {r.key: r.value for r in spark.sql("SET").collect()}
+    tables = sorted((t.database or "", t.name) for t in spark.catalog.listTables())
+    return confs, tables
+
+
 @pytest.mark.parametrize("shard", range(_N_SHARDS))
 def test_oracle_match_pooled(spark, sf_dir, shard):
     names = POOLED[shard::_N_SHARDS]
+    confs0, tables0 = _session_state(spark)
 
     def one(qname):
         sdf = QUERIES[qname](spark, sf_dir)
@@ -68,6 +81,56 @@ def test_oracle_match_pooled(spark, sf_dir, shard):
     with ThreadPoolExecutor(max_workers=_POOL_WORKERS) as pool:
         results = list(pool.map(one, names))
     bad = {q: p for q, p in results if p}
+    assert not bad, bad
+    confs1, tables1 = _session_state(spark)
+    changed = sorted(
+        k for k in confs0.keys() | confs1.keys() if confs0.get(k) != confs1.get(k)
+    )
+    assert not changed, f"{names} changed session confs {changed}"
+    assert tables1 == tables0, f"{names} changed the catalog: {tables0} -> {tables1}"
+
+
+# Oracle-paired qnames whose build reaches a stage() call that replaced
+# an eager localCheckpoint pin (found by recording stage()'s callers over
+# a full-registry build).
+STAGED = (
+    "als_invariants",
+    "als_topk",
+    "cc_exact",
+    "dedup_cc_star",
+    "dedup_invariants",
+    "graph_bfs",
+    "graph_triangles",
+    "pagerank_invariants",
+    "pmi_collocations",
+    "sim_ivf",
+    "sim_lsh",
+    "skyline_pareto",
+    "source_overlap",
+    "ts_gapfill",
+    "ts_interp",
+    "wave12_suite",
+    "wave13_14_suite",
+    "wave15_16_suite",
+    "wave30_32_suite",
+    "winnow_suite",
+)
+
+
+def test_staged_frames_recompute_to_oracle(spark, sf_dir, monkeypatch):
+    """With a stage cap of 1 every staged frame but the newest is
+    released before the compare forces the result, so the result
+    recomputes what it staged: a staged plan whose rows are not
+    deterministic fails here instead of drifting silently. One serial
+    test, so no other thread stages meanwhile."""
+    from books2scrape_etl_spark.functions import util
+
+    monkeypatch.setattr(util, "_STAGE_CAP", 1)
+    bad = {}
+    for qname in STAGED:
+        problems = compare(QUERIES[qname](spark, sf_dir), run_oracle(ORACLE_SQL[qname], sf_dir))
+        if problems:
+            bad[qname] = problems
     assert not bad, bad
 
 

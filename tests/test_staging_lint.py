@@ -1,12 +1,16 @@
 """The package caches intermediates one way, ``functions.util.stage``,
 changes session confs temporarily one way, ``functions.util.conf_guard``,
-and lands scratch data one way, ``functions.util.land_once``. Static
-scans (no Spark) fail on any other ``.persist(`` / ``.cache(``,
-``conf.unset(``, ``import atexit``, ``tempfile.gettempdir(``,
-``mkdtemp(`` or scratch-root literal under the package or in the
-driver contract module, on any ``mkdtemp(`` / ``gettempdir(`` in a test
-module, and on any underscore-prefixed package name that a script
-imports."""
+and lands scratch data one way, ``functions.util.land_once``. An eager
+``localCheckpoint`` runs only inside a ``with`` block whose exit ends
+what the frame depends on: a ``conf_guard`` /
+``sized_shuffle_partitions`` block (a conf value or an iterative
+round's width ends) or a ``tempfile.TemporaryDirectory`` (the files it
+read are deleted). Static scans (no Spark) fail on any other
+``.persist(`` / ``.cache(``, ``conf.unset(``, ``localCheckpoint(``,
+``import atexit``, ``tempfile.gettempdir(``, ``mkdtemp(`` or
+scratch-root literal under the package or in the driver contract
+module, on any ``mkdtemp(`` / ``gettempdir(`` in a test module, and on
+any underscore-prefixed package name that a script imports."""
 
 import ast
 import pathlib
@@ -17,9 +21,14 @@ ALLOWED = PKG / "functions" / "util.py"
 
 
 def _nodes(paths, match):
+    # every node gets a ``parent`` link, so a match can test its scope
     hits = []
     for path in paths:
-        for node in ast.walk(ast.parse(path.read_text(), str(path))):
+        tree = ast.parse(path.read_text(), str(path))
+        for node in ast.walk(tree):
+            for child in ast.iter_child_nodes(node):
+                child.parent = node
+        for node in ast.walk(tree):
             if match(node):
                 hits.append(f"{path.relative_to(REPO)}:{node.lineno}")
     return hits
@@ -53,12 +62,55 @@ def test_no_conf_unset_outside_conf_guard():
     assert not hits, "change confs through functions.util.conf_guard: " + ", ".join(hits)
 
 
-def _is_temp_dir_call(node):
-    if not isinstance(node, ast.Call):
-        return False
+def _call_name(node):
     f = node.func
-    name = f.attr if isinstance(f, ast.Attribute) else getattr(f, "id", None)
-    return name in ("gettempdir", "mkdtemp")
+    return f.attr if isinstance(f, ast.Attribute) else getattr(f, "id", None)
+
+
+def _ends_dependency(item):
+    # leaving the block resets a conf or an iterative round's width, or
+    # deletes the files the frame was read from
+    expr = item.context_expr
+    name = (_call_name(expr) or "") if isinstance(expr, ast.Call) else ""
+    return name in ("conf_guard", "TemporaryDirectory") or name.endswith(
+        "sized_shuffle_partitions"
+    )
+
+
+def _unguarded_local_checkpoint(node):
+    if not (
+        isinstance(node, ast.Call)
+        and isinstance(node.func, ast.Attribute)
+        and node.func.attr == "localCheckpoint"
+    ):
+        return False
+    child = node
+    while hasattr(child, "parent"):
+        scope = child.parent
+        if (
+            isinstance(scope, ast.With)
+            and child in scope.body
+            and any(_ends_dependency(i) for i in scope.items)
+        ):
+            return False
+        child = scope
+    return True
+
+
+def test_local_checkpoint_only_inside_guard_blocks():
+    # elsewhere the frame is read more than once (stage it) or once
+    # (leave it lazy): an eager pin there runs a job at build time,
+    # has no cap and is never released
+    hits = _nodes(sorted(PKG.rglob("*.py")), _unguarded_local_checkpoint)
+    assert not hits, (
+        "localCheckpoint outside a conf_guard / sized_shuffle_partitions / "
+        "TemporaryDirectory block; use functions.util.stage or a lazy frame: "
+        + ", ".join(hits)
+    )
+
+
+def _is_temp_dir_call(node):
+    return isinstance(node, ast.Call) and _call_name(node) in ("gettempdir", "mkdtemp")
 
 
 def _is_landing(node):
