@@ -84,15 +84,16 @@ def sized_shuffle_partitions(spark: SparkSession, n_rows: int):
 
 
 # Staging caches, keyed by the analyzed plan's semantic hash and kept
-# in staging order. The cap is the number of distinct frames one pass
-# of the 16 bench.py headline qnames stages, measured at sf0.01: the
-# star dims (join_fact), the MinHash shingle and band tables
-# (dedup_minhash) and the ranked frame (surrogate_key_scale). A warm
-# pass re-stages the same four keys, so it never evicts its own working
-# set, and a full-registry sweep holds at most four staging caches. The
-# books pipeline (plans.books.transform_books) stages three: the parsed
-# pages, the tiered cleaned frame and the star's grouping-sets table;
-# a rerun on the same input replaces those three keys.
+# in staging order. The cap bounds one pass of the 16 bench.py headline
+# qnames, which stages three distinct frames: the star's grouping-sets
+# table (join_fact) and the MinHash shingle and band tables
+# (dedup_minhash); the ordered scale operators stage nothing. A warm
+# pass re-stages the same keys, so it never evicts its own working set
+# (tests/test_plans.py pins this), and a full-registry sweep holds at
+# most four staging caches. The books pipeline
+# (plans.books.transform_books) stages three: the parsed pages, the
+# tiered cleaned frame and the star's grouping-sets table; a rerun on
+# the same input replaces those three keys.
 _STAGE_CAP = 4
 _STAGED: OrderedDict[int, DataFrame] = OrderedDict()
 _STAGE_LOCK = threading.Lock()

@@ -168,24 +168,27 @@ def read_table(spark: SparkSession, name: str, sf_dir: str = DEFAULT_SF_DIR) -> 
     return _read_parquet(spark, path)
 
 
-def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+def _read_parquet(spark: SparkSession, path: str, footer=None) -> DataFrame:
     """``spark.read.parquet(path)`` under the schema that call would infer,
     read from one footer in the Spark driver. Inference itself runs a Spark job
     on every call (Spark's schema merge parallelizes even a single file);
     this is a handful of JVM calls and no job. A path with no
-    footer to read goes to Spark unchanged, so its error is Spark's own."""
-    schema = _footer_schema(spark, path)
+    footer to read goes to Spark unchanged, so its error is Spark's own.
+    ``footer`` is :func:`_read_footer`'s result when the caller already
+    read it."""
+    if footer is None:
+        footer = _read_footer(spark, path)
+    schema = None if footer is None else _footer_schema(spark, footer)
     return (spark.read if schema is None else spark.read.schema(schema)).parquet(path)
 
 
-def _footer_schema(spark: SparkSession, path: str) -> T.StructType | None:
-    """The schema Spark's parquet inference gives ``path`` without
-    ``mergeSchema``: the footer of ``_common_metadata``, else ``_metadata``,
-    else the first data file by path, listed as Spark's file index lists
-    (recursively, skipping hidden and ``_``-prefixed names), converted
-    by Spark's ``ParquetToSparkSchemaConverter`` under the session's SQLConf
-    — so ``nanosAsLong`` and the TIMESTAMP_NTZ inference apply exactly as in
-    a scan. ``None`` when the path does not exist or holds no file."""
+def _read_footer(spark: SparkSession, path: str):
+    """The parquet footer Spark's schema inference reads for ``path``
+    without ``mergeSchema`` (a JVM ``Footer``): that of
+    ``_common_metadata``, else ``_metadata``, else the first data file by
+    path, listed as Spark's file index lists (recursively, skipping hidden
+    and ``_``-prefixed names). ``None`` when the path does not exist or
+    holds no file."""
     from py4j.java_gateway import JavaClass
 
     # JavaClass by name: one JVM round trip per call, where each dotted
@@ -195,8 +198,7 @@ def _footer_schema(spark: SparkSession, path: str) -> T.StructType | None:
     def cls(name: str) -> JavaClass:
         return JavaClass(name, gateway)
 
-    state = spark._jsparkSession.sessionState()
-    conf = state.newHadoopConf()
+    conf = spark._jsparkSession.sessionState().newHadoopConf()
     root = cls("org.apache.hadoop.fs.Path")(path)
     fs = root.getFileSystem(conf)
     if not fs.exists(root):
@@ -221,17 +223,48 @@ def _footer_schema(spark: SparkSession, path: str) -> T.StructType | None:
         return None
     rank = {"_common_metadata": 0, "_metadata": 1}
     chosen = min(leaves, key=lambda s: (rank.get(s.getPath().getName(), 2), s.getPath().toString()))
-    parquet = "org.apache.spark.sql.execution.datasources.parquet."
-    footer = cls("org.apache.parquet.hadoop.Footer")(
+    return cls("org.apache.parquet.hadoop.Footer")(
         chosen.getPath(),
-        cls(parquet + "ParquetFooterReader").readFooter(
+        cls(_PARQUET + "ParquetFooterReader").readFooter(
             cls("org.apache.parquet.hadoop.util.HadoopInputFile").fromStatus(chosen, conf),
             cls("org.apache.parquet.format.converter.ParquetMetadataConverter").SKIP_ROW_GROUPS,
         ),
     )
-    converter = cls(parquet + "ParquetToSparkSchemaConverter")(state.conf())
-    schema = cls(parquet + "ParquetFileFormat").readSchemaFromFooter(footer, converter)
+
+
+_PARQUET = "org.apache.spark.sql.execution.datasources.parquet."
+
+
+def _footer_schema(spark: SparkSession, footer) -> T.StructType:
+    """``footer``'s Spark schema, converted by Spark's
+    ``ParquetToSparkSchemaConverter`` under the session's SQLConf — so
+    ``nanosAsLong`` and the TIMESTAMP_NTZ inference apply exactly as in a
+    scan."""
+    from py4j.java_gateway import JavaClass
+
+    gateway = spark.sparkContext._gateway._gateway_client
+    state = spark._jsparkSession.sessionState()
+    converter = JavaClass(_PARQUET + "ParquetToSparkSchemaConverter", gateway)(state.conf())
+    schema = JavaClass(_PARQUET + "ParquetFileFormat", gateway).readSchemaFromFooter(
+        footer, converter
+    )
     return T.StructType.fromJson(json.loads(schema.json()))
+
+
+def _ts_is_nanos(footer) -> bool:
+    """Whether ``footer``'s top-level ``ts`` column is annotated
+    TIMESTAMP(NANOS)."""
+    if footer is None:
+        return False
+    schema = footer.getParquetMetadata().getFileMetaData().getSchema()
+    if not schema.containsField("ts"):
+        return False
+    ann = schema.getType("ts").getLogicalTypeAnnotation()
+    return (
+        ann is not None
+        and ann.getClass().getSimpleName() == "TimestampLogicalTypeAnnotation"
+        and ann.getUnit().name() == "NANOS"
+    )
 
 
 # Epoch-unit magnitude bands: 2000-2100 wall clocks land at ~1e9 (s),
@@ -251,10 +284,11 @@ def infer_epoch_unit(sample: int) -> str:
     return next(unit for floor, unit in _EPOCH_UNIT_BANDS if v >= floor)
 
 
-# epoch-unit inference memo: (path, file-mtime) -> unit. The sample job
-# is one LocalLimit collect; without the memo it re-runs on EVERY plan
-# construction over the bigint vintage (ADVICE r4). mtime in the key
-# invalidates the entry when the driver regenerates the testdata.
+# epoch-unit inference memo for unannotated INT64 columns:
+# (path, file-mtime) -> unit. The sample job is one LocalLimit collect;
+# without the memo it re-runs on EVERY plan construction over such a
+# file (ADVICE r4). mtime in the key invalidates the entry when the
+# driver regenerates the testdata.
 _EPOCH_UNIT_CACHE: dict[tuple[str, float], str] = {}
 
 
@@ -272,24 +306,27 @@ def _path_mtime(path: str) -> float:
         return -1.0  # unstat-able (e.g. remote FS) -> cache per path only
 
 
-def _epoch_long_to_ts(df, path: str = ""):
-    """TimestampType from a raw BIGINT epoch ``ts`` column, inferring the
-    unit from sampled values instead of assuming a vintage (assuming
-    nanos is exactly what broke when the physical type drifted; a raw
-    int64 epoch column could just as well arrive as micros or millis).
-    The sample is a LocalLimit job — first non-empty partition only,
-    even on a 100 TB table; it takes the MEDIAN magnitude of up to 16
-    non-null, non-zero values so neither a 0/epoch-start sentinel nor a
-    few corrupt oversized values can misclassify the whole column. The
-    result is memoized per (path, mtime) so the job runs once per file
-    vintage, not once per plan construction, and the chosen unit is
-    logged so a misclassification is visible. Integer arithmetic
+def _epoch_long_to_ts(df, path: str = "", unit: str | None = None):
+    """TimestampType from a raw BIGINT epoch ``ts`` column in ``unit``
+    (``'ns'``, ``'us'``, ``'ms'`` or ``'s'``).
+
+    ``unit`` comes from the footer's annotation when there is one. For an
+    unannotated column it is inferred from sampled values instead of
+    assuming a vintage (a raw int64 epoch column could arrive as nanos,
+    micros or millis). The sample is a LocalLimit job — first non-empty
+    partition only, even on a 100 TB table; it takes the MEDIAN magnitude
+    of up to 16 non-null, non-zero values so neither a 0/epoch-start
+    sentinel nor a few corrupt oversized values can misclassify the whole
+    column. The result is memoized per (path, mtime) so the job runs once
+    per file vintage, not once per plan construction, and the chosen unit
+    is logged so a misclassification is visible. Integer arithmetic
     throughout: float division of epoch-nanos longs exceeds double's
     53-bit mantissa and rounds the last microsecond."""
     from pyspark.sql import functions as F
 
-    cache_key = (path, _path_mtime(path)) if path else None
-    unit = _EPOCH_UNIT_CACHE.get(cache_key) if cache_key else None
+    cache_key = (path, _path_mtime(path)) if path and unit is None else None
+    if unit is None and cache_key:
+        unit = _EPOCH_UNIT_CACHE.get(cache_key)
     if unit is None:
         rows = (
             df.where(F.col("ts").isNotNull() & (F.col("ts") != 0))
@@ -427,19 +464,31 @@ def read_events_landing(spark: SparkSession, root: str) -> DataFrame:
     return out
 
 
+def _read_events_raw(spark: SparkSession, path: str) -> tuple[DataFrame, str | None]:
+    """The events scan before ``ts`` is normalized, and the epoch unit
+    of a BIGINT ``ts`` when the footer states it (``None`` otherwise).
+
+    The footer says the ts vintage. Only a TIMESTAMP(NANOS) column needs
+    the legacy ``nanosAsLong`` conf (Spark otherwise fails the scan),
+    which reads it as a BIGINT of epoch nanos; other vintages leave the
+    session alone."""
+    footer = _read_footer(spark, path)
+    nanos = _ts_is_nanos(footer)
+    if nanos:
+        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    return _read_parquet(spark, path, footer), "ns" if nanos else None
+
+
 def _read_events_any_vintage(spark: SparkSession, path: str) -> DataFrame:
     """The vintage-adaptive events scan shared by ``read_table`` and
     :func:`read_events_landing`. Branch on the dtype the scan actually
     produced, never on an assumed vintage."""
     from pyspark.sql import functions as F
 
-    # Harmless for micros files (the conf only affects NANOS columns);
-    # required for nanos files, which otherwise fail the scan outright.
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = _read_parquet(spark, path)
+    df, unit = _read_events_raw(spark, path)
     ts_type = dict(df.dtypes).get("ts")
     if ts_type == "bigint":
-        return df.withColumn("ts", _epoch_long_to_ts(df, path))
+        return df.withColumn("ts", _epoch_long_to_ts(df, path, unit))
     if ts_type == "timestamp_ntz":
         # micros-NTZ vintage: reinterpret the wall-clock value as UTC so
         # the epoch matches the nanos-vintage path bit for bit. The cast

@@ -5,104 +5,158 @@ These exist because two reference semantics — dense surrogate keys
 (transformation_pipeline.py:73-91) and quantile tiers (:63) — naively
 need a global sort, which single-tasks at 100 TB. ``plans/star.py``
 uses the exact forms on dimension-sized data (correct there by
-construction); this module provides the fact-sized variants.
+construction); this module provides the fact-sized variants. The four
+ordered operators are lazy plans — building one starts no Spark job.
 """
 
 from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from books2scrape_etl_spark.functions.util import conf_guard, stage, to_col
+from books2scrape_etl_spark.functions.util import conf_guard, to_col
 
 # Cap on order-bucket count (VERDICT r12 item 3 / ADVICE r12). The
-# bucket id is a count-of-boundaries-below expression evaluated per
-# row, so its size is O(n_boundaries x n_key_cols): uncapped it tracks
-# defaultParallelism, and on a several-thousand-core cluster that is a
-# multi-thousand-node expression — past whole-stage-codegen's 64KB
-# method limit (interpreted fallback) and O(n) per row where a range
-# partitioner binary-searches in O(log n). 256 buckets keeps the
-# expression a few hundred codegen-friendly nodes; balance degrades
-# gracefully (each bucket simply holds 1/256th of the sampled mass,
-# and the per-bucket offsets stay a 256-row driver collect).
+# bucket id counts the boundaries at-or-below the key, evaluated per
+# row, so its cost is O(n_boundaries): uncapped it tracks
+# defaultParallelism, and on a several-thousand-core cluster that is
+# O(n) work per row where a range partitioner binary-searches in
+# O(log n). 256 buckets keeps it a few hundred struct comparisons per
+# row and the per-bucket counts table at most 256 rows per partition
+# value; balance degrades gracefully (each bucket simply holds 1/256th
+# of the sampled mass).
 _MAX_ORDER_BUCKETS = 256
 
-def _sample_order_boundaries(
-    d: DataFrame, key_cols: Sequence[str], n_buckets: int, per_bucket: int = 64
-) -> list[tuple]:
-    """Sample ``n_buckets - 1`` ordered key tuples to use as bucket
-    boundaries, with ONE bounded job: ``ORDER BY xxhash64(keys) LIMIT
-    per_bucket * n_buckets`` compiles to TakeOrderedAndProject (a
-    per-partition heap + small driver merge — never a global sort, and
-    at most ``per_bucket * n_buckets`` rows reach the driver). Hashing
-    is uniform over distinct keys, so the sample's order statistics
-    estimate the key-space quantiles.
+
+def _q(col: str) -> str:
+    """``col`` as a SQL identifier (the reference's column names hold
+    spaces and dots)."""
+    return "`" + col.replace("`", "``") + "`"
+
+
+def _key_struct(key_cols: Sequence[str]) -> str:
+    return "struct(" + ", ".join(_q(c) for c in key_cols) + ")"
+
+
+def _order_bounds(
+    df: DataFrame, key_cols: Sequence[str], n_buckets: int, per_bucket: int = 64
+) -> DataFrame:
+    """One row, one column ``__b``: ``n_buckets - 1`` key structs, sorted,
+    to use as bucket boundaries (``n_buckets`` clamped to
+    ``[2, _MAX_ORDER_BUCKETS]``).
+
+    The sample is the ``per_bucket * n_buckets`` rows of smallest
+    ``xxhash64(keys)`` — a TakeOrderedAndProject (a per-partition heap
+    plus a small merge, never a global sort); hashing is uniform over
+    distinct keys, so its order statistics estimate the key-space
+    quantiles. The keys break hash ties, so the sample, and with it
+    every boundary, is a deterministic function of the input rows: each
+    branch of the plan that reads the boundaries sees the same ones.
+    ``sort_array`` orders the sampled structs by Spark's struct
+    ordering (field by field, nulls first — ``asc_nulls_first``), and
+    every ``len/n``-th of them is a boundary.
 
     Boundaries steer BALANCE only, never values: the consumer buckets
-    keys by a monotone count-of-boundaries-below expression, so any
+    keys by the monotone count of boundaries at-or-below the key, so any
     boundary set whatsoever yields the same final ids (see
-    dense_ids_scale). A skewed sample costs balance, not correctness —
-    which is also why ``n_buckets`` is capped at ``_MAX_ORDER_BUCKETS``
-    (the bucket expression is O(n_boundaries) per row; see the cap's
-    comment) and why callers may sample from the RAW input rather than
-    its distinct projection (duplicates weight the quantiles by row
-    frequency; the bucket runs stay monotone either way).
+    dense_ids_scale). A skewed sample costs balance, not correctness.
     """
-    n_buckets = min(n_buckets, _MAX_ORDER_BUCKETS)
-    if n_buckets <= 1:
-        return []
-    cols = [to_col(c) for c in key_cols]
-    samp = (
-        d.select(*cols, F.xxhash64(*cols).alias("__h"))
-        .orderBy("__h")
-        .limit(per_bucket * n_buckets)
-        .collect()
-    )
-    # sort the sample lexicographically, nulls first (matches
-    # asc_nulls_first): per-column key (0,) for null / (1, value).
-    def key_fn(row):
-        return tuple(
-            (0,) if row[c] is None else (1, row[c]) for c in key_cols
+    n = max(2, min(n_buckets, _MAX_ORDER_BUCKETS))
+    # an empty sample gives no boundaries: the index sequence is
+    # filtered first, so the element lookup never runs on an empty array
+    return (
+        df.selectExpr(f"{_key_struct(key_cols)} AS __k")
+        .orderBy(F.expr("xxhash64(__k)"), F.col("__k"))
+        .limit(per_bucket * n)
+        .agg(F.expr("sort_array(collect_list(__k)) AS __s"))
+        .selectExpr(
+            f"transform(filter(sequence(1, {n - 1}), __i -> size(__s) > 0),"
+            f" __i -> __s[(__i * size(__s)) div {n}]) AS __b"
         )
-
-    rows = sorted(samp, key=key_fn)
-    if not rows:
-        return []
-    out, seen = [], set()
-    for i in range(1, n_buckets):
-        r = rows[(i * len(rows)) // n_buckets]
-        t = tuple(r[c] for c in key_cols)
-        if t not in seen:  # duplicate boundaries add nothing
-            seen.add(t)
-            out.append(t)
-    return out
+    )
 
 
-def _order_bucket_expr(key_cols: Sequence[str], boundaries: list[tuple]):
-    """Monotone bucket id: count of boundary tuples lexicographically
-    BELOW the key (nulls-first order). Monotone in key order and equal
-    on equal keys, so buckets are contiguous runs of the sorted key
-    sequence — the property the offset prefix-sum construction needs.
+def _bucket_ranked(
+    df: DataFrame,
+    part_cols: Sequence[str],
+    order_cols: Sequence[str],
+    num_partitions: int | None,
+    local: Sequence[str] = (),
+    totals: Sequence[str] = (),
+) -> DataFrame:
+    """The shared two-phase construction, as one lazy plan. ``_RANK``
+    over the result is the row's 1-based rank within its partition
+    (rows with equal ``part_cols``) in ``order_cols`` order, nulls
+    first; ``__tot0`` is the partition's row count.
+
+    1. Bucket the rows by an order-monotone int ``__bkt`` over
+       ``(*part_cols, *order_cols)``: the number of boundary structs
+       (:func:`_order_bounds`, a one-row broadcast cross-joined onto
+       every row) at or below the row's key struct. Equal keys share a
+       bucket and bucket i's keys precede bucket i+1's, so a partition
+       spans a run of consecutive buckets. Number each bucket's rows in
+       key order, ``__rn``: ONE hash exchange, and no task holds more
+       than a bucket. Each ``local`` SQL window function (``__cum{i}``)
+       runs over the same running frame: the bucket's rows so far
+       (callers pass them only without ``part_cols``).
+    2. Per (partition, bucket) take the first row number, the row count
+       (``__t0``) and each ``totals`` SQL aggregate (``__t{i}``). A
+       broadcast self-join of that table (at most 256 rows per
+       partition) gives ``__off{i}``, the sum of ``__t{i}`` over the
+       partition's earlier buckets, and it is joined back, broadcast.
+       No window runs over the counts.
+
+    The per-bucket aggregate reads the window's output, which is already
+    hash-partitioned on the bucket, so it adds no exchange and reuses
+    the window's.
     """
-    bucket = F.lit(0)
-    for b in boundaries:
-        # key >lex b, nulls-first semantics
-        gt = F.lit(False)
-        eq_prefix = F.lit(True)
-        for c, bv in zip(key_cols, b):
-            col = to_col(c)
-            if bv is None:
-                col_gt = col.isNotNull()
-                col_eq = col.isNull()
-            else:
-                col_gt = F.coalesce(col > F.lit(bv), F.lit(False))
-                col_eq = col.eqNullSafe(F.lit(bv))
-            gt = gt | (eq_prefix & col_gt)
-            eq_prefix = eq_prefix & col_eq
-        bucket = bucket + (gt | eq_prefix).cast("int")  # >= b, i.e. b <= key
-    return bucket
+    n = num_partitions or df.sparkSession.sparkContext.defaultParallelism
+    key = _key_struct([*part_cols, *order_cols])
+    over = (
+        "OVER (PARTITION BY __bkt ORDER BY "
+        + ", ".join(f"{_q(c)} ASC NULLS FIRST" for c in (*part_cols, *order_cols))
+        + " ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)"
+    )
+    bucketed = df.crossJoin(F.broadcast(_order_bounds(df, [*part_cols, *order_cols], n)))
+    ranked = bucketed.selectExpr(
+        *[_q(c) for c in df.columns], f"size(filter(__b, __bound -> __bound <= {key})) AS __bkt"
+    ).selectExpr(
+        "*",
+        f"row_number() {over} AS __rn",
+        *[f"{f} {over} AS __cum{i}" for i, f in enumerate(local)],
+    )
+    parts = [f"__p{j}" for j in range(len(part_cols))]
+    sums = [f"__t{i}" for i in range(len(totals) + 1)]
+    # the count as a row-number span: both sides of the self-join then
+    # read the window's output, so the exchange under it is reused
+    per = (
+        ranked.groupBy(*[F.col(_q(c)) for c in part_cols], F.col("__bkt"))
+        .agg(
+            F.expr("min(__rn)"),
+            F.expr("max(__rn) - min(__rn) + 1"),
+            *[F.expr(t) for t in totals],
+        )
+        .toDF(*parts, "__obkt", "__first", *sums)
+    )
+    other = per.toDF(*[f"{c}o" for c in per.columns])
+    same_part = " AND ".join(["true", *[f"{p} <=> {p}o" for p in parts]])
+    offsets = (
+        per.join(F.broadcast(other), F.expr(same_part))
+        .groupBy(*parts, "__obkt", "__first")
+        .agg(
+            *[F.expr(f"sum(IF(__obkto < __obkt, {t}o, 0)) AS __off{i}") for i, t in enumerate(sums)],
+            F.expr("sum(__t0o) AS __tot0"),
+        )
+    )
+    on = " AND ".join(
+        ["__bkt = __obkt", *[f"{_q(c)} <=> {p}" for c, p in zip(part_cols, parts)]]
+    )
+    return ranked.join(F.broadcast(offsets), F.expr(on))
+
+
+_RANK = "(__off0 + __rn - __first + 1)"
 
 
 def dense_ids_scale(
@@ -115,66 +169,23 @@ def dense_ids_scale(
     single-task global sort — the 100 TB replacement for
     ``row_number() OVER (ORDER BY keys)``.
 
-    Two-phase construction:
-    1. bucket the distinct keys by an order-MONOTONE bucket column
-       (count of sampled boundary tuples at-or-below the key — bucket i
-       holds keys < all of bucket i+1 by construction), rank within
-       each bucket via a partitioned window (ONE hash exchange);
-    2. collect only the per-bucket COUNTS (one tiny row per bucket),
-       prefix-sum them on the driver, and broadcast-join the offsets
-       back: id = offset[bucket] + local_rank.
+    Two-phase construction (:func:`_bucket_ranked`): bucket the
+    distinct keys by an order-MONOTONE bucket column (bucket i holds
+    keys below all of bucket i+1 by construction) and rank within each
+    bucket; the per-bucket counts, prefix-summed by a broadcast
+    self-join, are the offsets: id = offset[bucket] + local_rank.
 
     The result is bit-identical to the exact global row_number (the
-    bucket order concatenated in bucket-id order IS the total order —
-    ANY boundary set yields the same ids, boundaries only balance the
+    buckets concatenated in bucket-id order ARE the total order — ANY
+    boundary set yields the same ids, boundaries only balance the
     buckets), so the same SQL oracle verifies both forms. Work per task
     is bounded by the largest bucket; no task ever sees the whole key
-    set.
-
-    Plan economics vs the earlier repartitionByRange construction: the
-    bucket id is a deterministic COLUMN, so the window's required
-    clustering is satisfied by its own single hash exchange — no range
-    exchange, no extra hashpartitioning(spark_partition_id()) exchange
-    on top of it, and no hidden range-boundary sampling job that
-    re-executes the whole distinct. Three shuffles of the key set
-    became one.
+    set. Building it starts no Spark job.
     """
-    spark = df.sparkSession
-    cols = [to_col(c).alias(c) for c in key_cols]
-    d = df.select(*cols).distinct()
-    n = num_partitions or spark.sparkContext.defaultParallelism
-    # boundaries come from the RAW projected input, not the distinct:
-    # sampling d would force a full distinct materialization before the
-    # counts job even starts (sample-then-rescan — two passes where one
-    # suffices). Boundaries steer balance only (any boundary set yields
-    # the same ids), so the frequency-weighted raw sample is value-safe;
-    # the ONE distinct shuffle now runs inside the counts job below.
-    boundaries = _sample_order_boundaries(df.select(*cols), key_cols, n)
-    staged = d.withColumn("__bkt", _order_bucket_expr(key_cols, boundaries))
-    w = Window.partitionBy("__bkt").orderBy(
-        *[to_col(c).asc_nulls_first() for c in key_cols]
-    )
-    # staged: the ranked table is consumed twice (counts, final join);
-    # boundaries are plan literals, so a recompute is value-safe — the
-    # cache only saves the second window pass.
-    ranked = stage(staged.withColumn("__rn", F.row_number().over(w)))
-    # tiny action: one row per bucket
-    counts = sorted(
-        (r["__bkt"], r["cnt"])
-        for r in ranked.groupBy("__bkt").agg(F.count(F.lit(1)).alias("cnt")).collect()
-    )
-    offsets, acc = {}, 0
-    for bkt, cnt in counts:
-        offsets[bkt] = acc
-        acc += cnt
-    offsets_df = spark.createDataFrame(
-        [(bkt, off) for bkt, off in offsets.items()], "__bkt int, __off long"
-    )
-    return (
-        ranked.join(F.broadcast(offsets_df), "__bkt")
-        .withColumn(id_col, (F.col("__off") + F.col("__rn")).cast("long"))
-        .select(id_col, *key_cols)
-    )
+    cols = [_q(c) for c in key_cols]
+    d = df.selectExpr(*cols).distinct()
+    ranked = _bucket_ranked(d, [], key_cols, num_partitions)
+    return ranked.selectExpr(f"CAST({_RANK} AS BIGINT) AS {_q(id_col)}", *cols)
 
 
 def percent_rank_scale(
@@ -189,63 +200,21 @@ def percent_rank_scale(
     BY ...)`` when the group column is low-cardinality (each exact-form
     window partition would be a single task holding a whole group).
 
-    Same two-phase construction as :func:`dense_ids_scale`, group-aware:
-
-    1. bucket on an order-monotone column over (group, *order) — a
-       group spans a RUN of consecutive buckets, each task bounded by
-       the bucket size, and rank within (bucket, group);
-    2. collect only the per-(bucket, group) COUNTS (tiny: at most
-       buckets + groups rows), prefix-sum per group in bucket order on
-       the driver, broadcast the offsets back:
-       rank = offset + local_rank, q = (rank-1)/(n_group-1).
+    The :func:`dense_ids_scale` construction with the group as the
+    partition column: a group spans a RUN of consecutive buckets, each
+    task bounded by the bucket size; rank = offset + local_rank,
+    q = (rank-1)/(n_group-1).
 
     ``order_cols`` must be a total order within each group (include a
     tiebreak key); then the global rank is bit-identical to the exact
     window form and the SAME oracle verifies both. Single-row groups
     get q = 0.0 (the engines' own percent_rank convention).
-
-    Plan economics: the bucket id is an order-monotone COLUMN over
-    (group, *order) — see dense_ids_scale — so the window's own hash
-    exchange on (__bkt, group) is the ONLY shuffle; the earlier
-    repartitionByRange form paid a range exchange, a second
-    hashpartitioning(spark_partition_id()) exchange AND a hidden
-    boundary-sampling pass over the input.
     """
-    key_cols = [group_col, *order_cols]
-    order = [to_col(c).asc_nulls_first() for c in order_cols]
-    spark = df.sparkSession
-    n = num_partitions or spark.sparkContext.defaultParallelism
-    boundaries = _sample_order_boundaries(df, key_cols, n)
-    staged = df.withColumn("__bkt", _order_bucket_expr(key_cols, boundaries))
-    w = Window.partitionBy("__bkt", group_col).orderBy(*order)
-    # staged: the ranked table is consumed twice (counts, final join);
-    # boundaries are plan literals, so a recompute is value-safe — the
-    # cache only saves the second pass.
-    ranked = stage(staged.withColumn("__rn", F.row_number().over(w)))
-    counts = sorted(
-        (r["__bkt"], r[group_col], r["cnt"])
-        for r in ranked.groupBy("__bkt", group_col)
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .collect()
+    ranked = _bucket_ranked(df, [group_col], order_cols, num_partitions)
+    q = (
+        f"IF(__tot0 > 1, CAST({_RANK} - 1 AS DOUBLE) / CAST(__tot0 - 1 AS DOUBLE), 0.0)"
     )
-    totals: dict = {}
-    for _, g, cnt in counts:
-        totals[g] = totals.get(g, 0) + cnt
-    offsets, acc = [], {}
-    for bkt, g, cnt in counts:  # sorted by (bkt, g): bucket order per group
-        offsets.append((bkt, g, acc.get(g, 0), totals[g]))
-        acc[g] = acc.get(g, 0) + cnt
-    g_type = df.schema[group_col].dataType.simpleString()
-    off_df = spark.createDataFrame(
-        offsets, f"__bkt int, {group_col} {g_type}, __off long, __n long"
-    )
-    rank = F.col("__off") + F.col("__rn")
-    q = F.when(F.col("__n") > 1, (rank - 1).cast("double") / (F.col("__n") - 1).cast("double")).otherwise(0.0)
-    return (
-        ranked.join(F.broadcast(off_df), ["__bkt", group_col])
-        .withColumn(out_col, q)
-        .drop("__bkt", "__rn", "__off", "__n")
-    )
+    return ranked.selectExpr(*[_q(c) for c in df.columns], f"{q} AS {_q(out_col)}")
 
 
 def ntile_scale(
@@ -259,67 +228,28 @@ def ntile_scale(
     single-task window — bit-identical to the exact window form, so the
     same SQL oracle verifies both (the dense_ids_scale guarantee).
 
-    Same two-phase construction as :func:`dense_ids_scale`, kept
-    row-preserving (no distinct): bucket on an order-monotone column
-    over the order columns, rank within each bucket, collect only
-    per-bucket COUNTS, prefix-sum on the driver, broadcast offsets
-    back. The global rank
-    then maps to the tile with ntile's own split rule — the first
-    ``total % n`` tiles hold ``total DIV n + 1`` rows, the rest
-    ``total DIV n`` — in exact integer arithmetic
-    (``ceil(a/b) = (a+b-1) DIV b``).
+    The :func:`dense_ids_scale` construction kept row-preserving (no
+    distinct): the global rank = offset + local rank, and the total is
+    the sum of the bucket counts. The rank maps to the tile with
+    ntile's own split rule — the first ``total % n`` tiles hold
+    ``total DIV n + 1`` rows, the rest ``total DIV n`` — in exact
+    integer arithmetic (``ceil(a/b) = (a+b-1) DIV b``); with fewer rows
+    than tiles each row gets its own tile.
 
     ``order_cols`` must be a total order (include a tiebreak key); ties
     then split across tiles deterministically, exactly as the window
-    form with the same ORDER BY does. This is the 100 TB routing for
-    rfm_segments' quintiles (VERDICT r8 item 7) — unlike bin_quantile's
-    exact/approx dispatcher there is nothing to dispatch: this form IS
-    exact, it just never sorts the world in one task.
+    form with the same ORDER BY does.
     """
-    order = [to_col(c).asc_nulls_first() for c in order_cols]
-    spark = df.sparkSession
-    n = num_partitions or spark.sparkContext.defaultParallelism
-    # order-monotone bucket column instead of repartitionByRange +
-    # spark_partition_id: one hash exchange (the window's own) instead
-    # of a range exchange + a pid exchange + a hidden sampling pass
-    # (see dense_ids_scale — boundaries steer balance, never values)
-    boundaries = _sample_order_boundaries(df, list(order_cols), n)
-    staged = df.withColumn("__bkt", _order_bucket_expr(list(order_cols), boundaries))
-    w = Window.partitionBy("__bkt").orderBy(*order)
-    # staged: consumed twice (counts, final join); boundaries are plan
-    # literals, so a recompute is value-safe
-    ranked = stage(staged.withColumn("__rn", F.row_number().over(w)))
-    counts = sorted(
-        (r["__bkt"], r["cnt"])
-        for r in ranked.groupBy("__bkt").agg(F.count(F.lit(1)).alias("cnt")).collect()
+    ranked = _bucket_ranked(df, [], order_cols, num_partitions)
+    q = f"(__tot0 div {n_tiles})"
+    big = f"((__tot0 % {n_tiles}) * ({q} + 1))"  # rows in the (q+1)-sized tiles
+    tile = (
+        f"CASE WHEN {q} = 0 THEN {_RANK}"
+        f" WHEN {_RANK} <= {big} THEN ({_RANK} + {q}) div ({q} + 1)"
+        f" ELSE __tot0 % {n_tiles} + ({_RANK} - {big} + {q} - 1) div {q} END"
     )
-    offsets, acc = [], 0
-    for bkt, cnt in counts:
-        offsets.append((bkt, acc))
-        acc += cnt
-    total = acc
-    off_df = spark.createDataFrame(offsets or [(0, 0)], "__bkt int, __off long")
-    rank = F.col("__off") + F.col("__rn")  # 1-based exact global rank
-    q, r = divmod(total, n_tiles)
-
-    def _ceil_div(a, b: int):
-        # exact integer ceil(a/b) for Column longs: make the numerator
-        # exactly divisible first, so the double division is exact
-        num = a + F.lit(b - 1)
-        return ((num - num % F.lit(b)) / F.lit(b)).cast("long")
-
-    if q == 0:
-        # fewer rows than tiles: ntile gives each row its own tile
-        tile = rank
-    else:
-        big = r * (q + 1)  # rows covered by the (q+1)-sized tiles
-        tile = F.when(rank <= F.lit(big), _ceil_div(rank, q + 1)).otherwise(
-            F.lit(r) + _ceil_div(rank - F.lit(big), q)
-        )
-    return (
-        ranked.join(F.broadcast(off_df), "__bkt")
-        .withColumn(out_col, tile.cast("long"))
-        .drop("__bkt", "__rn", "__off")
+    return ranked.selectExpr(
+        *[_q(c) for c in df.columns], f"CAST({tile} AS BIGINT) AS {_q(out_col)}"
     )
 
 
@@ -333,14 +263,11 @@ def prefix_sums_scale(
     window — the 100 TB replacement for
     ``sum(x) OVER (ORDER BY keys ROWS UNBOUNDED PRECEDING)``.
 
-    Same two-phase construction as :func:`dense_ids_scale`:
-
-    1. bucket on an order-monotone column over ``order_cols`` (bucket
-       i's keys precede bucket i+1's), cumulative-sum each ``sum_cols``
-       within each bucket;
-    2. collect only the per-bucket TOTALS (one tiny row per bucket),
-       prefix-sum them on the driver, broadcast the offsets back:
-       running = offset[bucket] + local_running.
+    The :func:`dense_ids_scale` construction with sums in place of
+    counts: cumulative-sum each ``sum_cols`` within its bucket, and add
+    the bucket totals of the earlier buckets:
+    running = offset[bucket] + local_running. Adds ``cum_<c>`` per
+    sum column.
 
     Integer sums only (the caller guarantees BIGINT columns): integer
     addition is associative, so the result is bit-identical to the
@@ -348,43 +275,15 @@ def prefix_sums_scale(
     ``order_cols`` must be a total order (include a tiebreak key) for
     the row-frame cumulative to be deterministic.
     """
-    order = [to_col(c).asc_nulls_first() for c in order_cols]
-    spark = df.sparkSession
-    n = num_partitions or spark.sparkContext.defaultParallelism
-    # order-monotone bucket column instead of repartitionByRange +
-    # spark_partition_id — one hash exchange (the window's own) instead
-    # of range + pid exchanges + a hidden sampling pass (dense_ids_scale)
-    boundaries = _sample_order_boundaries(df, list(order_cols), n)
-    staged = df.withColumn("__bkt", _order_bucket_expr(list(order_cols), boundaries))
-    w = (
-        Window.partitionBy("__bkt")
-        .orderBy(*order)
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    sums = [f"sum({_q(c)})" for c in sum_cols]
+    ranked = _bucket_ranked(df, [], order_cols, num_partitions, sums, sums)
+    return ranked.selectExpr(
+        *[_q(c) for c in df.columns],
+        *[
+            f"CAST(__off{i + 1} + __cum{i} AS BIGINT) AS {_q('cum_' + c)}"
+            for i, c in enumerate(sum_cols)
+        ],
     )
-    cum = staged
-    for c in sum_cols:
-        cum = cum.withColumn(f"__cum_{c}", F.sum(to_col(c)).over(w))
-    # staged: consumed twice (totals, final join); boundaries are plan
-    # literals, so a recompute is value-safe
-    cum = stage(cum)
-    totals = sorted(
-        (r["__bkt"], tuple(r[f"t_{c}"] for c in sum_cols))
-        for r in cum.groupBy("__bkt")
-        .agg(*[F.sum(to_col(c)).alias(f"t_{c}") for c in sum_cols])
-        .collect()
-    )
-    offsets, acc = [], [0] * len(sum_cols)
-    for bkt, ts in totals:
-        offsets.append((bkt, *acc))
-        acc = [a + (t or 0) for a, t in zip(acc, ts)]
-    off_schema = "__bkt int, " + ", ".join(f"__off_{c} long" for c in sum_cols)
-    off_df = spark.createDataFrame(offsets, off_schema)
-    out = cum.join(F.broadcast(off_df), "__bkt")
-    for c in sum_cols:
-        out = out.withColumn(
-            f"cum_{c}", (F.col(f"__off_{c}") + F.col(f"__cum_{c}")).cast("long")
-        ).drop(f"__cum_{c}", f"__off_{c}")
-    return out.drop("__bkt")
 
 
 def _topk_prune_fn(n_groups: int, k: int):

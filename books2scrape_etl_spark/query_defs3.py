@@ -547,36 +547,19 @@ def q_books_stream_source_rt(spark: SparkSession, sf_dir: str) -> DataFrame:
     'source' section additionally pins the full-schema symmetric
     difference against the batch read; this single pins the drained
     per-category counts."""
-    import os
-    import tempfile
-    import uuid
-
     from books2scrape_etl_spark.sources.datasource import register_books_source
+    from books2scrape_etl_spark.streaming.windows import _drain_to_memory
 
     register_books_source(spark)
-    name = f"books_src_{uuid.uuid4().hex[:8]}"
-    with tempfile.TemporaryDirectory(prefix=f"ckpt_{name}_") as ckpt:
-        (
-            spark.readStream.format("books")
-            .option("pages", "2")
-            .option("fixtures", "true")
-            .load()
-            .writeStream.format("memory")
-            .queryName(name)
-            .option("checkpointLocation", os.path.join(ckpt, "offsets"))
-            .trigger(availableNow=True)
-            .start()
-            .awaitTermination()
-        )
-        out = (
-            spark.table(name)
-            .groupBy("Category")
-            .agg(F.count(F.lit(1)).alias("n_books"))
-            .orderBy("Category")
-            .localCheckpoint(eager=True)
-        )
-        spark.catalog.dropTempView(name)
-    return out
+    stream = (
+        spark.readStream.format("books").option("pages", "2").option("fixtures", "true").load()
+    )
+    return (
+        _drain_to_memory(stream, "append")
+        .groupBy("Category")
+        .agg(F.count(F.lit(1)).alias("n_books"))
+        .orderBy("Category")
+    )
 
 
 def _has_protobuf() -> bool:

@@ -125,14 +125,15 @@ def _stream_events(spark: SparkSession, sf_dir: str, copies: int = 1) -> DataFra
     # Streaming twin of io.read_table's events branch: ``ts`` has shipped
     # as TIMESTAMP(NANOS) (readable only as raw BIGINT via the legacy
     # conf) and as TIMESTAMP(MICROS)-NTZ. readStream needs a declared
-    # schema, so probe the actual dtype with a batch read first (footer
-    # metadata only — no data scan is triggered) and declare to match;
-    # assuming a vintage is exactly the round-3 regression.
+    # schema, so read the actual dtype from the footer first (no job) and
+    # declare to match; assuming a vintage is exactly the round-3
+    # regression.
     from pyspark.sql import types as T
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    from books2scrape_etl_spark.io import _read_events_raw
+
     src = os.path.abspath(os.path.join(sf_dir, "events.parquet"))
-    probe = spark.read.parquet(src)
+    probe, unit = _read_events_raw(spark, src)
     ts_read = dict(probe.dtypes)["ts"]
     ts_type: T.DataType = {
         "bigint": T.LongType(),
@@ -150,12 +151,12 @@ def _stream_events(spark: SparkSession, sf_dir: str, copies: int = 1) -> DataFra
     stream_dir = _stage_events_dir(spark, src, copies)
     raw = spark.readStream.schema(schema).parquet(stream_dir)
     if ts_read == "bigint":
-        # raw epoch longs: infer the unit (ns/us/ms/s) from sampled
-        # values of the batch probe — same magnitude rule as io.py; a
+        # raw epoch longs: the footer's unit, else inferred (ns/us/ms/s)
+        # from sampled values of the batch probe — same rule as io.py; a
         # streaming source can't run the sample job itself
         from books2scrape_etl_spark.io import _epoch_long_to_ts
 
-        return raw.withColumn("ts", _epoch_long_to_ts(probe, src))
+        return raw.withColumn("ts", _epoch_long_to_ts(probe, src, unit))
     if ts_read == "timestamp_ntz":
         # micros-NTZ vintage: reinterpret wall clock as UTC epoch
         from books2scrape_etl_spark.io import _pin_utc

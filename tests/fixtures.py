@@ -3,7 +3,25 @@ binning and star-schema golden tests."""
 
 from __future__ import annotations
 
+import uuid
+
 from books2scrape_etl_spark.io import BOOKS_RAW_SCHEMA
+
+
+def jobs_started(spark, fn):
+    """``fn()``'s result and the Spark jobs it started on this thread."""
+    sc = spark.sparkContext
+    group = f"jobs_started_{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    # job-start events reach the status tracker through the listener bus
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = sc.statusTracker().getJobIdsForGroup(group)
+    return out, len(jobs)
 
 
 def _row(

@@ -11,7 +11,6 @@ driver's correctness run.
 
 import datetime
 import os
-import uuid
 
 import pyarrow as pa
 import pyarrow.parquet as pq
@@ -19,6 +18,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from books2scrape_etl_spark.io import TABLES, read_table
+from tests.fixtures import jobs_started
 
 # Wall-clock instants the fixture writers encode; chosen with non-zero
 # microseconds so precision truncation bugs can't hide.
@@ -182,29 +182,13 @@ def test_landing_skips_writer_metadata_dirs(spark, tmp_path):
     assert got == sorted(_expected_epochs())  # exactly one batch, no dupes
 
 
-def _jobs_started(spark, fn):
-    """``fn()``'s result and the Spark jobs it started on this thread."""
-    sc = spark.sparkContext
-    group = f"read_table_{uuid.uuid4().hex}"
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    # job-start events reach the status tracker through the listener bus
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    jobs = sc.statusTracker().getJobIdsForGroup(group)
-    return out, len(jobs)
-
-
 def test_read_table_starts_no_job_and_keeps_inferred_schema(spark, sf_dir):
     """``read_table`` takes each table's schema from its parquet footer in
     the Spark driver: no schema-inference job, and the schema Spark's own
     inference gives the same file. (events' contract is its normalized
     ``ts``, pinned by the vintage tests.)"""
     for name in TABLES:
-        df, jobs = _jobs_started(spark, lambda: read_table(spark, name, sf_dir))
+        df, jobs = jobs_started(spark, lambda: read_table(spark, name, sf_dir))
         assert jobs == 0, name
         if name != "events":
             inferred = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet")).schema
@@ -213,14 +197,13 @@ def test_read_table_starts_no_job_and_keeps_inferred_schema(spark, sf_dir):
 
 @pytest.mark.parametrize("vintage", ["nanos_dir", "micros_dir"])
 def test_read_table_events_vintage_starts_no_job(spark, vintage, request):
-    """No schema-inference job for either vintage. The nanos vintage
-    arrives as a bare BIGINT, whose epoch unit the first read of a file
-    samples with one LocalLimit job, memoized per file; every read after
-    that starts none."""
+    """No job for either vintage, not even on a file's first read: the
+    schema and the nanos vintage's epoch unit both come from the parquet
+    footer (only an unannotated INT64 column is sampled)."""
     d = request.getfixturevalue(vintage)
-    _, first = _jobs_started(spark, lambda: read_table(spark, "events", d))
-    assert first == (1 if vintage == "nanos_dir" else 0)
-    df, again = _jobs_started(spark, lambda: read_table(spark, "events", d))
+    _, first = jobs_started(spark, lambda: read_table(spark, "events", d))
+    assert first == 0
+    df, again = jobs_started(spark, lambda: read_table(spark, "events", d))
     assert again == 0
     assert dict(df.dtypes)["ts"] == "timestamp"
     assert _epochs(spark, d) == _expected_epochs()

@@ -2,16 +2,24 @@
 semantically identical to their exact forms."""
 
 import pytest
+from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from books2scrape_etl_spark.operators.scale import dense_ids_scale, salted_join
 from books2scrape_etl_spark.plans.star import build_dim
+from tests.fixtures import jobs_started
+
+
+def _row_number_ids(df, key):
+    """The exact form: row_number over the distinct keys, nulls first."""
+    w = Window.orderBy(*[F.col(c).asc_nulls_first() for c in key])
+    return df.select(*key).distinct().withColumn("id", F.row_number().over(w))
 
 
 def test_dense_ids_scale_matches_exact(spark, sf_dir):
     li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
     scale = dense_ids_scale(li, ["l_partkey", "l_suppkey"], "id", num_partitions=8)
-    exact = build_dim(li, ["l_partkey", "l_suppkey"], "id")
+    exact = _row_number_ids(li, ["l_partkey", "l_suppkey"])
     s = {(r.l_partkey, r.l_suppkey): r.id for r in scale.collect()}
     e = {(r.l_partkey, r.l_suppkey): r.id for r in exact.collect()}
     assert s == e  # bit-identical to the global row_number
@@ -33,8 +41,7 @@ def test_dense_ids_null_and_string_keys_match_exact(spark):
         (chr(97 + i % 26) * 2, i % 7) for i in range(400)
     ]
     df = spark.createDataFrame(rows, "k string, v int")
-    exact = build_dim(df, ["k", "v"], "id")
-    e = {(r.k, r.v): r.id for r in exact.collect()}
+    e = {(r.k, r.v): r.id for r in _row_number_ids(df, ["k", "v"]).collect()}
     # 4096 exercises the _MAX_ORDER_BUCKETS cap (VERDICT r12 item 3):
     # the requested partition count far exceeds the cap and the ids
     # must still be bit-identical to the exact global row_number.
@@ -45,21 +52,74 @@ def test_dense_ids_null_and_string_keys_match_exact(spark):
 
 
 def test_order_bucket_boundary_cap(spark):
-    """_order_bucket_expr is O(n_boundaries) per row, so the boundary
+    """The bucket expression is O(n_boundaries) per row, so the boundary
     count must stay bounded no matter how large a partition count the
     caller (or defaultParallelism on a big cluster) asks for — capped
-    at _MAX_ORDER_BUCKETS, the expression stays a few hundred nodes
-    and inside whole-stage codegen limits (VERDICT r12 item 3)."""
-    from books2scrape_etl_spark.operators.scale import (
-        _MAX_ORDER_BUCKETS,
-        _sample_order_boundaries,
-    )
+    at _MAX_ORDER_BUCKETS, the per-row work stays a few hundred struct
+    comparisons (VERDICT r12 item 3)."""
+    from books2scrape_etl_spark.operators.scale import _MAX_ORDER_BUCKETS, _order_bounds
 
     df = spark.range(100_000).select(F.col("id").alias("k"))
-    bounds = _sample_order_boundaries(df, ["k"], 4096)
-    assert len(bounds) <= _MAX_ORDER_BUCKETS - 1
-    # and the sample job's LIMIT is capped too (64 rows per bucket)
-    assert len(bounds) > 0
+    bounds = _order_bounds(df, ["k"], 4096).first()["__b"]
+    assert 0 < len(bounds) <= _MAX_ORDER_BUCKETS - 1
+    assert bounds == sorted(bounds)
+    # an empty input samples nothing and gives no boundaries
+    assert _order_bounds(df.limit(0), ["k"], 8).first()["__b"] == []
+
+
+def test_order_bucket_nulls_first_multi_column(spark):
+    """The bucket is the count of boundary structs at or below the key
+    struct, so Spark's struct ``<=`` must order nulls first in every
+    field, like the window's ``asc_nulls_first``: along the exact order
+    the buckets never decrease, and the ids equal row_number's, whichever
+    column holds the null."""
+    from books2scrape_etl_spark.operators.scale import _bucket_ranked
+
+    rows = [
+        (a, b, c)
+        for a in (None, 0, 1)
+        for b in (None, "x", "y")
+        for c in (None, -1.5, 2.0)
+    ] * 3
+    df = spark.createDataFrame(rows, "a int, b string, c double")
+    key = ["a", "b", "c"]
+    exact = _row_number_ids(df, key)
+    e = {tuple(r[c] for c in key): r.id for r in exact.collect()}
+    for n in (2, 5, 27):
+        got = dense_ids_scale(df, key, "id", num_partitions=n)
+        assert {tuple(r[c] for c in key): r.id for r in got.collect()} == e, n
+        bkt = {
+            tuple(r[c] for c in key): r["__bkt"]
+            for r in _bucket_ranked(df.distinct(), [], key, n).collect()
+        }
+        ordered = [bkt[k] for k in sorted(e, key=e.get)]
+        assert ordered == sorted(ordered), n
+        assert len(set(ordered)) > 1, n
+
+
+def test_scale_builders_start_no_job(spark, sf_dir):
+    """Building any of the four ordered operators is a lazy plan: no
+    boundary sample or count collect runs until an action."""
+    from books2scrape_etl_spark.operators.scale import (
+        ntile_scale,
+        percent_rank_scale,
+        prefix_sums_scale,
+    )
+
+    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    builders = {
+        "dense_ids_scale": lambda: dense_ids_scale(li, ["l_partkey"], "id"),
+        "ntile_scale": lambda: ntile_scale(li, ["l_quantity", "l_orderkey", "l_linenumber"], 4),
+        "percent_rank_scale": lambda: percent_rank_scale(
+            li, "l_returnflag", ["l_orderkey", "l_linenumber"]
+        ),
+        "prefix_sums_scale": lambda: prefix_sums_scale(
+            li, ["l_orderkey", "l_linenumber"], ["l_linenumber"]
+        ),
+    }
+    for name, build in builders.items():
+        _, jobs = jobs_started(spark, build)
+        assert jobs == 0, name
 
 
 def test_build_dims_one_pass_shared_key_sets(spark):
@@ -67,11 +127,13 @@ def test_build_dims_one_pass_shared_key_sets(spark):
     natural key must share one grouping set; duplicate grouping sets
     would hand the shared grouping_id every key row twice, silently
     doubling each dim (ids 1..2n instead of 1..n). Each dim still gets
-    its own column order and its own build_dim-identical ids."""
-    from books2scrape_etl_spark.plans.star import build_dim, build_dims_one_pass
+    its own column order and the row_number ids of that order: d4's
+    permuted key keeps its own ids."""
+    from books2scrape_etl_spark.plans.star import build_dims_one_pass
 
     df = spark.createDataFrame(
-        [("a", 1), ("a", 1), ("b", 2), ("c", 2)], "k string, v int"
+        [("a", 1), ("a", 1), ("b", 2), ("c", 2), ("c", 1), (None, 3), ("b", None)],
+        "k string, v int",
     )
     dims = build_dims_one_pass(
         df,
@@ -88,8 +150,10 @@ def test_build_dims_one_pass_shared_key_sets(spark):
         "d3": (["k", "v"], "id3"),
         "d4": (["v", "k"], "id4"),
     }.items():
-        want = sorted(map(tuple, build_dim(df, key, id_col).collect()))
-        got = sorted(map(tuple, dims[name].collect()))
+        want = sorted(
+            map(tuple, _row_number_ids(df, key).select("id", *key).collect()), key=str
+        )
+        got = sorted(map(tuple, dims[name].collect()), key=str)
         assert got == want, name
 
 
@@ -251,26 +315,30 @@ def _cached_entries(spark, marker: str) -> int:
 def test_stage_same_plan_keeps_one_entry(spark):
     """Rebuilding the same plan re-stages it under the same key: the
     previous execution's cache is released, never piled up or reused."""
+    from books2scrape_etl_spark.functions.util import stage
+
     for _ in range(3):
         df = spark.range(200).select((F.col("id") % 13).alias("stage_same_k"))
-        got = dense_ids_scale(df, ["stage_same_k"], "id", num_partitions=3)
-        assert sorted(r.id for r in got.collect()) == list(range(1, 14))
+        got = stage(df.distinct())
+        assert sorted(r.stage_same_k for r in got.collect()) == list(range(13))
     assert _cached_entries(spark, "stage_same_k") == 1
 
 
 def test_stage_concurrent_inputs_keep_their_caches(spark):
-    """Two executions of one operator on different inputs, from two
+    """Two staged frames of different inputs, built and run from two
     threads, must not evict each other's staging caches."""
     from concurrent.futures import ThreadPoolExecutor
 
+    from books2scrape_etl_spark.functions.util import stage
+
     def run(mod):
         df = spark.range(300).select((F.col("id") % mod).alias("stage_thread_k"))
-        got = dense_ids_scale(df, ["stage_thread_k"], "id", num_partitions=3)
-        return sorted(r.id for r in got.collect())
+        got = stage(df.distinct())
+        return sorted(r.stage_thread_k for r in got.collect())
 
     with ThreadPoolExecutor(max_workers=2) as pool:
         got = list(pool.map(run, (11, 19)))
-    assert got == [list(range(1, 12)), list(range(1, 20))]
+    assert got == [list(range(11)), list(range(19))]
     assert _cached_entries(spark, "stage_thread_k") == 2
 
 
@@ -506,21 +574,20 @@ def test_same_basename_inputs_land_separately(spark, sf_dir, tmp_path):
             assert not problems, f"{qname} on {d}: {problems}"
 
 
-def test_chained_ntile_scale_keeps_first_ranked_frame(spark):
-    """ntile_scale(ntile_scale(df)): the second call's plan reads the
-    first call's ranked frame, so staging the second must not release
-    the first (a per-operator slot did, and recomputed the window)."""
+def test_chained_ntile_scale(spark):
+    """ntile_scale(ntile_scale(df)): the second call buckets and ranks
+    the first call's lazy plan; both tilings keep ntile's mass law."""
     from books2scrape_etl_spark.operators.scale import ntile_scale
 
     df = spark.range(500).select(
         F.col("id").alias("chain_v"), (F.col("id") % 7).alias("chain_g")
     )
     r1 = ntile_scale(df, ["chain_v"], 4, out_col="chain_q1")
-    assert _cached_entries(spark, "chain_v") == 1
     r2 = ntile_scale(r1, ["chain_g", "chain_v"], 3, out_col="chain_q2")
-    assert _cached_entries(spark, "chain_v") == 2
     got = r2.groupBy("chain_q1").count().orderBy("chain_q1").collect()
     assert [(r.chain_q1, r["count"]) for r in got] == [(q, 125) for q in range(1, 5)]
+    got = r2.groupBy("chain_q2").count().orderBy("chain_q2").collect()
+    assert [r["count"] for r in got] == [167, 167, 166]
 
 
 def test_percent_rank_scale_single_row_group(spark):
