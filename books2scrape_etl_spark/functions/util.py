@@ -85,10 +85,11 @@ def sized_shuffle_partitions(spark: SparkSession, n_rows: int):
 
 # Staging caches, keyed by the analyzed plan's semantic hash and kept
 # in staging order. The cap bounds one pass of the 16 bench.py headline
-# qnames, which stages three distinct frames: the star's grouping-sets
-# table (join_fact) and the MinHash shingle and band tables
-# (dedup_minhash); the ordered scale operators stage nothing. A warm
-# pass re-stages the same keys, so it never evicts its own working set
+# qnames, which stages four distinct frames: the star's grouping-sets
+# table (join_fact), the MinHash shingle and band tables
+# (dedup_minhash) and the ranked keys of surrogate_key_scale (each
+# ordered scale operator stages its ranked rows). A warm pass re-stages
+# the same keys, so it never evicts its own working set
 # (tests/test_plans.py pins this), and a full-registry sweep holds at
 # most four staging caches. The books pipeline
 # (plans.books.transform_books) stages three: the parsed pages, the

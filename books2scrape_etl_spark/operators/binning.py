@@ -112,25 +112,22 @@ def bin_quantile(
     labels: Sequence[str],
     out_col: str = "tier",
     tiebreak: Sequence[str] = (),
-    relative_error: float = 0.001,
-    max_exact_rows: int | None = None,
 ) -> DataFrame:
     """B2 dispatcher (VERDICT r6 item 6): exact ntile below the
     exact-global-sort budget, the Greenwald-Khanna approx variant
     above it — so no caller can accidentally single-task-sort a
     100 TB fact by asking for quantile tiers.
 
-    The budget comes from ``max_exact_rows`` or the session conf
-    ``spark.books2scrape_etl.maxExactGlobalSortRows`` (default 10M);
+    The budget is ``operators.scale.EXACT_SORT_BUDGET`` rows (10M);
     the row probe early-stops (see
     :func:`operators.scale.exceeds_exact_sort_budget`). NOTE the two
     branches differ semantically at ties/edges: ntile splits ties
-    across tiers, the approx CASE bins by value edges (within
-    ``relative_error``) — callers needing bit-pinned exact semantics
-    at any size call :func:`bin_quantile_exact` explicitly and own
-    the sort."""
+    across tiers, the approx CASE bins by value edges (within its
+    default ``relative_error``) — callers needing bit-pinned exact
+    semantics at any size call :func:`bin_quantile_exact` explicitly
+    and own the sort."""
     from books2scrape_etl_spark.operators.scale import exceeds_exact_sort_budget
 
-    if exceeds_exact_sort_budget(df, max_exact_rows):
-        return bin_quantile_approx(df, col, labels, out_col, relative_error)
+    if exceeds_exact_sort_budget(df):
+        return bin_quantile_approx(df, col, labels, out_col)
     return bin_quantile_exact(df, col, labels, out_col, tiebreak)

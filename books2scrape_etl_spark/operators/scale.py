@@ -16,7 +16,7 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from books2scrape_etl_spark.functions.util import conf_guard, to_col
+from books2scrape_etl_spark.functions.util import conf_guard, stage, to_col
 
 # Cap on order-bucket count (VERDICT r12 item 3 / ADVICE r12). The
 # bucket id counts the boundaries at-or-below the key, evaluated per
@@ -101,16 +101,20 @@ def _bucket_ranked(
        than a bucket. Each ``local`` SQL window function (``__cum{i}``)
        runs over the same running frame: the bucket's rows so far
        (callers pass them only without ``part_cols``).
-    2. Per (partition, bucket) take the first row number, the row count
-       (``__t0``) and each ``totals`` SQL aggregate (``__t{i}``). A
-       broadcast self-join of that table (at most 256 rows per
-       partition) gives ``__off{i}``, the sum of ``__t{i}`` over the
-       partition's earlier buckets, and it is joined back, broadcast.
-       No window runs over the counts.
+    2. Per (partition, bucket) take the first and last row numbers
+       (their span is the row count) and each ``totals`` SQL aggregate
+       (``__t{i}``, i from 1). A broadcast self-join of that table (at
+       most 256 rows per partition) gives ``__off0``, the row count of
+       the partition's earlier buckets, ``__off{i}``, the sum of their
+       ``__t{i}``, and ``__tot0``, the partition's row count; it is
+       joined back, broadcast. No window runs over the counts.
 
-    The per-bucket aggregate reads the window's output, which is already
-    hash-partitioned on the bucket, so it adds no exchange and reuses
-    the window's.
+    The ranked rows are staged (``functions.util.stage``, a lazy
+    persist: building still starts no job). The per-bucket counts and
+    the rows joined back read that one cache, so only the boundary
+    sample and the ranking read the input; the counts add one small
+    exchange of per-bucket partial aggregates, which both sides of the
+    self-join share.
     """
     n = num_partitions or df.sparkSession.sparkContext.defaultParallelism
     key = _key_struct([*part_cols, *order_cols])
@@ -120,34 +124,35 @@ def _bucket_ranked(
         + " ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)"
     )
     bucketed = df.crossJoin(F.broadcast(_order_bounds(df, [*part_cols, *order_cols], n)))
-    ranked = bucketed.selectExpr(
-        *[_q(c) for c in df.columns], f"size(filter(__b, __bound -> __bound <= {key})) AS __bkt"
-    ).selectExpr(
-        "*",
-        f"row_number() {over} AS __rn",
-        *[f"{f} {over} AS __cum{i}" for i, f in enumerate(local)],
+    ranked = stage(
+        bucketed.selectExpr(
+            *[_q(c) for c in df.columns],
+            f"size(filter(__b, __bound -> __bound <= {key})) AS __bkt",
+        ).selectExpr(
+            "*",
+            f"row_number() {over} AS __rn",
+            *[f"{f} {over} AS __cum{i}" for i, f in enumerate(local)],
+        )
     )
     parts = [f"__p{j}" for j in range(len(part_cols))]
-    sums = [f"__t{i}" for i in range(len(totals) + 1)]
-    # the count as a row-number span: both sides of the self-join then
-    # read the window's output, so the exchange under it is reused
+    sums = [f"__t{i + 1}" for i in range(len(totals))]
+    # the count as a row-number span over the staged rows
     per = (
         ranked.groupBy(*[F.col(_q(c)) for c in part_cols], F.col("__bkt"))
-        .agg(
-            F.expr("min(__rn)"),
-            F.expr("max(__rn) - min(__rn) + 1"),
-            *[F.expr(t) for t in totals],
-        )
-        .toDF(*parts, "__obkt", "__first", *sums)
+        .agg(F.expr("min(__rn)"), F.expr("max(__rn)"), *[F.expr(t) for t in totals])
+        .toDF(*parts, "__obkt", "__first", "__last", *sums)
     )
     other = per.toDF(*[f"{c}o" for c in per.columns])
     same_part = " AND ".join(["true", *[f"{p} <=> {p}o" for p in parts]])
+    # both sides keep every column of ``per`` (the offsets group by all
+    # of them), so they read one aggregate and share its exchange
+    counts = ["(__lasto - __firsto + 1)", *[f"{t}o" for t in sums]]
     offsets = (
         per.join(F.broadcast(other), F.expr(same_part))
-        .groupBy(*parts, "__obkt", "__first")
+        .groupBy(*per.columns)
         .agg(
-            *[F.expr(f"sum(IF(__obkto < __obkt, {t}o, 0)) AS __off{i}") for i, t in enumerate(sums)],
-            F.expr("sum(__t0o) AS __tot0"),
+            *[F.expr(f"sum(IF(__obkto < __obkt, {t}, 0)) AS __off{i}") for i, t in enumerate(counts)],
+            F.expr(f"sum({counts[0]}) AS __tot0"),
         )
     )
     on = " AND ".join(
@@ -558,22 +563,16 @@ def skew_join_plan_text(spark, left: DataFrame, right: DataFrame, left_key, righ
 # callers from accidentally single-tasking a 100 TB fact through the
 # two oracle-parity exact paths (ntile tiers, row_number surrogate
 # keys). Above the budget, dispatchers route to the distributed
-# variants in this module / binning.py.
+# variants in this module / binning.py. The budget is a fixed row
+# count: the input's size picks the path, no setting does.
 # ---------------------------------------------------------------------
 
-EXACT_SORT_BUDGET_CONF = "spark.books2scrape_etl.maxExactGlobalSortRows"
-EXACT_SORT_BUDGET_DEFAULT = 10_000_000
-
-
-def exact_sort_budget(spark) -> int:
-    """Row budget for unpartitioned-window exact paths, settable per
-    session via ``spark.books2scrape_etl.maxExactGlobalSortRows``."""
-    return int(spark.conf.get(EXACT_SORT_BUDGET_CONF, str(EXACT_SORT_BUDGET_DEFAULT)))
+EXACT_SORT_BUDGET = 10_000_000
 
 
 def exceeds_exact_sort_budget(df: DataFrame, max_rows: int | None = None) -> bool:
-    """True when ``df`` has more than ``max_rows`` rows (conf default
-    when None).
+    """True when ``df`` has more than ``max_rows`` rows
+    (:data:`EXACT_SORT_BUDGET` when None).
 
     The probe is an early-stopping LocalLimit scan: every task stops
     producing after max_rows+1 zero-column rows, so at 100 TB this
@@ -583,6 +582,6 @@ def exceeds_exact_sort_budget(df: DataFrame, max_rows: int | None = None) -> boo
     move data. The shuffled rows are bare 1-literals, at most
     max_rows+1 of them.)"""
     if max_rows is None:
-        max_rows = exact_sort_budget(df.sparkSession)
+        max_rows = EXACT_SORT_BUDGET
     probe = df.select(F.lit(1).alias("__one")).limit(max_rows + 1).count()
     return probe > max_rows

@@ -51,9 +51,8 @@ def build_dim(
     (transformation_pipeline.py:72-93 analogue, determinism fixed).
 
     Guardrail (VERDICT r6 item 6): when the INPUT exceeds the
-    exact-global-sort budget (conf
-    ``spark.books2scrape_etl.maxExactGlobalSortRows``, default 10M —
-    probed with an early-stopping zero-column scan), the id assignment
+    exact-global-sort budget (``operators.scale.EXACT_SORT_BUDGET``,
+    10M rows — probed with an early-stopping zero-column scan), the id assignment
     routes to :func:`operators.scale.dense_ids_scale`, whose range-
     partition + offset construction is bit-identical to the global
     row_number — same ids, no single-task sort. The input count is a

@@ -226,16 +226,14 @@ def q_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     from books2scrape_etl_spark.operators.scale import ntile_scale
 
     ref = pc.agg(F.max("last_day").alias("ref_day"))
-    # stage the collapsed frame and each tiled step: ntile_scale reads
-    # its input in several plan branches (boundary sample, ranked rows,
-    # per-bucket counts), so a chain of lazy calls would nest every
-    # branch of the previous call into each branch of the next
+    # stage the collapsed frame: the first ntile_scale reads it twice
+    # (boundary sample, ranked rows)
     base = stage(
         pc.crossJoin(F.broadcast(ref))
         .withColumn("rec_days", F.col("ref_day") - F.col("last_day"))
     )
-    r = stage(ntile_scale(base, ["rec_days", "o_custkey"], 5, out_col="r_q"))
-    r = stage(ntile_scale(r, ["freq", "o_custkey"], 5, out_col="f_q"))
+    r = ntile_scale(base, ["rec_days", "o_custkey"], 5, out_col="r_q")
+    r = ntile_scale(r, ["freq", "o_custkey"], 5, out_col="f_q")
     r = ntile_scale(r, ["mon_cents", "o_custkey"], 5, out_col="m_q")
     return (
         r.groupBy(

@@ -10,7 +10,8 @@ from pyspark.sql import functions as F
 
 from books2scrape_etl_spark import io
 from books2scrape_etl_spark.functions import util
-from books2scrape_etl_spark.operators.scale import EXACT_SORT_BUDGET_CONF, ntile_scale
+from books2scrape_etl_spark.operators import scale
+from books2scrape_etl_spark.operators.scale import ntile_scale
 from books2scrape_etl_spark.plans.books import (
     DIM_SPECS,
     PRICE_EXCL,
@@ -183,11 +184,11 @@ def test_transform_over_exact_sort_budget(spark, tmp_path, monkeypatch):
         name: golden_dims[name].orderBy(DIM_SPECS[name][1]).collect() for name in same_dims
     }
 
-    with util.conf_guard(spark, {EXACT_SORT_BUDGET_CONF: "0"}):
-        cleaned, dims, fact = transform_books(raw)
-        for name, df in [*dims.items(), ("fact_book_inventory", fact)]:
-            io.write_parquet(df, str(tmp_path / name))
-        summary = run_report(cleaned)
+    monkeypatch.setattr(scale, "EXACT_SORT_BUDGET", 0)
+    cleaned, dims, fact = transform_books(raw)
+    for name, df in [*dims.items(), ("fact_book_inventory", fact)]:
+        io.write_parquet(df, str(tmp_path / name))
+    summary = run_report(cleaned)
 
     assert summary == golden
     for name in same_dims:

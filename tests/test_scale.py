@@ -179,54 +179,47 @@ def _executed_plan(df):
     return df._jdf.queryExecution().executedPlan().toString()
 
 
-def test_exact_sort_budget_switch_bin_quantile(spark):
+def test_exact_sort_budget_switch_bin_quantile(spark, monkeypatch):
     """VERDICT r6 item 6: above the exact-global-sort budget the B2
     dispatcher must route to the sketch-edge variant (no unpartitioned
     ntile window in the plan); below it, to the exact ntile."""
+    from books2scrape_etl_spark.operators import scale
     from books2scrape_etl_spark.operators.binning import bin_quantile
-    from books2scrape_etl_spark.operators.scale import EXACT_SORT_BUDGET_CONF
 
     df = spark.range(100).select(
         F.col("id"), (F.col("id") % 17).cast("double").alias("v")
     )
     labels = ["lo", "mid", "hi"]
-    spark.conf.set(EXACT_SORT_BUDGET_CONF, "10")
-    try:
-        routed = bin_quantile(df, "v", labels, tiebreak=("id",))
-        assert "ntile" not in _executed_plan(routed)
-        assert routed.where(F.col("tier").isNull()).count() == 0
-        spark.conf.set(EXACT_SORT_BUDGET_CONF, "1000")
-        exact = bin_quantile(df, "v", labels, tiebreak=("id",))
-        assert "ntile" in _executed_plan(exact)
-        # each exact tier holds rows/n ± 1 rows (ntile law)
-        sizes = [r["n"] for r in exact.groupBy("tier").agg(F.count(F.lit(1)).alias("n")).collect()]
-        assert max(sizes) - min(sizes) <= 1
-    finally:
-        spark.conf.unset(EXACT_SORT_BUDGET_CONF)
+    monkeypatch.setattr(scale, "EXACT_SORT_BUDGET", 10)
+    routed = bin_quantile(df, "v", labels, tiebreak=("id",))
+    assert "ntile" not in _executed_plan(routed)
+    assert routed.where(F.col("tier").isNull()).count() == 0
+    monkeypatch.setattr(scale, "EXACT_SORT_BUDGET", 1000)
+    exact = bin_quantile(df, "v", labels, tiebreak=("id",))
+    assert "ntile" in _executed_plan(exact)
+    # each exact tier holds rows/n ± 1 rows (ntile law)
+    sizes = [r["n"] for r in exact.groupBy("tier").agg(F.count(F.lit(1)).alias("n")).collect()]
+    assert max(sizes) - min(sizes) <= 1
 
 
-def test_exact_sort_budget_switch_build_dim(spark):
+def test_exact_sort_budget_switch_build_dim(spark, monkeypatch):
     """Above the budget build_dim assigns ids through dense_ids_scale
     (monotone order-buckets + offsets — __bkt machinery in the plan, no
     unpartitioned row_number); ids and schema stay IDENTICAL to the
     exact path, so the switch is invisible to correctness."""
-    from books2scrape_etl_spark.operators.scale import EXACT_SORT_BUDGET_CONF
+    from books2scrape_etl_spark.operators import scale
     from books2scrape_etl_spark.plans.star import build_dim
 
     df = spark.range(200).select((F.col("id") % 23).alias("k"))
-    spark.conf.set(EXACT_SORT_BUDGET_CONF, "10")
-    try:
-        scale = build_dim(df, ["k"], "k_id")
-        # the scale path's per-bucket offsets surface as __bkt
-        # (the localCheckpoint boundary hides the expression itself)
-        assert "__bkt" in _executed_plan(scale)
-        spark.conf.set(EXACT_SORT_BUDGET_CONF, "100000")
-        exact = build_dim(df, ["k"], "k_id")
-        assert "__bkt" not in _executed_plan(exact)
-        assert scale.dtypes == exact.dtypes  # nullability flags may differ
-        assert sorted(map(tuple, scale.collect())) == sorted(map(tuple, exact.collect()))
-    finally:
-        spark.conf.unset(EXACT_SORT_BUDGET_CONF)
+    monkeypatch.setattr(scale, "EXACT_SORT_BUDGET", 10)
+    scaled = build_dim(df, ["k"], "k_id")
+    # the scale path's per-bucket offsets surface as __bkt
+    assert "__bkt" in _executed_plan(scaled)
+    monkeypatch.setattr(scale, "EXACT_SORT_BUDGET", 100000)
+    exact = build_dim(df, ["k"], "k_id")
+    assert "__bkt" not in _executed_plan(exact)
+    assert scaled.dtypes == exact.dtypes  # nullability flags may differ
+    assert sorted(map(tuple, scaled.collect())) == sorted(map(tuple, exact.collect()))
 
 
 def test_percent_rank_scale_equals_exact_window(spark, sf_dir):
@@ -315,30 +308,26 @@ def _cached_entries(spark, marker: str) -> int:
 def test_stage_same_plan_keeps_one_entry(spark):
     """Rebuilding the same plan re-stages it under the same key: the
     previous execution's cache is released, never piled up or reused."""
-    from books2scrape_etl_spark.functions.util import stage
-
     for _ in range(3):
         df = spark.range(200).select((F.col("id") % 13).alias("stage_same_k"))
-        got = stage(df.distinct())
-        assert sorted(r.stage_same_k for r in got.collect()) == list(range(13))
+        got = dense_ids_scale(df, ["stage_same_k"], "id", num_partitions=3)
+        assert sorted(r.id for r in got.collect()) == list(range(1, 14))
     assert _cached_entries(spark, "stage_same_k") == 1
 
 
 def test_stage_concurrent_inputs_keep_their_caches(spark):
-    """Two staged frames of different inputs, built and run from two
+    """Two executions of one operator on different inputs, from two
     threads, must not evict each other's staging caches."""
     from concurrent.futures import ThreadPoolExecutor
 
-    from books2scrape_etl_spark.functions.util import stage
-
     def run(mod):
         df = spark.range(300).select((F.col("id") % mod).alias("stage_thread_k"))
-        got = stage(df.distinct())
-        return sorted(r.stage_thread_k for r in got.collect())
+        got = dense_ids_scale(df, ["stage_thread_k"], "id", num_partitions=3)
+        return sorted(r.id for r in got.collect())
 
     with ThreadPoolExecutor(max_workers=2) as pool:
         got = list(pool.map(run, (11, 19)))
-    assert got == [list(range(11)), list(range(19))]
+    assert got == [list(range(1, 12)), list(range(1, 20))]
     assert _cached_entries(spark, "stage_thread_k") == 2
 
 
@@ -574,9 +563,11 @@ def test_same_basename_inputs_land_separately(spark, sf_dir, tmp_path):
             assert not problems, f"{qname} on {d}: {problems}"
 
 
-def test_chained_ntile_scale(spark):
-    """ntile_scale(ntile_scale(df)): the second call buckets and ranks
-    the first call's lazy plan; both tilings keep ntile's mass law."""
+def test_chained_ntile_scale_keeps_first_ranked_frame(spark):
+    """ntile_scale(ntile_scale(df)): the second call's plan reads the
+    first call's ranked frame, so staging the second must not release
+    the first (a per-operator slot did, and recomputed the window).
+    Both tilings keep ntile's mass law."""
     from books2scrape_etl_spark.operators.scale import ntile_scale
 
     df = spark.range(500).select(
@@ -588,6 +579,7 @@ def test_chained_ntile_scale(spark):
     assert [(r.chain_q1, r["count"]) for r in got] == [(q, 125) for q in range(1, 5)]
     got = r2.groupBy("chain_q2").count().orderBy("chain_q2").collect()
     assert [r["count"] for r in got] == [167, 167, 166]
+    assert _cached_entries(spark, "chain_v") == 2
 
 
 def test_percent_rank_scale_single_row_group(spark):
