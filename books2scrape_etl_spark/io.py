@@ -18,6 +18,8 @@ from __future__ import annotations
 import json
 import logging
 import os
+import string
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
@@ -166,6 +168,44 @@ def read_table(spark: SparkSession, name: str, sf_dir: str = DEFAULT_SF_DIR) -> 
     if name == "events":
         return _read_events_any_vintage(spark, path)
     return _read_parquet(spark, path)
+
+
+def _placeholders(template: str) -> set[str]:
+    return {field for _, field, _, _ in string.Formatter().parse(template) if field}
+
+
+def table_sql(template: str) -> str:
+    """``template`` with each ``{table}`` placeholder filled in by its own
+    name: the text an engine with tables of those names runs (the DuckDB
+    oracle)."""
+    return template.format(**{name: name for name in _placeholders(template)})
+
+
+def sql_over_tables(
+    spark: SparkSession, template: str, sf_dir: str = DEFAULT_SF_DIR, **frames: DataFrame
+) -> DataFrame:
+    """``spark.sql(template)`` with each ``{table}`` placeholder bound to
+    ``frames[table]`` or, when not given, to :func:`read_table`.
+
+    The frames go in as DataFrame arguments: PySpark names each one by a
+    uuid temp view for analysis and drops it before ``spark.sql``
+    returns, so the query neither reads nor replaces a catalog name a
+    caller may hold. Dropping a view also uncaches every cached plan
+    equal to its frame and re-plans every unfilled cache that contains
+    it, under a query that may be reading that cache on another thread
+    (a concurrent prefix-sum query once returned no rows). So each
+    frame carries a literal no other plan holds, which the optimizer
+    prunes again. Write literal braces as ``{{``/``}}``."""
+    from pyspark.sql import functions as F
+
+    names = _placeholders(template) - frames.keys()
+    tables = {name: read_table(spark, name, sf_dir) for name in names}
+    token = f"__bind_{uuid.uuid4().hex}"
+    bound = {
+        name: df.withColumn(token, F.lit(token)).drop(token)
+        for name, df in {**tables, **frames}.items()
+    }
+    return spark.sql(template, **bound)
 
 
 def _read_parquet(spark: SparkSession, path: str, footer=None) -> DataFrame:

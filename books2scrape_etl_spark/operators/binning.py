@@ -3,10 +3,13 @@
 These are the reference's signature derived-dimension ops:
 ``pd.cut`` fixed-edge binning (transformation_pipeline.py:58-60) and
 ``pd.qcut`` quantile binning (:63). Both are re-expressed as Catalyst
-expressions; the quantile op additionally ships a distributed
-approx-edge variant because an exact ntile needs a global sort — the
-one place reference semantics and 100 TB scale genuinely tension
-(SURVEY.md §7.4).
+expressions. An exact ntile needs a global order — the one place
+reference semantics and 100 TB scale genuinely tension (SURVEY.md
+§7.4) — so the quantile op takes the window form below the exact-sort
+budget and :func:`operators.scale.ntile_scale` above it: the same
+tiers either way, with no single-task sort at scale. The sketch-edge
+variant :func:`bin_quantile_approx` stays as an explicit operator for
+callers that accept approximate value edges.
 """
 
 from __future__ import annotations
@@ -63,8 +66,8 @@ def bin_quantile_exact(
     ``ntile`` does, which is what the oracle checks.
 
     Scale note: an unpartitioned window is a single-task global sort —
-    fine at test SF, wrong at 100 TB. Use :func:`bin_quantile_approx`
-    there.
+    fine at test SF, wrong at 100 TB. Use :func:`bin_quantile` there,
+    which takes :func:`operators.scale.ntile_scale` above the budget.
     """
     order = [to_col(col).asc(), *[to_col(t).asc() for t in tiebreak]]
     w = Window.orderBy(*order)
@@ -73,8 +76,12 @@ def bin_quantile_exact(
     # each CASE branch makes Spark evaluate N window expressions per row
     # (visible as _we0.._weN in the plan)
     tiled = df.withColumn("__tile", F.ntile(n).over(w))
-    label_expr = F.element_at(F.array(*[F.lit(x) for x in labels]), F.col("__tile"))
-    return tiled.withColumn(out_col, label_expr).drop("__tile")
+    return tiled.withColumn(out_col, _tile_label(labels, F.col("__tile"))).drop("__tile")
+
+
+def _tile_label(labels: Sequence[str], tile: Column) -> Column:
+    """The 1-based ``tile``'s label."""
+    return F.element_at(F.array(*[F.lit(x) for x in labels]), tile)
 
 
 def bin_quantile_approx(
@@ -113,21 +120,21 @@ def bin_quantile(
     out_col: str = "tier",
     tiebreak: Sequence[str] = (),
 ) -> DataFrame:
-    """B2 dispatcher (VERDICT r6 item 6): exact ntile below the
-    exact-global-sort budget, the Greenwald-Khanna approx variant
-    above it — so no caller can accidentally single-task-sort a
-    100 TB fact by asking for quantile tiers.
+    """B2 — exact ntile tiers at any input size (VERDICT r6 item 6):
+    the window form (:func:`bin_quantile_exact`) below the
+    exact-global-sort budget, :func:`operators.scale.ntile_scale` above
+    it, so no caller can accidentally single-task-sort a 100 TB fact by
+    asking for quantile tiers. Both branches order by
+    ``(col, *tiebreak)`` and split ties across tiers identically, so no
+    tier depends on which side of the budget the input falls.
 
     The budget is ``operators.scale.EXACT_SORT_BUDGET`` rows (10M);
     the row probe early-stops (see
-    :func:`operators.scale.exceeds_exact_sort_budget`). NOTE the two
-    branches differ semantically at ties/edges: ntile splits ties
-    across tiers, the approx CASE bins by value edges (within its
-    default ``relative_error``) — callers needing bit-pinned exact
-    semantics at any size call :func:`bin_quantile_exact` explicitly
-    and own the sort."""
-    from books2scrape_etl_spark.operators.scale import exceeds_exact_sort_budget
+    :func:`operators.scale.exceeds_exact_sort_budget`)."""
+    from books2scrape_etl_spark.operators.scale import exceeds_exact_sort_budget, ntile_scale
 
     if exceeds_exact_sort_budget(df):
-        return bin_quantile_approx(df, col, labels, out_col)
+        tiled = ntile_scale(df, [col, *tiebreak], len(labels), out_col="__tile")
+        tile = F.col("__tile").cast("int")
+        return tiled.withColumn(out_col, _tile_label(labels, tile)).drop("__tile")
     return bin_quantile_exact(df, col, labels, out_col, tiebreak)

@@ -78,7 +78,8 @@ def clean_books(raw: DataFrame) -> DataFrame:
         )  # B1 (:58-60)
     )
     # B2 (:63) — ntile tiers with deterministic UPC tiebreak, through
-    # the budget dispatcher (exact below 10M rows, GK edges above)
+    # the budget dispatcher (the window below 10M rows, ntile_scale
+    # above; the same tiers either way)
     return bin_quantile(
         df, PRICE_EXCL, PRICE_LABELS, out_col="Price_Tier", tiebreak=("UPC",)
     )

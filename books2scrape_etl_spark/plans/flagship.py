@@ -42,7 +42,8 @@ def flagship(spark: SparkSession, sf_dir: str) -> DataFrame:
     # B2 analogue: price tier on the part dim (small side -> the global
     # ntile sort touches only |part| rows; the tiered dim then broadcasts).
     # Dispatcher, not bin_quantile_exact: above the exact-sort budget
-    # this routes to the GK-sketch edges instead of single-tasking.
+    # this routes to the same tiers through ntile_scale instead of
+    # single-tasking.
     part_tiered = bin_quantile(
         part.select("p_partkey", "p_retailprice"),
         "p_retailprice",

@@ -25,10 +25,10 @@ Scale posture (local[32] today, 1000 executors tomorrow):
   iterative lineage (the dedup_cc_star pattern). Hop count is a fixed
   small constant.
 - **rfm_segments**: the fact collapses to one row per customer FIRST
-  (map-side-combining aggregate); the three ntile windows then run on
-  the customer dimension. At 1e9 customers the quintiles would route
-  through percent_rank_scale / bin_quantile_scale (operators/scale.py)
-  — same dispatcher posture as bin_quantile.
+  (map-side-combining aggregate); the three quintiles then run on the
+  customer dimension through ntile_scale (operators/scale.py), the
+  operator bin_quantile takes above its budget — no single-task sort
+  at any customer count.
 - **benford_digits**: one map-side-combining groupBy over 9 digit
   keys; everything downstream is a 9-row frame.
 - **hll_distinct**: approx_count_distinct is Spark's native HLL++ —
@@ -205,9 +205,9 @@ def q_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle still checks the exact window form) but built as
     range-partition + local rank + broadcast offsets, so no global
     window survives in the plan and no lint exemption is needed. No
-    dispatcher either: unlike bin_quantile's exact/approx pair the
-    scale form IS exact, it just never sorts the collapsed customer
-    frame in one task — safe at 1.5 B customers."""
+    dispatcher either: the scale form IS exact (bin_quantile routes
+    to it above its budget), it just never sorts the collapsed
+    customer frame in one task — safe at 1.5 B customers."""
     o = read_table(spark, "orders", sf_dir)
     if dict(o.dtypes).get("o_orderdate") == "timestamp_ntz":
         # micros-NTZ vintage: reinterpret wall clock as UTC (the

@@ -13,7 +13,7 @@ from pyspark.sql import functions as F
 
 from books2scrape_etl_spark.functions.agg import oracle_sum_exact, sum_exact
 from books2scrape_etl_spark.functions.util import land_once
-from books2scrape_etl_spark.io import read_table
+from books2scrape_etl_spark.io import read_table, sql_over_tables, table_sql
 from books2scrape_etl_spark.registry import register
 
 
@@ -26,36 +26,24 @@ def _utc(spark: SparkSession) -> None:
 # =====================================================================
 
 
-@register(
-    "sql_api",
-    f"""
+_SQL_API_SQL = f"""
     SELECT n.n_name, COUNT(*) AS n_orders,
            {oracle_sum_exact('o.o_totalprice', 2)} AS sum_price
-    FROM orders o
-    JOIN customer c ON o.o_custkey = c.c_custkey
-    JOIN nation n ON c.c_nationkey = n.n_nationkey
+    FROM {{orders}} o
+    JOIN {{customer}} c ON o.o_custkey = c.c_custkey
+    JOIN {{nation}} n ON c.c_nationkey = n.n_nationkey
     WHERE o.o_orderstatus = 'F'
     GROUP BY n.n_name
-    """,
-)
+    """
+
+
+@register("sql_api", table_sql(_SQL_API_SQL))
 def q_sql_api(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The SQL entry point: temp views + spark.sql — same analyzer/
-    optimizer path as the DataFrame API, exposed as the engine's second
-    public surface."""
-    read_table(spark, "orders", sf_dir).createOrReplaceTempView("v_orders")
-    read_table(spark, "customer", sf_dir).createOrReplaceTempView("v_customer")
-    read_table(spark, "nation", sf_dir).createOrReplaceTempView("v_nation")
-    return spark.sql(
-        """
-        SELECT n.n_name, COUNT(*) AS n_orders,
-               CAST(SUM(CAST(o.o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_price
-        FROM v_orders o
-        JOIN v_customer c ON o.o_custkey = c.c_custkey
-        JOIN v_nation n ON c.c_nationkey = n.n_nationkey
-        WHERE o.o_orderstatus = 'F'
-        GROUP BY n.n_name
-        """
-    )
+    """The SQL entry point: ``spark.sql`` over the tables bound as
+    DataFrame arguments — same analyzer/optimizer path as the DataFrame
+    API, exposed as the engine's second public surface. The oracle runs
+    the same text with the table names filled in."""
+    return sql_over_tables(spark, _SQL_API_SQL, sf_dir)
 
 
 # =====================================================================
@@ -116,67 +104,46 @@ def q_unpivot(spark: SparkSession, sf_dir: str) -> DataFrame:
 # =====================================================================
 
 
-@register(
-    "scalar_subquery",
+_SCALAR_SUBQUERY_SQL = """
+    SELECT o_orderkey, o_totalprice FROM {orders}
+    WHERE o_totalprice > 1.5 * (SELECT avg(o_totalprice) FROM {orders})
     """
-    SELECT o_orderkey, o_totalprice FROM orders
-    WHERE o_totalprice > 1.5 * (SELECT avg(o_totalprice) FROM orders)
-    """,
-)
+
+
+@register("scalar_subquery", table_sql(_SCALAR_SUBQUERY_SQL))
 def q_scalar_subquery(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Scalar subquery in a filter (Catalyst rewrites to a one-row
     broadcast join). avg threshold comparison only — no float crosses
     the output boundary. Threshold 1.5x keeps the result non-empty on
     the driver testdata (2x matched zero orders — a 0-row hash match
     proves nothing)."""
-    read_table(spark, "orders", sf_dir).createOrReplaceTempView("v_orders")
-    return spark.sql(
-        """
-        SELECT o_orderkey, o_totalprice FROM v_orders
-        WHERE o_totalprice > 1.5 * (SELECT avg(o_totalprice) FROM v_orders)
-        """
-    )
+    return sql_over_tables(spark, _SCALAR_SUBQUERY_SQL, sf_dir)
 
 
-@register(
-    "correlated_subquery",
-    """
-    SELECT c_custkey, c_name FROM customer c
-    WHERE (SELECT COUNT(*) FROM orders o
+_CORRELATED_SUBQUERY_SQL = """
+    SELECT c_custkey, c_name FROM {customer} c
+    WHERE (SELECT COUNT(*) FROM {orders} o
            WHERE o.o_custkey = c.c_custkey AND o.o_totalprice > 150000) >= 2
-    """,
-)
+    """
+
+
+@register("correlated_subquery", table_sql(_CORRELATED_SUBQUERY_SQL))
 def q_correlated_subquery(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Correlated scalar subquery — Catalyst decorrelates to an
     aggregate + join (SURVEY §4.2 'subquery decorrelation')."""
-    read_table(spark, "customer", sf_dir).createOrReplaceTempView("v_customer")
-    read_table(spark, "orders", sf_dir).createOrReplaceTempView("v_orders")
-    return spark.sql(
-        """
-        SELECT c_custkey, c_name FROM v_customer c
-        WHERE (SELECT COUNT(*) FROM v_orders o
-               WHERE o.o_custkey = c.c_custkey AND o.o_totalprice > 150000) >= 2
-        """
-    )
+    return sql_over_tables(spark, _CORRELATED_SUBQUERY_SQL, sf_dir)
 
 
-@register(
-    "in_subquery",
+_IN_SUBQUERY_SQL = """
+    SELECT s_suppkey, s_name FROM {supplier}
+    WHERE s_nationkey IN (SELECT n_nationkey FROM {nation} WHERE n_regionkey = 0)
     """
-    SELECT s_suppkey, s_name FROM supplier
-    WHERE s_nationkey IN (SELECT n_nationkey FROM nation WHERE n_regionkey = 0)
-    """,
-)
+
+
+@register("in_subquery", table_sql(_IN_SUBQUERY_SQL))
 def q_in_subquery(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IN subquery -> left-semi join after rewrite."""
-    read_table(spark, "supplier", sf_dir).createOrReplaceTempView("v_supplier")
-    read_table(spark, "nation", sf_dir).createOrReplaceTempView("v_nation")
-    return spark.sql(
-        """
-        SELECT s_suppkey, s_name FROM v_supplier
-        WHERE s_nationkey IN (SELECT n_nationkey FROM v_nation WHERE n_regionkey = 0)
-        """
-    )
+    return sql_over_tables(spark, _IN_SUBQUERY_SQL, sf_dir)
 
 
 # =====================================================================
@@ -242,26 +209,18 @@ def q_window_lag_lead(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "grouping_sets",
-    """
+_GROUPING_SETS_SQL = """
     SELECT l_returnflag, l_linestatus, COUNT(*) AS n,
            CAST(grouping(l_returnflag) AS INTEGER) AS g_rf
-    FROM lineitem
+    FROM {lineitem}
     GROUP BY GROUPING SETS ((l_returnflag, l_linestatus), (l_returnflag), ())
-    """,
-)
+    """
+
+
+@register("grouping_sets", table_sql(_GROUPING_SETS_SQL))
 def q_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A7c — explicit GROUPING SETS with grouping() marker."""
-    read_table(spark, "lineitem", sf_dir).createOrReplaceTempView("v_lineitem")
-    return spark.sql(
-        """
-        SELECT l_returnflag, l_linestatus, COUNT(*) AS n,
-               CAST(grouping(l_returnflag) AS INT) AS g_rf
-        FROM v_lineitem
-        GROUP BY GROUPING SETS ((l_returnflag, l_linestatus), (l_returnflag), ())
-        """
-    )
+    return sql_over_tables(spark, _GROUPING_SETS_SQL, sf_dir)
 
 
 @register(
@@ -965,11 +924,14 @@ def q_udtf_sentences(spark: SparkSession, sf_dir: str) -> DataFrame:
             for pos, s in enumerate(text.split(". ")):
                 yield doc_id, pos, len(s.split())
 
-    spark.udtf.register("sentence_stats", SentenceStats)
     docs = read_table(spark, "documents", sf_dir)
-    docs.createOrReplaceTempView("v_docs")
-    out = spark.sql(
-        "SELECT s.* FROM v_docs, LATERAL sentence_stats(doc_id, text) s"
+    out = (
+        docs.select("doc_id", "text")
+        .alias("d")
+        .lateralJoin(
+            SentenceStats(F.col("d.doc_id").outer(), F.col("d.text").outer()).alias("s")
+        )
+        .select("s.*")
     )
     # Relational twin: Python str.split() == trim + split on \s+ runs,
     # with the empty-sentence edge ('' -> 0 words, not 1).

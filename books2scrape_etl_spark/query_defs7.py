@@ -25,7 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from books2scrape_etl_spark.functions.agg import oracle_sum_exact, sum_exact
-from books2scrape_etl_spark.io import read_table
+from books2scrape_etl_spark.io import read_table, sql_over_tables, table_sql
 from books2scrape_etl_spark.registry import register
 from books2scrape_etl_spark.suites import register_suite, width
 from books2scrape_etl_spark.query_defs import _utc
@@ -146,25 +146,24 @@ _Q15_REV_SQL = """
       GROUP BY l_suppkey
 """
 
-
-@register(
-    "tpch_q15",
-    f"""
-    WITH rev AS ({_Q15_REV_SQL})
+_Q15_SQL = """
     SELECT s.s_suppkey, s.s_name, r.total_revenue
-    FROM supplier s JOIN rev r ON s.s_suppkey = r.supplier_no
-    WHERE r.total_revenue = (SELECT MAX(total_revenue) FROM rev)
+    FROM {supplier} s JOIN {rev} r ON s.s_suppkey = r.supplier_no
+    WHERE r.total_revenue = (SELECT MAX(total_revenue) FROM {rev})
     ORDER BY s.s_suppkey
-    """,
-)
+    """
+
+
+@register("tpch_q15", f"\n    WITH rev AS ({_Q15_REV_SQL}){table_sql(_Q15_SQL)}")
 def q_tpch_q15(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q15 shape (top supplier): the quarterly revenue aggregate
     is consumed TWICE — as the join input and inside the scalar MAX
     subquery. Revenue is rounded exact-decimal, so the cross-engine
     equality in `total_revenue = MAX(...)` compares identical doubles
-    (never compare raw float sums for equality). Spark expresses both
-    consumers over one temp view; Catalyst turns the scalar subquery
-    into a one-row broadcast."""
+    (never compare raw float sums for equality). Spark binds the
+    aggregate frame to both consumers of one SQL text, which the oracle
+    runs after the ``rev`` CTE; Catalyst turns the scalar subquery into
+    a one-row broadcast."""
     _utc(spark)
     li = read_table(spark, "lineitem", sf_dir)
     rev = (
@@ -179,33 +178,23 @@ def q_tpch_q15(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("total_revenue")
         )
     )
-    rev.createOrReplaceTempView("v_q15_rev")
-    s = read_table(spark, "supplier", sf_dir)
-    s.createOrReplaceTempView("v_q15_supplier")
-    return spark.sql(
-        """
-        SELECT s.s_suppkey, s.s_name, r.total_revenue
-        FROM v_q15_supplier s JOIN v_q15_rev r ON s.s_suppkey = r.supplier_no
-        WHERE r.total_revenue = (SELECT MAX(total_revenue) FROM v_q15_rev)
-        ORDER BY s.s_suppkey
-        """
-    )
+    return sql_over_tables(spark, _Q15_SQL, sf_dir, rev=rev)
 
 
-@register(
-    "tpch_q17",
-    """
+_Q17_SQL = """
     SELECT round(CAST(SUM(CAST(l.l_extendedprice AS DECIMAL(18,2)))
                  AS DOUBLE) / 7.0, 4) AS avg_yearly,
            CAST(COUNT(*) AS BIGINT) AS n_lines
-    FROM lineitem l JOIN part p ON p.p_partkey = l.l_partkey
+    FROM {lineitem} l JOIN {part} p ON p.p_partkey = l.l_partkey
     WHERE p.p_brand = 'Brand#3'
       AND l.l_quantity < 0.2 * (
             SELECT CAST(SUM(CAST(l2.l_quantity AS DECIMAL(18,2))) AS DOUBLE)
                    / COUNT(*)
-            FROM lineitem l2 WHERE l2.l_partkey = p.p_partkey)
-    """,
-)
+            FROM {lineitem} l2 WHERE l2.l_partkey = p.p_partkey)
+    """
+
+
+@register("tpch_q17", table_sql(_Q17_SQL))
 def q_tpch_q17(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q17 shape (small-quantity-order revenue): a correlated
     scalar AVG subquery per part — the decorrelation benchmark;
@@ -213,21 +202,7 @@ def q_tpch_q17(spark: SparkSession, sf_dir: str) -> DataFrame:
     threshold average is exact-decimal-sum / count on BOTH engines
     (raw AVG over doubles is summation-order-dependent and could flip
     a boundary row), so the 0.2x comparison is bit-identical."""
-    read_table(spark, "lineitem", sf_dir).createOrReplaceTempView("v_q17_lineitem")
-    read_table(spark, "part", sf_dir).createOrReplaceTempView("v_q17_part")
-    return spark.sql(
-        """
-        SELECT round(CAST(SUM(CAST(l.l_extendedprice AS DECIMAL(18,2)))
-                     AS DOUBLE) / 7.0, 4) AS avg_yearly,
-               CAST(COUNT(*) AS BIGINT) AS n_lines
-        FROM v_q17_lineitem l JOIN v_q17_part p ON p.p_partkey = l.l_partkey
-        WHERE p.p_brand = 'Brand#3'
-          AND l.l_quantity < 0.2 * (
-                SELECT CAST(SUM(CAST(l2.l_quantity AS DECIMAL(18,2))) AS DOUBLE)
-                       / COUNT(*)
-                FROM v_q17_lineitem l2 WHERE l2.l_partkey = p.p_partkey)
-        """
-    )
+    return sql_over_tables(spark, _Q17_SQL, sf_dir)
 
 
 @register(

@@ -30,7 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from books2scrape_etl_spark.functions.util import land_once
-from books2scrape_etl_spark.io import read_table
+from books2scrape_etl_spark.io import read_table, sql_over_tables, table_sql
 from books2scrape_etl_spark.operators import freq, quantize
 from books2scrape_etl_spark.registry import register
 from books2scrape_etl_spark.query_defs import _DOT_SQL, _NORM_SQL, _utc
@@ -539,8 +539,9 @@ def q_sketch_kmv_setops(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # Shared Spark-SQL / DuckDB dialect (the query_defs8 contract): ONE SQL
-# string, run verbatim on both engines. Recursive CTEs landed in Spark
-# 4.0 — the spine generates the full calendar month and the left join
+# template, its {events} placeholder bound to the events frame on Spark
+# and filled in by the table name for the oracle. Recursive CTEs landed
+# in Spark 4.0 — the spine generates the full calendar month and the left join
 # densifies days with no events to an explicit zero (gap filling, the
 # classic recursive-CTE analytics shape).
 _RECURSIVE_CTE_SQL = """
@@ -552,14 +553,14 @@ WITH RECURSIVE days(d) AS (
 daily AS (
   SELECT CAST(date_trunc('day', ts) AS DATE) AS d,
          CAST(COUNT(*) AS BIGINT) AS n
-  FROM events GROUP BY 1
+  FROM {events} GROUP BY 1
 )
 SELECT CAST(days.d AS STRING) AS day_str, COALESCE(daily.n, 0) AS n_events
 FROM days LEFT JOIN daily ON daily.d = days.d
 """
 
 
-@register("recursive_cte", _RECURSIVE_CTE_SQL)
+@register("recursive_cte", table_sql(_RECURSIVE_CTE_SQL))
 def q_recursive_cte(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SQL surface — WITH RECURSIVE (Spark 4 UnionLoop execution):
     calendar-spine densification of daily event counts, the identical
@@ -567,8 +568,7 @@ def q_recursive_cte(spark: SparkSession, sf_dir: str) -> DataFrame:
     length (31), not the data size — the per-iteration work is a
     one-row append, and the big side stays one aggregated join."""
     _utc(spark)
-    read_table(spark, "events", sf_dir).createOrReplaceTempView("events")
-    return spark.sql(_RECURSIVE_CTE_SQL)
+    return sql_over_tables(spark, _RECURSIVE_CTE_SQL, sf_dir)
 
 
 _JOIN_BLOOM_SQL = """

@@ -170,19 +170,19 @@ def test_transform_staging_footprint(spark, tmp_path):
 
 
 def test_transform_over_exact_sort_budget(spark, tmp_path, monkeypatch):
-    """Above the exact-sort budget the tiers take approximate value
-    edges and the dims take the bucketed surrogate keys, both over the
-    reference's dotted column names. The whole run succeeds; the
-    report, which reads no price tier, equals the under-budget
-    (golden) one, and so do the dims whose keys are not price tiers."""
+    """Above the exact-sort budget the tiers come from ntile_scale and
+    the dims take the bucketed surrogate keys, both over the
+    reference's dotted column names. The whole run succeeds, and the
+    report, all four dims and the fact equal the under-budget (golden)
+    run's: no value depends on the input's size."""
     monkeypatch.delenv("SMTP_HOST", raising=False)
     raw = books_raw_df(spark)
-    golden_cleaned, golden_dims, _ = transform_books(raw)
+    golden_cleaned, golden_dims, golden_fact = transform_books(raw)
     golden = run_report(golden_cleaned)
-    same_dims = ("dim_book", "dim_category", "dim_stock_tier")
     golden_rows = {
-        name: golden_dims[name].orderBy(DIM_SPECS[name][1]).collect() for name in same_dims
+        name: golden_dims[name].orderBy(DIM_SPECS[name][1]).collect() for name in DIM_SPECS
     }
+    golden_fact_rows = Counter(golden_fact.collect())
 
     monkeypatch.setattr(scale, "EXACT_SORT_BUDGET", 0)
     cleaned, dims, fact = transform_books(raw)
@@ -191,11 +191,12 @@ def test_transform_over_exact_sort_budget(spark, tmp_path, monkeypatch):
     summary = run_report(cleaned)
 
     assert summary == golden
-    for name in same_dims:
+    for name in DIM_SPECS:
         landed = spark.read.parquet(str(tmp_path / name))
         assert landed.orderBy(DIM_SPECS[name][1]).collect() == golden_rows[name], name
-    fact_rows = spark.read.parquet(str(tmp_path / "fact_book_inventory")).count()
-    assert fact_rows == len(BOOKS_RAW_ROWS)
+    fact_rows = Counter(spark.read.parquet(str(tmp_path / "fact_book_inventory")).collect())
+    assert sum(fact_rows.values()) == len(BOOKS_RAW_ROWS)
+    assert fact_rows == golden_fact_rows
 
 
 def test_ntile_scale_dotted_column(cleaned):

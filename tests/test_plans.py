@@ -168,24 +168,77 @@ def registry_plans(spark, sf_dir):
     scale-op collect jobs overlap instead of serializing); the conf-
     guarded / suite / stream constructions stay serial so no thread
     mutates a conf while another thread plans (session confs are
-    global), keeping every dumped plan deterministic."""
+    global), keeping every dumped plan deterministic.
+
+    Each build's ``stage()`` keys are recorded in ``_STAGED_BY_QNAME``,
+    attributed to the qname the inserting thread is building."""
+    import threading
+    from collections import OrderedDict
     from concurrent.futures import ThreadPoolExecutor
 
+    from books2scrape_etl_spark.functions import util
     from tests.test_queries_oracle import _is_serial
 
-    names = [q for q in QUERIES if not q.endswith("_rt")]
-    plans = {}
-    for qname in names:
-        if _is_serial(qname):
-            plans[qname] = explain_str(QUERIES[qname](spark, sf_dir), "simple")
-    pooled = [q for q in names if q not in plans]
+    building = threading.local()
+
+    class Recording(OrderedDict):
+        def __setitem__(self, key, value):
+            if hasattr(building, "qname"):
+                _STAGED_BY_QNAME.setdefault(building.qname, set()).add(key)
+            super().__setitem__(key, value)
 
     def one(qname):
+        building.qname = qname
         return qname, explain_str(QUERIES[qname](spark, sf_dir), "simple")
 
-    with ThreadPoolExecutor(max_workers=4) as pool:
-        plans.update(dict(pool.map(one, pooled)))
+    names = [q for q in QUERIES if not q.endswith("_rt")]
+    _STAGED_BY_QNAME.clear()
+    orig = util._STAGED
+    util._STAGED = Recording(orig)
+    try:
+        plans = dict(one(q) for q in names if _is_serial(q))
+        pooled = [q for q in names if q not in plans]
+        with ThreadPoolExecutor(max_workers=4) as pool:
+            plans.update(dict(pool.map(one, pooled)))
+    finally:
+        with util._STAGE_LOCK:
+            orig.clear()
+            orig.update(util._STAGED)
+            util._STAGED = orig
+        if hasattr(building, "qname"):
+            del building.qname
     return {q: plans[q] for q in names}
+
+
+# distinct stage() keys each qname's build added, filled by registry_plans
+_STAGED_BY_QNAME: dict[str, set] = {}
+
+# qnames whose build stages more than _STAGE_CAP frames, pinned at the
+# count a serial sf0.001 registry build measured, so any growth fails
+_OVER_STAGE_CAP = {
+    # its four detector sections stage ten frames between them, ordered
+    # so that no frame is released before a job reads it
+    "dedup_invariants": 10,
+    # the star algorithm's staged rounds plus propagation's edges and labels
+    "dedup_cc_star": 6,
+    # the staged candidate graph plus both CC algorithms' frames
+    "cc_exact": 5,
+    # rfm_segments' base and three ntile_scale ranked frames, plus graph_walks'
+    "wave15_16_suite": 5,
+}
+
+
+def test_registry_builds_stage_within_cap(registry_plans):
+    """No qname's build stages more than ``_STAGE_CAP`` frames, except
+    the pinned ones at their measured counts: past the cap ``stage()``
+    releases frames no job has read yet, and the forced result
+    recomputes them uncached."""
+    from books2scrape_etl_spark.functions import util
+
+    counts = {q: len(keys) for q, keys in _STAGED_BY_QNAME.items()}
+    assert counts, "the registry build staged nothing"
+    over = {q: n for q, n in counts.items() if n > util._STAGE_CAP}
+    assert over == _OVER_STAGE_CAP, over
 
 
 def test_no_unbounded_global_window_any_plan(registry_plans):

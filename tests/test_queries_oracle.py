@@ -23,21 +23,21 @@ from books2scrape_etl_spark.queries import ORACLE_SQL, QUERIES
 from tests.oracle import compare, run_oracle
 
 # Session-global state mutators (conf guards, checkpoints, catalog
-# writes, temp views; query_defs8's _sql_query registers the testdata
-# tables as views) — detected from source so a future conf-guarded
-# query lands in the serial tier automatically. Suites re-run other
-# callables (possibly conf-guarded ones), and *_rt queries execute real
-# streams. test_oracle_match_pooled asserts that the pooled rest leaves
-# the session's confs and catalog as it found them.
+# writes) — detected from source so a future conf-guarded query lands
+# in the serial tier automatically. SQL qnames bind their tables as
+# DataFrame arguments (io.sql_over_tables), which leaves no catalog name
+# behind, so they pool. Suites re-run other callables (possibly
+# conf-guarded ones), and *_rt queries execute real streams.
+# test_oracle_match_pooled asserts that the pooled rest leaves the
+# session's confs and catalog as it found them.
 _STATEFUL = re.compile(
     r"conf\.set|conf_guard|bloom_pruned_join|skew_join|bucketed"
-    r"|checkpoint|write_bucketed|ANALYZE TABLE|saveAsTable|TempView|_sql_query"
+    r"|checkpoint|write_bucketed|ANALYZE TABLE|saveAsTable"
 )
 
 
 def _is_serial(qname: str) -> bool:
-    # "_suite" anywhere: tpch_suite2/3 re-run the temp-view tpch singles
-    if qname.endswith("_rt") or "_suite" in qname:
+    if qname.endswith("_rt") or qname.endswith("_suite"):
         return True
     try:
         src = inspect.getsource(QUERIES[qname])
@@ -133,6 +133,53 @@ def test_staged_frames_recompute_to_oracle(spark, sf_dir, monkeypatch):
         if problems:
             bad[qname] = problems
     assert not bad, bad
+
+
+def test_sql_qnames_keep_caller_views(spark, sf_dir):
+    """A caller's own views named like the testdata tables survive a
+    SQL qname's build, and the qname reads the testdata, not the
+    caller's view: the tables go in as DataFrame arguments, not as
+    same-named temp views."""
+    views = ("lineitem", "orders", "events")
+    for name in views:
+        spark.range(1).createOrReplaceTempView(name)
+    try:
+        bad = {}
+        for qname in ("tpch_q2", "sql_api", "recursive_cte"):
+            problems = compare(QUERIES[qname](spark, sf_dir), run_oracle(ORACLE_SQL[qname], sf_dir))
+            if problems:
+                bad[qname] = problems
+        assert not bad, bad
+        assert {name: spark.table(name).count() for name in views} == dict.fromkeys(views, 1)
+    finally:
+        for name in views:
+            spark.catalog.dropTempView(name)
+
+
+def test_sql_over_tables_leaves_caches_alone(spark, sf_dir):
+    """Dropping a bound frame's view uncaches every cached plan equal
+    to the frame and re-plans every unfilled cache that contains it,
+    under whatever query another thread runs over that cache; a SQL
+    qname must do neither, or it could not run pooled."""
+    from books2scrape_etl_spark.io import read_table, sql_over_tables
+
+    cache_manager = spark._jsparkSession.sharedState().cacheManager()
+    identity = spark._jvm.java.lang.System.identityHashCode
+
+    def cache_entry(df):
+        entry = cache_manager.lookupCachedData(df._jdf)
+        return identity(entry.get().cachedRepresentation()) if entry.isDefined() else None
+
+    scan = read_table(spark, "orders", sf_dir).persist()
+    unfilled = read_table(spark, "orders", sf_dir).groupBy("o_custkey").count().persist()
+    try:
+        before = (cache_entry(scan), cache_entry(unfilled))
+        sql_over_tables(spark, "SELECT COUNT(*) AS n FROM {orders}", sf_dir).collect()
+        assert (cache_entry(scan), cache_entry(unfilled)) == before
+        assert None not in before
+    finally:
+        unfilled.unpersist()
+        scan.unpersist()
 
 
 def test_serial_pooled_partition_covers_registry():

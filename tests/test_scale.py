@@ -181,8 +181,9 @@ def _executed_plan(df):
 
 def test_exact_sort_budget_switch_bin_quantile(spark, monkeypatch):
     """VERDICT r6 item 6: above the exact-global-sort budget the B2
-    dispatcher must route to the sketch-edge variant (no unpartitioned
-    ntile window in the plan); below it, to the exact ntile."""
+    dispatcher must route to ntile_scale (no unpartitioned ntile window
+    in the plan); below it, to the exact ntile. Both give the same
+    tiers."""
     from books2scrape_etl_spark.operators import scale
     from books2scrape_etl_spark.operators.binning import bin_quantile
 
@@ -200,6 +201,7 @@ def test_exact_sort_budget_switch_bin_quantile(spark, monkeypatch):
     # each exact tier holds rows/n ± 1 rows (ntile law)
     sizes = [r["n"] for r in exact.groupBy("tier").agg(F.count(F.lit(1)).alias("n")).collect()]
     assert max(sizes) - min(sizes) <= 1
+    assert sorted(map(tuple, routed.collect())) == sorted(map(tuple, exact.collect()))
 
 
 def test_exact_sort_budget_switch_build_dim(spark, monkeypatch):

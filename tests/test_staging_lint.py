@@ -10,7 +10,13 @@ read are deleted). Static scans (no Spark) fail on any other
 ``import atexit``, ``tempfile.gettempdir(``, ``mkdtemp(`` or
 scratch-root literal under the package or in the driver contract
 module, on any ``mkdtemp(`` / ``gettempdir(`` in a test module, and on
-any underscore-prefixed package name that a script imports."""
+any underscore-prefixed package name that a script imports. Neither
+the package nor the driver contract module names anything in the
+session catalog: a scan fails on any ``createOrReplaceTempView(``,
+``createTempView(``, ``createGlobalTempView(``,
+``createOrReplaceGlobalTempView(``, ``registerTempTable(`` or
+``udtf.register(`` call there (SQL binds its inputs as DataFrame
+arguments, ``io.sql_over_tables``)."""
 
 import ast
 import pathlib
@@ -106,6 +112,36 @@ def test_local_checkpoint_only_inside_guard_blocks():
         "localCheckpoint outside a conf_guard / sized_shuffle_partitions / "
         "TemporaryDirectory block; use functions.util.stage or a lazy frame: "
         + ", ".join(hits)
+    )
+
+
+_CATALOG_NAMING = (
+    "createOrReplaceTempView",
+    "createTempView",
+    "createGlobalTempView",
+    "createOrReplaceGlobalTempView",
+    "registerTempTable",
+)
+
+
+def _names_catalog_entry(node):
+    if not (isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute)):
+        return False
+    f = node.func
+    return f.attr in _CATALOG_NAMING or (
+        f.attr == "register" and isinstance(f.value, ast.Attribute) and f.value.attr == "udtf"
+    )
+
+
+def test_no_session_catalog_names():
+    # a named view or function replaces whatever a caller registered
+    # under that name and outlives the query that made it
+    hits = _nodes(
+        [*sorted(PKG.rglob("*.py")), REPO / "__spark_entry__.py"], _names_catalog_entry
+    )
+    assert not hits, (
+        "bind frames as spark.sql DataFrame arguments (io.sql_over_tables) and call "
+        "UDTFs through DataFrame.lateralJoin: " + ", ".join(hits)
     )
 
 
