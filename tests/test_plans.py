@@ -219,11 +219,13 @@ _OVER_STAGE_CAP = {
     # its four detector sections stage ten frames between them, ordered
     # so that no frame is released before a job reads it
     "dedup_invariants": 10,
-    # the star algorithm's staged rounds plus propagation's edges and labels
+    # the verified edge list with its MinHash shingles and bands, then
+    # propagation's edges and labels and the star algorithm's edges
     "dedup_cc_star": 6,
-    # the staged candidate graph plus both CC algorithms' frames
+    # the candidate graph and its winnow fingerprints, then both CC
+    # algorithms' frames
     "cc_exact": 5,
-    # rfm_segments' base and three ntile_scale ranked frames, plus graph_walks'
+    # rfm_segments alone stages 4: its base and three ntile_scale ranked frames
     "wave15_16_suite": 5,
 }
 

@@ -9,8 +9,10 @@ because the caller calls them sequentially; pooled jobs back-fill the
 idle executors a 2-second query leaves behind). Queries that mutate
 session state (conf guards around bloom/skew/CBO probes), suites that
 re-run other registered callables, and the real-stream qnames stay
-SERIAL and per-test granular — session confs are global, not
-thread-local, so pooling those could flip another thread's plan.
+SERIAL — session confs are global, not thread-local, so pooling those
+could flip another thread's plan. Every qname keeps its own
+``test_oracle_match`` verdict; a pooled one reports what its shard
+found.
 """
 
 import inspect
@@ -52,14 +54,6 @@ _N_SHARDS = 16
 _POOL_WORKERS = 4
 
 
-@pytest.mark.parametrize("qname", SERIAL)
-def test_oracle_match(spark, sf_dir, qname):
-    sdf = QUERIES[qname](spark, sf_dir)
-    odf = run_oracle(ORACLE_SQL[qname], sf_dir)
-    problems = compare(sdf, odf)
-    assert not problems, f"{qname}: {problems}"
-
-
 def _session_state(spark):
     """Every session conf set (``SET``) and every catalog table: what a
     pooled qname must leave as it found it, since its threads share
@@ -69,19 +63,23 @@ def _session_state(spark):
     return confs, tables
 
 
+def _problems(spark, sf_dir, qname):
+    return compare(QUERIES[qname](spark, sf_dir), run_oracle(ORACLE_SQL[qname], sf_dir))
+
+
+# each pooled shard records its qnames' problems here, so test_oracle_match
+# gives every qname its own verdict without running it a second time
+_POOLED_PROBLEMS: dict[str, list[str]] = {}
+
+
 @pytest.mark.parametrize("shard", range(_N_SHARDS))
 def test_oracle_match_pooled(spark, sf_dir, shard):
     names = POOLED[shard::_N_SHARDS]
     confs0, tables0 = _session_state(spark)
-
-    def one(qname):
-        sdf = QUERIES[qname](spark, sf_dir)
-        odf = run_oracle(ORACLE_SQL[qname], sf_dir)
-        return qname, compare(sdf, odf)
-
     with ThreadPoolExecutor(max_workers=_POOL_WORKERS) as pool:
-        results = list(pool.map(one, names))
-    bad = {q: p for q, p in results if p}
+        problems = dict(zip(names, pool.map(lambda q: _problems(spark, sf_dir, q), names)))
+    _POOLED_PROBLEMS.update(problems)
+    bad = {q: p for q, p in problems.items() if p}
     assert not bad, bad
     confs1, tables1 = _session_state(spark)
     changed = sorted(
@@ -89,6 +87,18 @@ def test_oracle_match_pooled(spark, sf_dir, shard):
     )
     assert not changed, f"{names} changed session confs {changed}"
     assert tables1 == tables0, f"{names} changed the catalog: {tables0} -> {tables1}"
+
+
+@pytest.mark.parametrize("qname", sorted(ORACLE_SQL))
+def test_oracle_match(spark, sf_dir, qname):
+    """One verdict per qname. A SERIAL qname runs here; a POOLED one
+    reports what its shard found, and runs here only when no shard ran
+    it (selected alone with ``-k``)."""
+    if qname in _POOLED_PROBLEMS:
+        problems = _POOLED_PROBLEMS.pop(qname)
+    else:
+        problems = _problems(spark, sf_dir, qname)
+    assert not problems, f"{qname}: {problems}"
 
 
 # Oracle-paired qnames whose build reaches a stage() call that replaced
@@ -129,7 +139,7 @@ def test_staged_frames_recompute_to_oracle(spark, sf_dir, monkeypatch):
     monkeypatch.setattr(util, "_STAGE_CAP", 1)
     bad = {}
     for qname in STAGED:
-        problems = compare(QUERIES[qname](spark, sf_dir), run_oracle(ORACLE_SQL[qname], sf_dir))
+        problems = _problems(spark, sf_dir, qname)
         if problems:
             bad[qname] = problems
     assert not bad, bad
@@ -146,7 +156,7 @@ def test_sql_qnames_keep_caller_views(spark, sf_dir):
     try:
         bad = {}
         for qname in ("tpch_q2", "sql_api", "recursive_cte"):
-            problems = compare(QUERIES[qname](spark, sf_dir), run_oracle(ORACLE_SQL[qname], sf_dir))
+            problems = _problems(spark, sf_dir, qname)
             if problems:
                 bad[qname] = problems
         assert not bad, bad
